@@ -51,6 +51,11 @@ POSTINGS_SCHEMA = ("shard_id int, term string, first_doc long, last_doc long, "
                    "doc_bytes binary, tf_bytes binary, len_bytes binary, "
                    "pos_bytes binary")
 POSTINGS_COLS = [f.split()[0] for f in POSTINGS_SCHEMA.split(", ")]
+# docmap_cols output. Engine reads pass these schemas explicitly: schema
+# inference costs one footer-reading Spark job per read (validate.py keeps
+# inference on purpose — it is the integrity check).
+DOCMAP_SCHEMA = ("shard_id int, doc_id long, conv_id string, turn_idx int, "
+                 "role string, ts timestamp, doc_len int, text_hash long")
 
 
 def prepare_docs(df: DataFrame, cfg: IndexConfig, partitions: int,
@@ -289,20 +294,9 @@ def build_postings(docs: DataFrame, cfg: IndexConfig, avgdl: float,
                            schema=POSTINGS_SCHEMA)
 
 
-def segment_metrics(spark: SparkSession, segments_path: str) -> list[dict]:
-    """Per-shard lineage/metrics rows for the manifest (north rule: per-
-    partition lineage + posting/byte metrics; reference counters analog
-    SolrCounters.java:23-39).
-
-    Reads only metadata columns (parquet column pruning) — payload bytes come
-    from the segment files' on-disk sizes, so this never re-reads posting
-    payloads (which would scan the whole index once per merge level)."""
-    seg = spark.read.parquet(segments_path)
-    rows = (seg.groupBy("shard_id")
-            .agg(F.countDistinct("term").alias("n_terms"),
-                 F.count(F.lit(1)).alias("n_blocks"),
-                 F.sum("n").alias("n_postings"))
-            .orderBy("shard_id").collect())
+def shard_payload_bytes(spark: SparkSession, segments_path: str) -> dict[int, int]:
+    """On-disk bytes per `shard_id=N` directory of a partitioned level — a
+    file listing, never a payload read."""
     sizes: dict[int, int] = {}
     if os.path.isdir(segments_path):
         for entry in os.scandir(segments_path):
@@ -324,6 +318,26 @@ def segment_metrics(spark: SparkSession, segments_path: str) -> list[dict]:
                     sizes[sid] = int(fs.getContentSummary(st.getPath()).getLength())
         except Exception:  # noqa: BLE001 — metrics must never fail a build
             pass
+    return sizes
+
+
+def segment_metrics(spark: SparkSession, segments_path: str) -> list[dict]:
+    """Per-shard lineage/metrics rows for the manifest (north rule: per-
+    partition lineage + posting/byte metrics; reference counters analog
+    SolrCounters.java:23-39).
+
+    Reads only metadata columns (parquet column pruning) — payload bytes come
+    from the segment files' on-disk sizes, so this never re-reads posting
+    payloads (which would scan the whole index once per merge level). The
+    ≤|shards| result rows are sorted on the driver: an orderBy would add a
+    range-sampling job and a second exchange."""
+    seg = spark.read.schema(POSTINGS_SCHEMA).parquet(segments_path)
+    rows = sorted(seg.groupBy("shard_id")
+                  .agg(F.countDistinct("term").alias("n_terms"),
+                       F.count(F.lit(1)).alias("n_blocks"),
+                       F.sum("n").alias("n_postings"))
+                  .collect(), key=lambda r: r["shard_id"])
+    sizes = shard_payload_bytes(spark, segments_path)
     return [r.asDict() | {"payload_bytes": sizes.get(r["shard_id"], -1)}
             for r in rows]
 
@@ -338,7 +352,7 @@ def write_term_stats(spark: SparkSession, blocks_path: str,
     ABOVE repartitionByRange so the range-sampling job never passes through
     the metrics node) — no read-back count job."""
     from pyspark.sql import Observation
-    ts = (spark.read.parquet(blocks_path)
+    ts = (spark.read.schema(POSTINGS_SCHEMA).parquet(blocks_path)
           .groupBy("term")
           .agg(F.sum("n").cast("long").alias("df"),
                F.sum("sum_tf").cast("long").alias("cf")))

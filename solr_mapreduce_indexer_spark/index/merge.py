@@ -10,6 +10,13 @@ micro-shard in the high bits and micro-shards of a root shard are contiguous
 have disjoint, ordered doc-id ranges, so the merged posting list is just the
 union of block rows — no decode, no rewrite, no shuffle beyond the re-tag.
 
+merge_indexes (the cross-index MergeIndexes analog, GoLiveTool.java:107-120)
+is the same concat across independently built indexes: each input is rebased
+into its own disjoint range of shard and micro-shard ids, so each scan task
+copies its rows out with rebased ids and NO exchange (one or more files per
+output shard directory, each sorted by (term, first_doc)), and per-shard
+segment metrics are carried over from the input manifests, not recounted.
+
 Physical compaction (the forceMerge(maxSegments) analog,
 TreeMergeOutputFormat.java:170-183) optionally re-encodes each (shard, term)'s
 blocks into full-size blocks at the final level.
@@ -27,6 +34,8 @@ from pyspark.sql import functions as F
 from .. import fsutil
 from ..config import IndexConfig
 from . import manifest as mf
+from .build import (DOCMAP_SCHEMA, POSTINGS_SCHEMA, segment_metrics,
+                    shard_payload_bytes, write_term_stats)
 from .codec import decode_block, encode_blocks
 
 
@@ -39,7 +48,7 @@ def merge_level(spark: SparkSession, index_dir: str, level: int,
                 compression: str = "zstd",
                 level_bytes: int | None = None) -> tuple[str, int]:
     """One tree-merge iteration: level → level+1, shard_id //= fanout."""
-    src = spark.read.parquet(level_path(index_dir, level))
+    src = spark.read.schema(POSTINGS_SCHEMA).parquet(level_path(index_dir, level))
     n_out = -(-n_shards_in // fanout)
     dst_path = level_path(index_dir, level + 1)
     # Sub-split each output shard by term so write parallelism isn't capped
@@ -143,8 +152,7 @@ def compact_level(spark: SparkSession, src_path: str,
     max_segments > 1 trades file count for write parallelism: each shard's
     rows are salted into max_segments groups by term hash (a term's blocks
     stay within one file), so a shard is written by up to max_segments tasks."""
-    from .build import POSTINGS_SCHEMA
-    src = spark.read.parquet(src_path)
+    src = spark.read.schema(POSTINGS_SCHEMA).parquet(src_path)
     dst = src_path.rstrip("/") + "_compact"
     m = max(1, int(cfg.max_segments))
     out = (src.groupBy("shard_id", "term")
@@ -186,8 +194,6 @@ def merge_to_target(spark: SparkSession, index_dir: str, cfg: IndexConfig,
     """Run the full merge tree; returns checkpoint payloads per level.
     Skip-if-done semantics mirror IndexMergeTool.mergeIfNeeded
     (IndexMergeTool.java:68-78)."""
-    from .build import segment_metrics
-
     levels: list[dict] = []
     cur = partitions
     prev_segments = (mf.read_checkpoint(index_dir, "level_0") or {}).get("segments", [])
@@ -239,26 +245,31 @@ def resolve_duplicate_keys(spark: SparkSession, docmap_path: str,
     posting read. Returns (manifest tombstones entry | None, n)."""
     from pyspark.sql import Window
 
-    dm = spark.read.parquet(docmap_path)
+    from .tombstones import write_tombstones
+
+    dm = spark.read.schema(DOCMAP_SCHEMA).parquet(docmap_path)
     w = Window.partitionBy("conv_id", "turn_idx") \
               .orderBy(F.desc(cfg.order_by_field), F.desc("doc_id"))
     losers = (dm.select("shard_id", "doc_id", "conv_id", "turn_idx",
                         cfg.order_by_field)
                 .withColumn("_rn", F.row_number().over(w))
                 .where(F.col("_rn") > 1)
-                .select("shard_id", "doc_id"))
-    n = losers.count()
-    if n == 0:
-        return None, 0
-    if cfg.conflict_resolver in ("reject", "reject_conflicts"):
-        raise ValueError(
-            f"{n} duplicate keys across combined inputs and resolver is "
-            f"'{cfg.conflict_resolver}' — rejecting (reference "
-            "RejectingUpdateConflictResolver semantics)")
-    path = os.path.join(out_dir, "tombstones")
-    from .tombstones import write_tombstones
-    write_tombstones(losers, path, n, compression=cfg.compression)
-    return {"path": path, "n": n}, n
+                .select("shard_id", "doc_id")
+                .persist())  # one window evaluation for the count AND the write
+    try:
+        n = losers.count()
+        if n == 0:
+            return None, 0
+        if cfg.conflict_resolver in ("reject", "reject_conflicts"):
+            raise ValueError(
+                f"{n} duplicate keys across combined inputs and resolver is "
+                f"'{cfg.conflict_resolver}' — rejecting (reference "
+                "RejectingUpdateConflictResolver semantics)")
+        path = os.path.join(out_dir, "tombstones")
+        write_tombstones(losers, path, n, compression=cfg.compression)
+        return {"path": path, "n": n}, n
+    finally:
+        losers.unpersist()
 
 
 def merge_indexes(spark: SparkSession, input_dirs: list[str],
@@ -273,18 +284,26 @@ def merge_indexes(spark: SparkSession, input_dirs: list[str],
     decode_doc_deltas), so rebasing index i into a fresh doc-id namespace is
     adding ``offset_i << doc_bits`` to first_doc/last_doc and to the docmap
     doc_id/shard_id columns, where offset_i = Σ micro-shards of earlier
-    inputs. Final shard ids are re-tagged the same way; block-max bounds are
-    recomputed from the avgdl-independent (max_tf, min_dl) metadata under
-    the merged corpus avgdl — the exact trick streaming finalize uses.
+    inputs. Final shard ids are re-tagged the same way (+ Σ shards of earlier
+    inputs); block-max bounds are recomputed from the avgdl-independent
+    (max_tf, min_dl) metadata under the merged corpus avgdl — the exact
+    trick streaming finalize uses.
+
+    No exchange: both offsets give every input a disjoint range of output
+    shards and micro-shards, so no output partition directory receives rows
+    from two inputs and each scan task writes its rows straight back out.
+    A merged shard directory therefore holds one or more files (at most one
+    per source file), each sorted by (term, first_doc) — the layout
+    merge_level already writes and every reader handles. Micro-shard widths come from
+    the inputs' docmap `shard_id=N` directory names (N is always
+    doc_id >> doc_bits), and per-shard segment metrics are carried over from
+    the input manifests — blocks are neither split nor joined, so n_terms,
+    n_blocks and n_postings are unchanged and only payload_bytes is re-listed.
 
     Inputs must share analysis/scoring config (token_pattern, k1, b,
     doc_bits) — asserted, since mixing dialects would corrupt scores."""
+    import dataclasses
     from functools import reduce
-
-    from pyspark.sql import DataFrame
-
-    from ..config import IndexConfig
-    from .build import segment_metrics
 
     assert len(input_dirs) >= 1
     manifests = [mf.read_manifest(d) for d in input_dirs]
@@ -314,79 +333,79 @@ def merge_indexes(spark: SparkSession, input_dirs: list[str],
     avgdl = total_tokens / n_docs if n_docs else 0.0  # all-empty inputs →
     # empty merged index rather than ZeroDivisionError
 
-    # micro-shard namespace width per input = max doc-id high bits + 1,
-    # derived from the docmap itself (parquet min/max stats make this a
-    # metadata-only scan) — correct for batch (R micros) AND stream-finalized
-    # (gens × S micros) indexes alike
+    # micro-shard namespace width per input = highest docmap partition + 1
+    # (a listing, no job) — correct for batch (R micros) AND stream-finalized
+    # (gens × S micros) indexes alike; an input without docs has width 0
     micros = []
     for d in input_dirs:
-        mx = (spark.read.parquet(os.path.join(d, "docmap"))
-              .agg(F.max(F.shiftright("doc_id", base.doc_bits))).first()[0])
-        micros.append(int(mx) + 1)
+        ids = [int(n.split("=", 1)[1])
+               for n in fsutil.listdir(os.path.join(d, "docmap"))
+               if n.startswith("shard_id=")]
+        micros.append(max(ids) + 1 if ids else 0)
     offsets = [0]
     for n in micros[:-1]:
         offsets.append(offsets[-1] + n)
     shard_offsets = [0]
     for m in manifests[:-1]:
         shard_offsets.append(shard_offsets[-1] + int(m["shards"]))
-
+    n_shards = shard_offsets[-1] + int(manifests[-1]["shards"])
     doc_shift = [o << base.doc_bits for o in offsets]
 
     # --- docmap: union with rebased ids, partitioned by rebased micro ------
     docmap_path = os.path.join(out_dir, "docmap")
-    dms = []
-    for d, off, shift in zip(input_dirs, offsets, doc_shift):
-        dm = (spark.read.parquet(os.path.join(d, "docmap"))
-              .withColumn("doc_id", F.col("doc_id") + F.lit(shift))
-              .withColumn("shard_id", (F.col("shard_id") + F.lit(off))
-                          .cast("int")))
-        dms.append(dm)
+    dms = [spark.read.schema(DOCMAP_SCHEMA).parquet(os.path.join(d, "docmap"))
+           .withColumn("doc_id", F.col("doc_id") + F.lit(shift))
+           .withColumn("shard_id", (F.col("shard_id") + F.lit(off)).cast("int"))
+           for d, off, shift in zip(input_dirs, offsets, doc_shift)]
     (reduce(DataFrame.unionByName, dms)
-     .repartition(max(1, sum(int(m["shards"]) for m in manifests)), "shard_id")
+     .sortWithinPartitions("shard_id", "doc_id")
      .write.mode("overwrite").option("compression", base.compression)
      .partitionBy("shard_id").parquet(docmap_path))
 
     # --- postings: concat final levels, rebase ids, re-bound, re-tag shards -
     level_path = os.path.join(out_dir, "segments", "merged_0")
     k1, b = float(base.k1), float(base.b)
-    parts = []
-    for d, m, shift, soff in zip(input_dirs, manifests, doc_shift,
-                                 shard_offsets):
-        src = spark.read.parquet(m["levels"][-1]["path"])
-        parts.append(src
-                     .withColumn("first_doc", F.col("first_doc") + F.lit(shift))
-                     .withColumn("last_doc", F.col("last_doc") + F.lit(shift))
-                     .withColumn("shard_id", (F.col("shard_id") + F.lit(soff))
-                                 .cast("int")))
-    blocks = reduce(DataFrame.unionByName, parts)
+    parts = [spark.read.schema(POSTINGS_SCHEMA).parquet(m["levels"][-1]["path"])
+             .withColumn("first_doc", F.col("first_doc") + F.lit(shift))
+             .withColumn("last_doc", F.col("last_doc") + F.lit(shift))
+             .withColumn("shard_id", (F.col("shard_id") + F.lit(soff)).cast("int"))
+             for m, shift, soff in zip(manifests, doc_shift, shard_offsets)]
     mtf = F.col("max_tf").cast("double")
     bound = (mtf * F.lit(k1 + 1.0)
              / (mtf + F.lit(k1) * (F.lit(1.0 - b)
                                    + F.lit(b) * F.col("min_dl").cast("double")
                                    / F.lit(avgdl))))
-    n_shards = sum(int(m["shards"]) for m in manifests)
-    (blocks.withColumn("max_tfnorm", bound)
-           .repartition(n_shards, "shard_id")
-           .sortWithinPartitions("term", "first_doc")
-           .write.mode("overwrite").option("compression", base.compression)
-           .partitionBy("shard_id").parquet(level_path))
+    (reduce(DataFrame.unionByName, parts)
+     .withColumn("max_tfnorm", bound)
+     .sortWithinPartitions("shard_id", "term", "first_doc")
+     .write.mode("overwrite").option("compression", base.compression)
+     .partitionBy("shard_id").parquet(level_path))
 
     # --- term stats from block metadata ------------------------------------
-    from .build import write_term_stats
     term_stats_path = os.path.join(out_dir, "term_stats")
     n_terms = write_term_stats(spark, level_path, term_stats_path)
 
     # --- duplicate-key resolution across inputs → tombstones ---------------
     tombs, n_tombs = resolve_duplicate_keys(spark, docmap_path, base, out_dir)
 
-    import dataclasses
+    # --- segment metrics carried over, re-tagged; sizes from the listing ---
+    sizes = shard_payload_bytes(spark, level_path)
+    segments = []
+    for m, soff in zip(manifests, shard_offsets):
+        for seg in m["levels"][-1]["segments"]:
+            sid = int(seg["shard_id"]) + soff
+            segments.append({"shard_id": sid, "n_terms": int(seg["n_terms"]),
+                             "n_blocks": int(seg["n_blocks"]),
+                             "n_postings": int(seg["n_postings"]),
+                             "payload_bytes": sizes.get(sid, -1)})
+
     merged_cfg = dataclasses.replace(base, shards=n_shards,
                                      reducers=sum(micros))
     stats = {"n_docs": n_docs, "avgdl": avgdl, "total_tokens": total_tokens,
              "n_terms": n_terms, "n_tombstones": n_tombs,
              "n_live_docs": n_docs - n_tombs}
     level = {"level": 0, "path": level_path, "n_shards": n_shards,
-             "segments": segment_metrics(spark, level_path),
+             "segments": segments,
              "lineage": {"merged_from": [os.path.abspath(d)
                                          for d in input_dirs],
                          "micro_offsets": offsets}}
@@ -416,9 +435,6 @@ def compact_final(spark: SparkSession, index_dir: str,
     no tombstones."""
     import dataclasses
 
-    from ..config import IndexConfig
-    from .build import segment_metrics
-
     m = mf.read_manifest(index_dir)
     cfg = IndexConfig(**{k: (tuple(v) if k == "stopwords" else v)
                          for k, v in m["config"].items()})
@@ -438,13 +454,13 @@ def compact_final(spark: SparkSession, index_dir: str,
         # merged generations stays O(slice) per task at any collision count.
         docmap_path = os.path.join(index_dir, "docmap")
         live_path = docmap_path + "_live"
-        dm = spark.read.parquet(docmap_path)
-        tdf = spark.read.parquet(m["tombstones"]["path"]).select("doc_id")
+        dm = spark.read.schema(DOCMAP_SCHEMA).parquet(docmap_path)
+        tdf = spark.read.schema("doc_id long").parquet(m["tombstones"]["path"])
         live = dm.join(tdf, "doc_id", "left_anti")
         (live.repartition(int(final["n_shards"]), "shard_id")
              .write.mode("overwrite").option("compression", cfg.compression)
              .partitionBy("shard_id").parquet(live_path))
-        agg = (spark.read.parquet(live_path)
+        agg = (spark.read.schema(DOCMAP_SCHEMA).parquet(live_path)
                .agg(F.count(F.lit(1)).alias("n"),
                     F.avg("doc_len").alias("avgdl"),
                     F.coalesce(F.sum("doc_len"), F.lit(0)).alias("tt"))
@@ -460,7 +476,6 @@ def compact_final(spark: SparkSession, index_dir: str,
 
     if tombs_path:
         # term_stats from the purged block metadata (same recipe as build)
-        from .build import write_term_stats
         term_stats_path = os.path.join(index_dir, "term_stats")
         stats["n_terms"] = write_term_stats(spark, path, term_stats_path)
         fsutil.delete(m["tombstones"]["path"], ignore_missing=True)

@@ -571,8 +571,17 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
 def run_queries(spark: SparkSession, h: IndexHandle,
                 queries: list[dict]) -> DataFrame:
     """Batch top-k evaluation. Each query: {query_id, terms: [str], mode:
-    'AND'|'OR', k: int}. Returns (query_id, rank, doc_id, conv_id, turn_idx,
-    score) with rank 1..k ordered by (score desc, doc_id asc)."""
+    'AND'|'OR'|'PHRASE', k: int}. AND/OR terms are lower-cased and
+    de-duplicated; PHRASE keeps their order and scores docs holding the terms
+    at consecutive positions, with tf = phrase occurrences (Lucene
+    PhraseQuery).
+    Returns (query_id, rank, doc_id, conv_id, turn_idx, score) with rank 1..k
+    ordered by (score desc, doc_id asc).
+
+    A PHRASE query on an index built without positions raises ValueError on
+    the driver before any job starts. Each shard kernel emits at most k rows
+    per query, so the driver collects at most |shards| × Σk candidate rows;
+    a larger collect raises RuntimeError instead of ranking it."""
     from ..session import ensure_shipped
     ensure_shipped(spark)
     cfg = h.cfg
@@ -668,6 +677,11 @@ def run_queries(spark: SparkSession, h: IndexHandle,
     # doc_id asc) per query, float64 on both sides.
     ks = {q["query_id"]: q["k"] for q in norm_queries}
     cpdf = cand.toPandas()
+    bound = len(h.shard_ids) * sum(q["k"] for q in norm_queries)
+    if len(cpdf) > bound:
+        raise RuntimeError(
+            f"{len(cpdf)} candidate rows collected, above the |shards| x sum(k) "
+            f"bound of {bound} ({len(h.shard_ids)} shards)")
     if not len(cpdf):
         return empty
     cpdf = cpdf.sort_values(["query_id", "score", "doc_id"],

@@ -78,7 +78,7 @@ def get_spark(app: str = "solr_mapreduce_indexer_spark",
          # this sandbox's virtualized FS (default 32k causes a syscall per
          # 32k shuffle bytes, which gVisor-style hosts serialize)
          .config("spark.shuffle.file.buffer", "1m")
-         .config("spark.shuffle.unsafe.file.output.buffer", "1m")
+         .config("spark.shuffle.localDisk.file.output.buffer", "1m")
          .config("spark.ui.enabled", "false")
          # the reference disables speculative execution because duplicate
          # writers corrupt an index (IndexTool.java:129-131); our segment

@@ -135,3 +135,168 @@ def test_merge_independent_indexes_matches_union_build(spark, tmp_path):
     # the merged index passes full read-back validation (df/cf, doc_len
     # cross-check, block bounds under the merged avgdl)
     assert validate_index(spark, merged_dir)["ok"]
+
+
+# --- merge_indexes: job budget, carried metrics, schemas, empty input -------
+
+MERGE_JOB_BUDGET = 12
+
+
+@pytest.fixture(scope="module")
+def merge_inputs(spark, tmp_path_factory):
+    """A batch index with a merge tree ("a"), a merge-less one that re-ingests
+    six of its keys ("b"), their merge ("ab", with tombstones) and an index
+    with no docs ("empty")."""
+    from solr_mapreduce_indexer_spark.index.merge import merge_indexes
+    from solr_mapreduce_indexer_spark.sources.transcripts import (
+        TRANSCRIPT_SCHEMA, synth_transcripts_pandas)
+
+    tmp = tmp_path_factory.mktemp("merge_inputs")
+    pdf_a = synth_transcripts_pandas(n_convs=40, turns_per_conv=4,
+                                     vocab_size=300, seed=3)
+    pdf_b = synth_transcripts_pandas(n_convs=30, turns_per_conv=4,
+                                     vocab_size=300, seed=4)
+    pdf_b["conv_id"] = "b" + pdf_b["conv_id"]
+    for col in ("conv_id", "turn_idx"):
+        pdf_b.loc[:5, col] = pdf_a.loc[:5, col].to_numpy()
+    dirs = {k: str(tmp / k) for k in ("a", "b", "ab", "empty")}
+    build_index(spark, spark.createDataFrame(pdf_a, schema=TRANSCRIPT_SCHEMA),
+                IndexConfig(shards=2, reducers=4, fanout=2), dirs["a"])
+    build_index(spark, spark.createDataFrame(pdf_b, schema=TRANSCRIPT_SCHEMA),
+                IndexConfig(shards=2), dirs["b"])
+    build_index(spark, spark.createDataFrame([], schema=TRANSCRIPT_SCHEMA),
+                IndexConfig(shards=2), dirs["empty"])
+    merge_indexes(spark, [dirs["a"], dirs["b"]], dirs["ab"])
+    return dirs, pdf_a
+
+
+def _job_ids(sc, group):
+    tr = sc.statusTracker()
+    return set(tr.getJobIdsForGroup(None)) | set(tr.getJobIdsForGroup(group))
+
+
+def _settled_job_ids(sc, group):
+    # the listener bus is asynchronous: wait until the id set stops growing
+    import time
+    ids, deadline = _job_ids(sc, group), time.monotonic() + 5.0
+    while time.monotonic() < deadline:
+        time.sleep(0.2)
+        nxt = _job_ids(sc, group)
+        if nxt == ids:
+            break
+        ids = nxt
+    return ids
+
+
+def test_merge_indexes_job_budget(spark, merge_inputs, tmp_path, monkeypatch):
+    """merge_indexes runs no exchange for the rewrite, no re-scan for segment
+    metrics and no schema-inference job; jobs are attributed to sub-phases
+    so a regression names the one that grew. Counted at the benchmark
+    session's 2 shuffle partitions: from 8 on, term_stats' range-partitioned
+    write adds one sampling job."""
+    from solr_mapreduce_indexer_spark.index import merge
+
+    dirs, _ = merge_inputs
+    sc, group = spark.sparkContext, "merge-budget"
+    cuts = [_settled_job_ids(sc, group)]
+
+    def wrap(name):
+        fn = getattr(merge, name)
+
+        def counted(*a, **kw):
+            cuts.append(_settled_job_ids(sc, group))
+            out = fn(*a, **kw)
+            cuts.append(_settled_job_ids(sc, group))
+            return out
+        monkeypatch.setattr(merge, name, counted)
+
+    wrap("write_term_stats")
+    wrap("resolve_duplicate_keys")
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    sc.setJobGroup(group, "merge_indexes job budget")
+    try:
+        m = merge.merge_indexes(spark, [dirs["a"], dirs["b"]],
+                                str(tmp_path / "m"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+    cuts.append(_settled_job_ids(sc, group))
+    assert m["stats"]["n_tombstones"] == 6
+
+    labels = ["docmap+postings rewrite", "term_stats", "between",
+              "duplicate keys", "metrics+manifest"]
+    per_phase = {lab: len(hi - lo)
+                 for lab, lo, hi in zip(labels, cuts[:-1], cuts[1:])}
+    total = len(cuts[-1] - cuts[0])
+    assert total <= MERGE_JOB_BUDGET, (
+        f"merge_indexes ran {total} Spark jobs per call (budget "
+        f"{MERGE_JOB_BUDGET}); per sub-phase: {per_phase}")
+    assert per_phase["metrics+manifest"] == 0, per_phase
+
+
+@pytest.mark.parametrize("kind", ["batch", "merged_of_merged", "compacted",
+                                  "stream_finalized"])
+def test_carried_segments_equal_fresh_scan(spark, merge_inputs, tmp_path, kind):
+    """The final level's segments, carried over from the input manifests and
+    re-tagged, equal a fresh segment_metrics scan of the merged level."""
+    import shutil
+
+    from solr_mapreduce_indexer_spark.index.build import segment_metrics
+    from solr_mapreduce_indexer_spark.index.merge import (compact_final,
+                                                          merge_indexes)
+    from solr_mapreduce_indexer_spark.index.validate import validate_index
+    from solr_mapreduce_indexer_spark.sources.transcripts import (
+        TRANSCRIPT_SCHEMA)
+    from solr_mapreduce_indexer_spark.streaming.ingest import (
+        append_batch, finalize_stream_index)
+
+    dirs, pdf_a = merge_inputs
+    out = dirs["ab"]  # batch inputs
+    if kind != "batch":
+        first = dirs["ab"]
+        if kind == "compacted":
+            first = str(tmp_path / "compacted")
+            shutil.copytree(dirs["ab"], first)
+            compact_final(spark, first)
+        elif kind == "stream_finalized":
+            first, cfg = str(tmp_path / "stream"), IndexConfig(shards=2)
+            df = spark.createDataFrame(pdf_a, schema=TRANSCRIPT_SCHEMA)
+            half = F.abs(F.xxhash64("conv_id")) % 2
+            for gen in range(2):
+                append_batch(spark, df.where(half == gen), cfg, first, gen=gen)
+            finalize_stream_index(spark, first, cfg)
+        out = str(tmp_path / "out")
+        merge_indexes(spark, [first, dirs["b"]], out)
+    final = read_manifest(out)["levels"][-1]
+    assert final["segments"] == segment_metrics(spark, final["path"])
+    assert validate_index(spark, out)["ok"]
+
+
+def test_docmap_schema_matches_written_docmap(spark, merge_inputs):
+    from solr_mapreduce_indexer_spark.index.build import DOCMAP_SCHEMA
+
+    path = os.path.join(merge_inputs[0]["a"], "docmap")
+    assert (spark.read.schema(DOCMAP_SCHEMA).parquet(path).schema
+            == spark.read.parquet(path).schema)
+
+
+def test_merge_with_empty_docmap_input(spark, merge_inputs, tmp_path):
+    """An input without docs has no docmap partitions: micro-shard width 0,
+    its shard range stays empty, and the other input serves as before."""
+    from solr_mapreduce_indexer_spark.index.merge import merge_indexes
+    from solr_mapreduce_indexer_spark.index.validate import validate_index
+
+    dirs, _ = merge_inputs
+    out = str(tmp_path / "m")
+    m = merge_indexes(spark, [dirs["empty"], dirs["b"]], out)
+    mb = read_manifest(dirs["b"])
+    assert m["stats"]["n_docs"] == mb["stats"]["n_docs"]
+    assert m["levels"][-1]["lineage"]["micro_offsets"] == [0, 0]
+    assert ({s["shard_id"] for s in m["levels"][-1]["segments"]}
+            == {s["shard_id"] + 2 for s in mb["levels"][-1]["segments"]})
+    a = _results(spark, dirs["b"])
+    b = _results(spark, out)
+    assert a.equals(b)
+    assert validate_index(spark, out)["ok"]

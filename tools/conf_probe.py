@@ -23,11 +23,11 @@ CONFS = {
     "zstd": {"spark.io.compression.codec": "zstd"},
     "tmpfs": {"spark.local.dir": "/dev/shm/smis_localdir"},
     "bigbuf": {"spark.shuffle.file.buffer": "1m",
-               "spark.shuffle.unsafe.file.output.buffer": "1m"},
+               "spark.shuffle.localDisk.file.output.buffer": "1m"},
     "all": {"spark.io.compression.codec": "zstd",
             "spark.local.dir": "/dev/shm/smis_localdir",
             "spark.shuffle.file.buffer": "1m",
-            "spark.shuffle.unsafe.file.output.buffer": "1m"},
+            "spark.shuffle.localDisk.file.output.buffer": "1m"},
 }
 
 _CHILD = r"""
