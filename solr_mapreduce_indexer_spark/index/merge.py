@@ -10,12 +10,13 @@ micro-shard in the high bits and micro-shards of a root shard are contiguous
 have disjoint, ordered doc-id ranges, so the merged posting list is just the
 union of block rows — no decode, no rewrite, no shuffle beyond the re-tag.
 
+concat_segments is the one concat of independently written segments:
 merge_indexes (the cross-index MergeIndexes analog, GoLiveTool.java:107-120)
-is the same concat across independently built indexes: each input is rebased
-into its own disjoint range of shard and micro-shard ids, so each scan task
-copies its rows out with rebased ids and NO exchange (one or more files per
-output shard directory, each sorted by (term, first_doc)), and per-shard
-segment metrics are carried over from the input manifests, not recounted.
+and streaming finalize both call it. Each input's doc ids are shifted into a
+range of micro-shards it owns, so docmap rows are copied out with no
+exchange; posting rows are exchanged by shard_id only when two inputs share
+an output shard (stream generations), else copied out as well (merge_indexes
+gives every input its own output shards).
 
 Physical compaction (the forceMerge(maxSegments) analog,
 TreeMergeOutputFormat.java:170-183) optionally re-encodes each (shard, term)'s
@@ -242,7 +243,9 @@ def resolve_duplicate_keys(spark: SparkSession, docmap_path: str,
     Winner per (conv_id, turn_idx): greatest (order_by_field, doc_id) — the
     most recent update, ties to the later-appended input. 'reject' resolvers
     fail loudly instead. Metadata-only: one window over the docmap, never a
-    posting read. Returns (manifest tombstones entry | None, n)."""
+    posting read. The losers are written once and counted on that write; an
+    empty or rejected result leaves no tombstones directory behind. Returns
+    (manifest tombstones entry | None, n)."""
     from pyspark.sql import Window
 
     from .tombstones import write_tombstones
@@ -254,22 +257,89 @@ def resolve_duplicate_keys(spark: SparkSession, docmap_path: str,
                         cfg.order_by_field)
                 .withColumn("_rn", F.row_number().over(w))
                 .where(F.col("_rn") > 1)
-                .select("shard_id", "doc_id")
-                .persist())  # one window evaluation for the count AND the write
-    try:
-        n = losers.count()
-        if n == 0:
-            return None, 0
-        if cfg.conflict_resolver in ("reject", "reject_conflicts"):
-            raise ValueError(
-                f"{n} duplicate keys across combined inputs and resolver is "
-                f"'{cfg.conflict_resolver}' — rejecting (reference "
-                "RejectingUpdateConflictResolver semantics)")
-        path = os.path.join(out_dir, "tombstones")
-        write_tombstones(losers, path, n, compression=cfg.compression)
-        return {"path": path, "n": n}, n
-    finally:
-        losers.unpersist()
+                .select("shard_id", "doc_id"))
+    path = os.path.join(out_dir, "tombstones")
+    n = write_tombstones(losers, path, compression=cfg.compression)
+    reject = cfg.conflict_resolver in ("reject", "reject_conflicts")
+    if n == 0 or reject:
+        fsutil.delete(path, ignore_missing=True)
+    if n == 0:
+        return None, 0
+    if reject:
+        raise ValueError(
+            f"{n} duplicate keys across combined inputs and resolver is "
+            f"'{cfg.conflict_resolver}' — rejecting (reference "
+            "RejectingUpdateConflictResolver semantics)")
+    return {"path": path, "n": n}, n
+
+
+def _partition_ids(path: str) -> list[int]:
+    """N of every `shard_id=N` child directory — a listing, no job."""
+    return [int(n.split("=", 1)[1]) for n in fsutil.listdir(path)
+            if n.startswith("shard_id=")]
+
+
+def concat_segments(spark: SparkSession,
+                    inputs: list[tuple[str, str, int, int]],
+                    cfg: IndexConfig, avgdl: float, out_dir: str,
+                    level_name: str) -> dict:
+    """The one metadata-level concat, behind merge_indexes and streaming
+    finalize. Each input is a (docmap path, posting-level path, doc-id shift,
+    shard offset) tuple. Block doc payloads are base-relative (codec.py
+    decode_doc_deltas), so rebasing adds the shift to doc_id / first_doc /
+    last_doc and the offset to the posting shard_id, with no decode. The
+    docmap shard_id is doc_id >> doc_bits, the micro-shard a batch build
+    partitions by. max_tfnorm is re-bounded from the avgdl-independent
+    (max_tf, min_dl) under the combined avgdl.
+
+    Exchange rule, from the inputs: each owns its micro-shards, so docmap
+    rows are copied out by their scan tasks. Posting rows are repartitioned
+    by shard_id only when two inputs share an output shard (stream
+    generations), giving one file per served shard; otherwise they are
+    copied out too, one or more files per shard, each sorted by
+    (term, first_doc). Writes docmap/, segments/<level_name>/, term_stats/
+    and tombstones/ under out_dir."""
+    from functools import reduce
+
+    docmap_path = os.path.join(out_dir, "docmap")
+    dms = [spark.read.schema(DOCMAP_SCHEMA).parquet(dm)
+           .withColumn("doc_id", F.col("doc_id") + F.lit(shift))
+           for dm, _, shift, _ in inputs]
+    (reduce(DataFrame.unionByName, dms)
+     .withColumn("shard_id", F.shiftright("doc_id", cfg.doc_bits).cast("int"))
+     .sortWithinPartitions("shard_id", "doc_id")
+     .write.mode("overwrite").option("compression", cfg.compression)
+     .partitionBy("shard_id").parquet(docmap_path))
+
+    level_path = os.path.join(out_dir, "segments", level_name)
+    parts, owned = [], []
+    for _, seg, shift, soff in inputs:
+        owned.append({sid + soff for sid in _partition_ids(seg)})
+        parts.append(spark.read.schema(POSTINGS_SCHEMA).parquet(seg)
+                     .withColumn("first_doc", F.col("first_doc") + F.lit(shift))
+                     .withColumn("last_doc", F.col("last_doc") + F.lit(shift))
+                     .withColumn("shard_id",
+                                 (F.col("shard_id") + F.lit(soff)).cast("int")))
+    k1, b = float(cfg.k1), float(cfg.b)
+    mtf = F.col("max_tf").cast("double")
+    bound = (mtf * F.lit(k1 + 1.0)
+             / (mtf + F.lit(k1) * (F.lit(1.0 - b)
+                                   + F.lit(b) * F.col("min_dl").cast("double")
+                                   / F.lit(avgdl))))
+    blocks = reduce(DataFrame.unionByName, parts).withColumn("max_tfnorm", bound)
+    shards = set().union(*owned)
+    if sum(map(len, owned)) > len(shards):
+        blocks = blocks.repartition(len(shards), "shard_id")
+    (blocks.sortWithinPartitions("shard_id", "term", "first_doc")
+     .write.mode("overwrite").option("compression", cfg.compression)
+     .partitionBy("shard_id").parquet(level_path))
+
+    term_stats_path = os.path.join(out_dir, "term_stats")
+    n_terms = write_term_stats(spark, level_path, term_stats_path)
+    tombs, n_tombs = resolve_duplicate_keys(spark, docmap_path, cfg, out_dir)
+    return {"docmap": docmap_path, "level": level_path,
+            "term_stats": term_stats_path, "n_terms": n_terms,
+            "tombstones": tombs, "n_tombstones": n_tombs}
 
 
 def merge_indexes(spark: SparkSession, input_dirs: list[str],
@@ -279,31 +349,20 @@ def merge_indexes(spark: SparkSession, input_dirs: list[str],
     (IndexMergeTool.java:48-177 merges arbitrary shard inventories;
     GoLiveTool.java:107-120 issues CoreAdmin MergeIndexes per live core).
 
-    Metadata-only, no posting decode: block doc payloads are base-relative
-    (delta[0] is reconstructed from first_doc at decode, codec.py
-    decode_doc_deltas), so rebasing index i into a fresh doc-id namespace is
-    adding ``offset_i << doc_bits`` to first_doc/last_doc and to the docmap
-    doc_id/shard_id columns, where offset_i = Σ micro-shards of earlier
-    inputs. Final shard ids are re-tagged the same way (+ Σ shards of earlier
-    inputs); block-max bounds are recomputed from the avgdl-independent
-    (max_tf, min_dl) metadata under the merged corpus avgdl — the exact
-    trick streaming finalize uses.
-
-    No exchange: both offsets give every input a disjoint range of output
-    shards and micro-shards, so no output partition directory receives rows
-    from two inputs and each scan task writes its rows straight back out.
-    A merged shard directory therefore holds one or more files (at most one
-    per source file), each sorted by (term, first_doc) — the layout
-    merge_level already writes and every reader handles. Micro-shard widths come from
-    the inputs' docmap `shard_id=N` directory names (N is always
-    doc_id >> doc_bits), and per-shard segment metrics are carried over from
-    the input manifests — blocks are neither split nor joined, so n_terms,
-    n_blocks and n_postings are unchanged and only payload_bytes is re-listed.
+    A concat_segments call with one input per index: index i is shifted by
+    ``offset_i << doc_bits``, where offset_i = Σ micro-shards of earlier
+    inputs, and its final shards by Σ shards of earlier inputs. Both offsets
+    give every input a disjoint range of output shards and micro-shards, so
+    the concat runs no exchange. Micro-shard widths come from the inputs'
+    docmap `shard_id=N` directory names (N is always doc_id >> doc_bits), and
+    per-shard segment metrics are carried over from the input manifests —
+    blocks are neither split nor joined, so n_terms, n_blocks and n_postings
+    are unchanged and only payload_bytes is re-listed.
 
     Inputs must share analysis/scoring config (token_pattern, k1, b,
     doc_bits) — asserted, since mixing dialects would corrupt scores."""
     import dataclasses
-    from functools import reduce
+    from itertools import accumulate
 
     assert len(input_dirs) >= 1
     manifests = [mf.read_manifest(d) for d in input_dirs]
@@ -334,62 +393,26 @@ def merge_indexes(spark: SparkSession, input_dirs: list[str],
     # empty merged index rather than ZeroDivisionError
 
     # micro-shard namespace width per input = highest docmap partition + 1
-    # (a listing, no job) — correct for batch (R micros) AND stream-finalized
-    # (gens × S micros) indexes alike; an input without docs has width 0
-    micros = []
-    for d in input_dirs:
-        ids = [int(n.split("=", 1)[1])
-               for n in fsutil.listdir(os.path.join(d, "docmap"))
-               if n.startswith("shard_id=")]
-        micros.append(max(ids) + 1 if ids else 0)
-    offsets = [0]
-    for n in micros[:-1]:
-        offsets.append(offsets[-1] + n)
-    shard_offsets = [0]
-    for m in manifests[:-1]:
-        shard_offsets.append(shard_offsets[-1] + int(m["shards"]))
-    n_shards = shard_offsets[-1] + int(manifests[-1]["shards"])
-    doc_shift = [o << base.doc_bits for o in offsets]
+    # — correct for batch (R micros) AND stream-finalized (gens × S micros)
+    # indexes alike; an input without docs has width 0
+    micros = [max(ids) + 1 if ids else 0
+              for ids in (_partition_ids(os.path.join(d, "docmap"))
+                          for d in input_dirs)]
+    offsets = [0, *accumulate(micros[:-1])]
+    shards = [int(m["shards"]) for m in manifests]
+    shard_offsets = [0, *accumulate(shards[:-1])]
+    n_shards = sum(shards)
 
-    # --- docmap: union with rebased ids, partitioned by rebased micro ------
-    docmap_path = os.path.join(out_dir, "docmap")
-    dms = [spark.read.schema(DOCMAP_SCHEMA).parquet(os.path.join(d, "docmap"))
-           .withColumn("doc_id", F.col("doc_id") + F.lit(shift))
-           .withColumn("shard_id", (F.col("shard_id") + F.lit(off)).cast("int"))
-           for d, off, shift in zip(input_dirs, offsets, doc_shift)]
-    (reduce(DataFrame.unionByName, dms)
-     .sortWithinPartitions("shard_id", "doc_id")
-     .write.mode("overwrite").option("compression", base.compression)
-     .partitionBy("shard_id").parquet(docmap_path))
-
-    # --- postings: concat final levels, rebase ids, re-bound, re-tag shards -
-    level_path = os.path.join(out_dir, "segments", "merged_0")
-    k1, b = float(base.k1), float(base.b)
-    parts = [spark.read.schema(POSTINGS_SCHEMA).parquet(m["levels"][-1]["path"])
-             .withColumn("first_doc", F.col("first_doc") + F.lit(shift))
-             .withColumn("last_doc", F.col("last_doc") + F.lit(shift))
-             .withColumn("shard_id", (F.col("shard_id") + F.lit(soff)).cast("int"))
-             for m, shift, soff in zip(manifests, doc_shift, shard_offsets)]
-    mtf = F.col("max_tf").cast("double")
-    bound = (mtf * F.lit(k1 + 1.0)
-             / (mtf + F.lit(k1) * (F.lit(1.0 - b)
-                                   + F.lit(b) * F.col("min_dl").cast("double")
-                                   / F.lit(avgdl))))
-    (reduce(DataFrame.unionByName, parts)
-     .withColumn("max_tfnorm", bound)
-     .sortWithinPartitions("shard_id", "term", "first_doc")
-     .write.mode("overwrite").option("compression", base.compression)
-     .partitionBy("shard_id").parquet(level_path))
-
-    # --- term stats from block metadata ------------------------------------
-    term_stats_path = os.path.join(out_dir, "term_stats")
-    n_terms = write_term_stats(spark, level_path, term_stats_path)
-
-    # --- duplicate-key resolution across inputs → tombstones ---------------
-    tombs, n_tombs = resolve_duplicate_keys(spark, docmap_path, base, out_dir)
+    out = concat_segments(
+        spark, [(os.path.join(d, "docmap"), m["levels"][-1]["path"],
+                 off << base.doc_bits, soff)
+                for d, m, off, soff in zip(input_dirs, manifests, offsets,
+                                           shard_offsets)],
+        base, avgdl, out_dir, "merged_0")
+    n_terms, n_tombs = out["n_terms"], out["n_tombstones"]
 
     # --- segment metrics carried over, re-tagged; sizes from the listing ---
-    sizes = shard_payload_bytes(spark, level_path)
+    sizes = shard_payload_bytes(spark, out["level"])
     segments = []
     for m, soff in zip(manifests, shard_offsets):
         for seg in m["levels"][-1]["segments"]:
@@ -404,20 +427,20 @@ def merge_indexes(spark: SparkSession, input_dirs: list[str],
     stats = {"n_docs": n_docs, "avgdl": avgdl, "total_tokens": total_tokens,
              "n_terms": n_terms, "n_tombstones": n_tombs,
              "n_live_docs": n_docs - n_tombs}
-    level = {"level": 0, "path": level_path, "n_shards": n_shards,
+    level = {"level": 0, "path": out["level"], "n_shards": n_shards,
              "segments": segments,
              "lineage": {"merged_from": [os.path.abspath(d)
                                          for d in input_dirs],
                          "micro_offsets": offsets}}
     mf.write_checkpoint(out_dir, "docmap",
-                        {"path": docmap_path, "stats": stats,
+                        {"path": out["docmap"], "stats": stats,
                          "partitions": sum(micros)})
     mf.write_checkpoint(out_dir, "term_stats",
-                        {"path": term_stats_path, "n_terms": n_terms})
+                        {"path": out["term_stats"], "n_terms": n_terms})
     mf.write_checkpoint(out_dir, "level_0", level)
     return mf.write_manifest(out_dir, merged_cfg, stats, [level],
                              input_path=f"merge_indexes:{len(input_dirs)}",
-                             tombstones=tombs)
+                             tombstones=out["tombstones"])
 
 
 def compact_final(spark: SparkSession, index_dir: str,

@@ -11,7 +11,8 @@ per query batch and broadcast it for compaction — O(collision count) driver
 memory, and merging two heavily-overlapping generations makes collisions
 O(corpus)): tombstones are written as parquet RANGE-PARTITIONED AND SORTED BY
 doc_id, so any kernel can read just its own doc-id slice through parquet
-row-group statistics. Each task's working set is bounded by one shard's
+row-group statistics. Files cover disjoint doc-id ranges and AQE sizes them
+from the data. Each task's working set is bounded by one shard's
 tombstones; nothing ever lands on the driver. Doc ids embed their micro-shard
 in the high bits, so read ranges are quantized to micro-shard boundaries —
 every kernel of the same shard asks for the byte-identical range and the
@@ -28,24 +29,28 @@ from __future__ import annotations
 import functools
 
 import numpy as np
-from pyspark.sql import DataFrame
-
-# keep row groups small enough that a shard-range read touches little beyond
-# its own slice even when one file holds many shards' tombstones
-_ROWS_PER_FILE = 5_000_000
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 
-def write_tombstones(losers: DataFrame, path: str, n: int,
-                     compression: str = "zstd") -> None:
-    """Persist (shard_id, doc_id) losers sorted by doc_id.
+def write_tombstones(losers: DataFrame, path: str,
+                     compression: str = "zstd") -> int:
+    """Write (shard_id, doc_id) losers sorted by doc_id; returns their count.
 
     repartitionByRange + sortWithinPartitions ⇒ files and row groups cover
     disjoint, ordered doc-id ranges, which is exactly what makes
-    load_tombstones_range a row-group-pruned read instead of a full scan."""
-    (losers.repartitionByRange(max(1, n // _ROWS_PER_FILE + 1), "doc_id")
+    load_tombstones_range a row-group-pruned read instead of a full scan.
+    No partition count is given, so AQE sizes the files from the data. The
+    count is an Observation ABOVE the range exchange: it runs in the write's
+    result stage, never in the range-sampling job, so each row is counted
+    exactly once and the losers are computed for the write alone."""
+    obs = Observation()
+    (losers.repartitionByRange("doc_id")
+           .observe(obs, F.count(F.lit(1)).alias("n"))
            .sortWithinPartitions("doc_id")
            .write.mode("overwrite").option("compression", compression)
            .parquet(path))
+    return int(obs.get["n"])
 
 
 @functools.lru_cache(maxsize=8)

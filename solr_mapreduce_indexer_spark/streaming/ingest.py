@@ -15,14 +15,16 @@ Design:
 
 * Each micro-batch b becomes generation g=b with its own micro-shard id
   space: ``doc_id = ((g*S + shard) << doc_bits) | local_idx``. Within a final
-  shard, generations occupy disjoint ascending doc-id ranges, so — exactly
-  like the tree merge (index/merge.py) — combining generations is a
-  metadata-level concat of block rows, never a posting rewrite.
+  shard, generations occupy disjoint ascending doc-id ranges, so
+  ``finalize_stream_index`` combines them with index/merge.py's
+  ``concat_segments``, the concat merge-indexes uses: docmap rows are copied
+  out, posting rows exchanged by shard_id because generations share the S
+  root shards (one file per served shard) — never a posting rewrite.
 * ``append_batch`` is idempotent per generation id (checkpoint-exists skip),
   so ``foreachBatch`` retries after failure give exactly-once segments.
 * BM25's global stats (N, avgdl) drift as data arrives. Posting payloads are
   immutable and store raw (tf, dl) — scores stay exact under any avgdl. Only
-  the block-max pruning bound bakes avgdl in; ``finalize_stream_index``
+  the block-max pruning bound bakes avgdl in; ``concat_segments``
   recomputes it as a pure column expression from the avgdl-independent
   metadata pair (max_tf, min_dl): tfnorm is increasing in tf and decreasing
   in dl, so tfnorm(max_tf, min_dl, avgdl_final) upper-bounds every posting in
@@ -41,13 +43,14 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import IndexConfig
 from .. import fsutil
 from ..index import manifest as mf
-from ..index.build import build_postings, docmap_cols
+from ..index.build import build_postings, docmap_cols, segment_metrics
+from ..index.merge import concat_segments
 
 
 def _gen_phase(gen: int) -> str:
@@ -81,15 +84,16 @@ def append_batch(spark: SparkSession, df: DataFrame, cfg: IndexConfig,
 
     docs = _prepare_gen_docs(df, cfg, gen).persist()
     # prepare_docs output is already hash-clustered by shard_id — write
-    # directly, no re-shuffle (same layout, one exchange fewer)
+    # directly, no re-shuffle; the stats ride the write's result stage as
+    # Observation metrics (counted once, as in build_index)
+    obs = Observation()
     (docmap_cols(docs, cfg)
+         .observe(obs, F.count(F.lit(1)).alias("n_docs"),
+                  F.sum("doc_len").alias("total_tokens"))
          .write.mode("overwrite").option("compression", cfg.compression)
          .partitionBy("shard_id").parquet(docmap_path))
-    agg = (spark.read.parquet(docmap_path)
-           .agg(F.count(F.lit(1)).alias("n_docs"),
-                F.coalesce(F.sum("doc_len"), F.lit(0)).alias("total_tokens")
-                ).collect()[0])
-    n_docs, total_tokens = int(agg["n_docs"]), int(agg["total_tokens"])
+    n_docs = int(obs.get["n_docs"])
+    total_tokens = int(obs.get["total_tokens"] or 0)
     if n_docs == 0:
         docs.unpersist()
         payload = {"path": None, "n_docs": 0, "total_tokens": 0, "gen": gen}
@@ -163,12 +167,11 @@ def list_generations(index_dir: str) -> list[dict]:
 
 def finalize_stream_index(spark: SparkSession, index_dir: str,
                           cfg: IndexConfig) -> dict:
-    """Commit all generations as one standard queryable index.
-
-    Metadata-level concat (no posting decode): union generation block rows,
-    recompute the block-max bound from (max_tf, min_dl) under the global
-    avgdl, rewrite sorted per shard; union docmaps; derive term_stats from
-    block metadata. Records cross-generation duplicate-key count."""
+    """Commit all generations as one standard queryable index: one
+    concat_segments call with no shift (doc ids and root shards already line
+    up), which also resolves cross-generation duplicate keys into tombstones
+    (reference resolves every collision before serving,
+    SolrReducer.java:80-108)."""
     from ..session import ensure_shipped
     ensure_shipped(spark)
 
@@ -179,65 +182,18 @@ def finalize_stream_index(spark: SparkSession, index_dir: str,
     total_tokens = sum(g["total_tokens"] for g in gens)
     avgdl = total_tokens / n_docs
 
-    from functools import reduce
-
-    def _union_reads(paths: list[str]) -> DataFrame:
-        # each generation dir is independently partitioned by shard_id, so a
-        # multi-path read trips CONFLICTING_DIRECTORY_STRUCTURES — union them
-        return reduce(DataFrame.unionByName,
-                      [spark.read.parquet(p) for p in paths])
-
-    # --- docmap union + duplicate-key audit ---------------------------------
-    # Rewrite shard_id as the doc_id-embedded micro-shard (gen*S + shard) so
-    # the final docmap has the SAME partition layout as a batch build: the
-    # query side prunes docmap partitions by doc_id >> doc_bits
-    # (query/bm25.py run_queries), which must match the partition column.
-    docmap_path = os.path.join(index_dir, "docmap")
-    dm = (_union_reads([g["docmap"] for g in gens])
-          .withColumn("shard_id",
-                      F.shiftright("doc_id", cfg.doc_bits).cast("int")))
-    (dm.repartition(cfg.shards, "shard_id")
-       .write.mode("overwrite").option("compression", cfg.compression)
-       .partitionBy("shard_id").parquet(docmap_path))
-    # cross-generation duplicate keys: RESOLVED (not just counted) — the
-    # configured resolver picks one winner per key and losers become
-    # tombstones the query kernel/validator subtract and compact purges
-    # (reference resolves every collision before serving,
-    # SolrReducer.java:80-108)
-    from ..index.merge import resolve_duplicate_keys
-    tombs, dup_keys = resolve_duplicate_keys(spark, docmap_path, cfg,
-                                             index_dir)
-
-    # --- postings: concat generations, re-bound block-max, sort, commit -----
-    level_path = os.path.join(index_dir, "segments", "stream_final")
-    k1, b = float(cfg.k1), float(cfg.b)
-    blocks = _union_reads([g["path"] for g in gens])
-    mtf = F.col("max_tf").cast("double")
-    bound = (mtf * F.lit(k1 + 1.0)
-             / (mtf + F.lit(k1) * (F.lit(1.0 - b)
-                                   + F.lit(b) * F.col("min_dl").cast("double")
-                                   / F.lit(avgdl))))
-    (blocks.withColumn("max_tfnorm", bound)
-           .repartition(cfg.shards, "shard_id")
-           .sortWithinPartitions("term", "first_doc")
-           .write.mode("overwrite").option("compression", cfg.compression)
-           .partitionBy("shard_id").parquet(level_path))
-
-    # --- term stats from block metadata (column-pruned scan) ----------------
-    from ..index.build import write_term_stats
-    term_stats_path = os.path.join(index_dir, "term_stats")
-    n_terms = write_term_stats(spark, level_path, term_stats_path)
-
-    from ..index.build import segment_metrics
+    out = concat_segments(spark, [(g["docmap"], g["path"], 0, 0) for g in gens],
+                          cfg, avgdl, index_dir, "stream_final")
+    n_terms, dup_keys = out["n_terms"], out["n_tombstones"]
     mf.write_checkpoint(index_dir, "docmap", {
-        "path": docmap_path,
+        "path": out["docmap"],
         "stats": {"n_docs": n_docs, "avgdl": avgdl,
                   "total_tokens": total_tokens},
         "partitions": cfg.shards})
     mf.write_checkpoint(index_dir, "term_stats",
-                        {"path": term_stats_path, "n_terms": n_terms})
-    level = {"level": 0, "path": level_path, "n_shards": cfg.shards,
-             "segments": segment_metrics(spark, level_path),
+                        {"path": out["term_stats"], "n_terms": n_terms})
+    level = {"level": 0, "path": out["level"], "n_shards": cfg.shards,
+             "segments": segment_metrics(spark, out["level"]),
              "lineage": {"generations": [g["gen"] for g in gens],
                          "duplicate_keys": dup_keys}}
     mf.write_checkpoint(index_dir, "level_0", level)
@@ -246,4 +202,4 @@ def finalize_stream_index(spark: SparkSession, index_dir: str,
              "n_tombstones": dup_keys, "n_live_docs": n_docs - dup_keys}
     return mf.write_manifest(index_dir, cfg, stats, [level],
                              input_path=f"stream:{len(gens)} generations",
-                             tombstones=tombs)
+                             tombstones=out["tombstones"])

@@ -135,11 +135,16 @@ def test_merge_independent_indexes_matches_union_build(spark, tmp_path):
     # the merged index passes full read-back validation (df/cf, doc_len
     # cross-check, block bounds under the merged avgdl)
     assert validate_index(spark, merged_dir)["ok"]
+    # disjoint keys: no tombstones, and no empty tombstones directory
+    assert "tombstones" not in m
+    assert not os.path.exists(os.path.join(merged_dir, "tombstones"))
 
 
-# --- merge_indexes: job budget, carried metrics, schemas, empty input -------
+# --- job budgets (merge, stream append+finalize), carried metrics, schemas ---
 
-MERGE_JOB_BUDGET = 12
+MERGE_JOB_BUDGET = 10
+APPEND_JOB_BUDGET = 4
+FINALIZE_JOB_BUDGET = 14
 
 
 @pytest.fixture(scope="module")
@@ -188,52 +193,103 @@ def _settled_job_ids(sc, group):
     return ids
 
 
-def test_merge_indexes_job_budget(spark, merge_inputs, tmp_path, monkeypatch):
+def _jobs_by_phase(spark, cut_at, fn):
+    """Run fn() at the benchmark session's 2 shuffle partitions (from 8 on,
+    term_stats' range-partitioned write adds one sampling job) and count its
+    Spark jobs from statusTracker group and ungrouped ids. Every call of a
+    (module, name) in cut_at starts and ends a sub-phase. Returns fn's
+    result, the total and the job count of each sub-phase in order."""
+    sc, group = spark.sparkContext, "job-budget"
+    cuts = [_settled_job_ids(sc, group)]
+
+    def counting(inner):
+        def counted(*a, **kw):
+            cuts.append(_settled_job_ids(sc, group))
+            out = inner(*a, **kw)
+            cuts.append(_settled_job_ids(sc, group))
+            return out
+        return counted
+
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.MonkeyPatch.context() as mp:
+        for mod, name in cut_at:
+            mp.setattr(mod, name, counting(getattr(mod, name)))
+        spark.conf.set("spark.sql.shuffle.partitions", "2")
+        sc.setJobGroup(group, "job budget")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+    cuts.append(_settled_job_ids(sc, group))
+    return (out, len(cuts[-1] - cuts[0]),
+            [len(hi - lo) for lo, hi in zip(cuts[:-1], cuts[1:])])
+
+
+def test_merge_indexes_job_budget(spark, merge_inputs, tmp_path):
     """merge_indexes runs no exchange for the rewrite, no re-scan for segment
-    metrics and no schema-inference job; jobs are attributed to sub-phases
-    so a regression names the one that grew. Counted at the benchmark
-    session's 2 shuffle partitions: from 8 on, term_stats' range-partitioned
-    write adds one sampling job."""
+    metrics and no schema-inference job, and writes the duplicate-key losers
+    once; jobs are attributed to sub-phases so a regression names the one
+    that grew."""
     from solr_mapreduce_indexer_spark.index import merge
 
     dirs, _ = merge_inputs
-    sc, group = spark.sparkContext, "merge-budget"
-    cuts = [_settled_job_ids(sc, group)]
-
-    def wrap(name):
-        fn = getattr(merge, name)
-
-        def counted(*a, **kw):
-            cuts.append(_settled_job_ids(sc, group))
-            out = fn(*a, **kw)
-            cuts.append(_settled_job_ids(sc, group))
-            return out
-        monkeypatch.setattr(merge, name, counted)
-
-    wrap("write_term_stats")
-    wrap("resolve_duplicate_keys")
-    parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    sc.setJobGroup(group, "merge_indexes job budget")
-    try:
-        m = merge.merge_indexes(spark, [dirs["a"], dirs["b"]],
-                                str(tmp_path / "m"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
-    cuts.append(_settled_job_ids(sc, group))
+    m, total, per = _jobs_by_phase(
+        spark, [(merge, "write_term_stats"), (merge, "resolve_duplicate_keys")],
+        lambda: merge.merge_indexes(spark, [dirs["a"], dirs["b"]],
+                                    str(tmp_path / "m")))
     assert m["stats"]["n_tombstones"] == 6
 
     labels = ["docmap+postings rewrite", "term_stats", "between",
               "duplicate keys", "metrics+manifest"]
-    per_phase = {lab: len(hi - lo)
-                 for lab, lo, hi in zip(labels, cuts[:-1], cuts[1:])}
-    total = len(cuts[-1] - cuts[0])
+    per_phase = dict(zip(labels, per))
     assert total <= MERGE_JOB_BUDGET, (
         f"merge_indexes ran {total} Spark jobs per call (budget "
         f"{MERGE_JOB_BUDGET}); per sub-phase: {per_phase}")
     assert per_phase["metrics+manifest"] == 0, per_phase
+
+
+def test_stream_finalize_job_budget(spark, merge_inputs, tmp_path):
+    """append_batch takes its stats from the docmap write, and
+    finalize_stream_index concatenates three generations through
+    concat_segments: no schema inference, no docmap exchange, one postings
+    exchange, and one file per served shard."""
+    from solr_mapreduce_indexer_spark.index import merge
+    from solr_mapreduce_indexer_spark.sources.transcripts import (
+        TRANSCRIPT_SCHEMA)
+    from solr_mapreduce_indexer_spark.streaming import ingest
+
+    _, pdf_a = merge_inputs
+    cfg, idx = IndexConfig(shards=2), str(tmp_path / "stream")
+    df = spark.createDataFrame(pdf_a, schema=TRANSCRIPT_SCHEMA)
+    third = F.abs(F.xxhash64("conv_id")) % 3
+    for gen in range(3):
+        ck, total, _ = _jobs_by_phase(spark, [], lambda: ingest.append_batch(
+            spark, df.where(third == gen), cfg, idx, gen=gen))
+        assert ck["n_docs"] > 0
+        assert total <= APPEND_JOB_BUDGET, (
+            f"append_batch ran {total} Spark jobs for generation {gen} "
+            f"(budget {APPEND_JOB_BUDGET})")
+
+    m, total, per = _jobs_by_phase(
+        spark, [(merge, "write_term_stats"), (merge, "resolve_duplicate_keys"),
+                (ingest, "segment_metrics")],
+        lambda: ingest.finalize_stream_index(spark, idx, cfg))
+    labels = ["docmap+postings concat", "term_stats", "between term_stats "
+              "and duplicate keys", "duplicate keys", "between duplicate "
+              "keys and segment_metrics", "segment_metrics", "manifest"]
+    per_phase = dict(zip(labels, per))
+    assert total <= FINALIZE_JOB_BUDGET, (
+        f"finalize_stream_index ran {total} Spark jobs over 3 generations "
+        f"(budget {FINALIZE_JOB_BUDGET}); per sub-phase: {per_phase}")
+    assert per_phase["manifest"] == 0, per_phase
+    assert m["stats"]["n_docs"] == len(pdf_a)
+
+    shard_dirs = glob.glob(os.path.join(m["levels"][-1]["path"], "shard_id=*"))
+    assert len(shard_dirs) == cfg.shards
+    for d in shard_dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
 
 
 @pytest.mark.parametrize("kind", ["batch", "merged_of_merged", "compacted",

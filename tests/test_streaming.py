@@ -54,6 +54,9 @@ def test_generations_cover_all_rows(spark, corpus, streamed):
     gens = list_generations(streamed)
     assert len(gens) == 3
     assert sum(g["n_docs"] for g in gens) == df.count()
+    for g in gens:  # the stats a generation records match its docmap
+        tokens = spark.read.parquet(g["docmap"]).agg(F.sum("doc_len")).first()[0]
+        assert g["total_tokens"] == tokens
 
 
 def test_append_is_idempotent(spark, corpus, streamed):

@@ -125,6 +125,7 @@ def test_reject_resolver_fails_loudly(spark, tmp_path):
     build_index(spark, _tr(spark, rows2), cfg, ib)
     with pytest.raises(ValueError, match="duplicate keys"):
         merge_indexes(spark, [ia, ib], str(tmp_path / "m"))
+    assert not (tmp_path / "m" / "tombstones").exists()
 
 
 def test_range_load_sees_overwrite(tmp_path):
