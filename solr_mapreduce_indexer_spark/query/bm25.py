@@ -6,17 +6,18 @@ Semantics target (SURVEY §2.7): Lucene/Solr 7.7.2 BM25Similarity —
   score(q,d)  = Σ_t idf(t) * tfnorm(t,d)        (k1=1.2, b=0.75)
 AND = posting intersection, OR = union; ties break by ascending doc_id.
 
-Physical plan (default, Solr/ES fan-out shape): ONE task per shard reads its
-own hive partition of the served level directly — pyarrow with the batch's
-`term IN (...)` pushed down; segments are written sorted by term so
-row-group stats prune — and scores every query in the batch vectorized
-(numpy), emitting per-(query, shard) top-k candidates; a final global
-orderBy(score desc, doc_id asc).limit(k) resolves each query. No shuffle
-touches payload bytes. A legacy plan (parquet scan stage → hash exchange →
-per-shard applyInPandas kernel) remains as the automatic fallback for
-storage only Spark's Hadoop conf can open. All float math is float64 with a
-fixed term-iteration order (sorted terms) so results are reproducible and
-oracle-comparable across both plans.
+Physical plan (default, Solr/ES fan-out shape): the batch runs as ONE stage
+of min(|shards|, defaultParallelism) tasks, each handed several shard ids.
+For each of its shards a task reads that shard's own hive partition of the
+served level directly — pyarrow with the batch's `term IN (...)` pushed
+down; segments are written sorted by term so row-group stats prune — and
+scores every query in the batch vectorized (numpy) in one kernel call,
+emitting per-(query, shard) top-k candidates; the driver ranks them into
+each query's global top-k. No shuffle touches payload bytes. A legacy plan
+(parquet scan stage → hash exchange → per-shard applyInPandas kernel)
+remains as the automatic fallback for storage only Spark's Hadoop conf can
+open. All float math is float64 with a fixed term-iteration order (sorted
+terms) so results are reproducible and oracle-comparable across both plans.
 
 Block-max pruning (SURVEY §2.7 Q5; Ding & Suel SIGIR'11, reference semantics
 from shaded Lucene's BlockMax WAND): every block stores max_tfnorm, so
@@ -44,7 +45,9 @@ with a 1e-9 absolute slack, so skipped docs are provably below the k-th score
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 import os
 from dataclasses import dataclass
 
@@ -137,32 +140,33 @@ DECODE_STATS = {"blocks_decoded": 0, "pos_blocks_decoded": 0,
 _EPS = 1e-9  # absolute slack on bound-vs-theta comparisons (scores are O(10))
 
 DIRECT_FETCH = True
-"""When True (default), each shard's scoring task reads its own hive
-partition of the served postings level directly (pyarrow, term-IN pushdown,
-row-group pruning via the term-sorted file layout) — a Solr/ES shard reading
-its own segment files. The whole batch then runs as ONE stage of |shards|
-tasks with no exchange. The legacy plan (parquet scan stage → hash shuffle →
-per-shard kernel) moved every matching block's payload bytes through the
-shuffle — on positional indexes including pos_bytes for every term in the
-batch — which at 16M docs is GBs per Zipf-head batch and was the dominant
-poorly-scaling query cost. Falls back to the legacy plan when pyarrow's own
-filesystem stack can't see the postings path (same credential split as the
-docmap point-fetch; see README "Storage access")."""
+"""When True (default), each scoring task reads its shards' hive partitions
+of the served postings level directly (pyarrow, term-IN pushdown, row-group
+pruning via the term-sorted file layout) — a Solr/ES shard reading its own
+segment files. The whole batch then runs as ONE stage with no exchange. The
+legacy plan (parquet scan stage → hash shuffle → per-shard kernel) moved
+every matching block's payload bytes through the shuffle — on positional
+indexes including pos_bytes for every term in the batch — which at 16M docs
+is GBs per Zipf-head batch and was the dominant poorly-scaling query cost.
+Falls back to the legacy plan when pyarrow's own filesystem stack can't see
+the postings path (same credential split as the docmap point-fetch; see
+README "Storage access")."""
 
 
 def _direct_fetch_gen(postings_path: str, present: list[str],
                       phrase_terms: list[str], score_fn):
-    """mapInPandas generator: rows of shard ids → scored candidates.
+    """mapInPandas generator: rows of shard ids → scored candidates, one
+    `score_fn(blocks, pos_fetch)` call per shard id.
 
     Reads ONLY the columns the kernel touches (term, doc range, max_tfnorm,
     payload bytes) — the legacy exchange also carried n/max_tf/sum_tf/min_dl.
-    Position payloads are not read up front at all: the kernel's phase 2
-    calls back into `pos_fetch` for exactly the candidate-overlapping blocks
-    of the batch's PHRASE terms (filter `term == t AND first_doc IN (...)`,
-    row-group pruned by the term-sorted layout) — a Zipf-head phrase term's
-    non-candidate position payloads never leave storage, where previously
-    every block of every phrase term paid the pos_bytes I/O even though the
-    lazy decode then ignored most of it."""
+    Position payloads are not read up front at all: the kernel calls
+    `pos_fetch({term: [first_doc, ...]})` once per shard with every
+    candidate-overlapping block of the batch's PHRASE queries, and gets back
+    `{(term, first_doc): pos_bytes}` from ONE scan (filter: OR over terms of
+    `term == t AND first_doc IN (...)`, row-group pruned by the term-sorted
+    layout) — a Zipf-head phrase term's non-candidate position payloads never
+    leave storage."""
     cols = ["term", "first_doc", "last_doc", "max_tfnorm",
             "doc_bytes", "tf_bytes", "len_bytes"]
 
@@ -173,12 +177,12 @@ def _direct_fetch_gen(postings_path: str, present: list[str],
         root = local_path(postings_path).rstrip("/")
         for pdf in pdfs:
             for sid in pdf["shard_id"].tolist():
-                # Each task opens ONLY its own partition directory: a
-                # root-level hive discovery would list all S shard dirs in
-                # every one of the S tasks — O(S²) storage listings per
-                # batch at 1000 shards. (Dir name is Spark's partitionBy
-                # layout; shard ids come from the manifest, so the dir
-                # exists for every id handed to us.)
+                # Each shard is read from ONLY its own partition directory: a
+                # root-level hive discovery would list all S shard dirs once
+                # per shard — O(S²) storage listings per batch at 1000
+                # shards. (Dir name is Spark's partitionBy layout; shard ids
+                # come from the manifest, so the dir exists for every id
+                # handed to us.)
                 ds = pads.dataset(f"{root}/shard_id={int(sid)}",
                                   format="parquet")
                 blocks = ds.to_table(
@@ -186,13 +190,17 @@ def _direct_fetch_gen(postings_path: str, present: list[str],
                     filter=pads.field("term").isin(present)).to_pandas()
                 pos_fetch = None
                 if phrase_terms and "pos_bytes" in ds.schema.names:
-                    def pos_fetch(term, first_docs, ds=ds):
-                        t = ds.to_table(
-                            columns=["first_doc", "pos_bytes"],
-                            filter=(pads.field("term") == term)
+                    def pos_fetch(needs, ds=ds):
+                        flt = functools.reduce(operator.or_, (
+                            (pads.field("term") == t)
                             & pads.field("first_doc").isin(
-                                [int(x) for x in first_docs]))
-                        return dict(zip(t["first_doc"].to_pylist(),
+                                [int(x) for x in fds])
+                            for t, fds in needs.items()))
+                        t = ds.to_table(
+                            columns=["term", "first_doc", "pos_bytes"],
+                            filter=flt)
+                        return dict(zip(zip(t["term"].to_pylist(),
+                                            t["first_doc"].to_pylist()),
                                         t["pos_bytes"].to_pylist()))
                 yield score_fn(blocks, pos_fetch)
     return gen
@@ -202,16 +210,29 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
                         avgdl: float, k1: float, b: float,
                         tombstones_path: str | None = None,
                         doc_bits: int = 40):
-    """applyInPandas kernel over one shard's blocks for the whole query
-    batch. Input pdf: term, first_doc, last_doc, n, max_tfnorm, doc_bytes,
-    tf_bytes, len_bytes. Output: query_id, doc_id, score (per-shard top-k
-    candidates).
+    """Kernel over one shard's blocks for the whole query batch. Input pdf:
+    term, first_doc, last_doc, max_tfnorm, doc_bytes, tf_bytes, len_bytes
+    (other columns are ignored), in any row order — a merged shard directory
+    yields its files' rows one file after another. Output: query_id, doc_id,
+    score (per-shard top-k candidates).
 
     Decode sharing is the key batch economics: blocks are cached per
     (term, block), so a term referenced by many queries (Zipf head) is
     decoded at most once per shard per batch regardless of which query (or
-    which pruning path) touches it. One task per shard mirrors how a Solr/ES
-    query fans out — per-shard work is the unit of query parallelism.
+    which pruning path) touches it. One call per shard mirrors how a Solr/ES
+    query fans out — per-shard work is the unit of query parallelism; a task
+    runs the kernel for each of the shards it was handed.
+
+    Position payloads of a PHRASE batch are read in one call per shard:
+    phase 1 (doc-level candidates) runs for every PHRASE query first, then
+    `pos_fetch({term: [first_doc, ...]}) → {(term, first_doc): pos_bytes}`
+    is called once with every candidate-overlapping block of every phrase
+    slot. Legacy input carries a pos_bytes column instead and is served
+    through the same contract. Phase 2 decodes positions lazily, slot by
+    slot, so DECODE_STATS["pos_blocks_fetched"] can exceed
+    "pos_blocks_decoded" — but only when a phrase's slot intersection
+    empties before its last slot, leaving the later slots' fetched blocks
+    undecoded.
 
     Tombstones (duplicate-key losers awaiting compaction) are read HERE, per
     shard: the kernel loads only its own doc-id slice of the tombstone
@@ -221,21 +242,37 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
     O(shard slice) per task."""
 
     def score(pdf: pd.DataFrame, pos_fetch=None) -> pd.DataFrame:
-        # pos_fetch(term, first_docs) → {first_doc: pos_bytes}: supplied by
-        # the direct-fetch plan so position payloads are READ (not just
-        # decoded) only for candidate-overlapping blocks; the legacy
-        # applyInPandas plan passes pos_bytes in pdf instead.
+        # pos_fetch: supplied by the direct-fetch plan; the legacy plan ships
+        # a pos_bytes column instead, served below through the same contract
         tune_allocator()
+        # Rows sorted by (term, first_doc) once, then numpy slices per term:
+        # row order is file order, and a shard directory may hold several
+        # files, so the sort is needed.
+        codes, uniq = pd.factorize(pdf["term"], sort=True)
+        rows = np.lexsort((pdf["first_doc"].to_numpy(), codes))
+        starts = np.searchsorted(codes[rows], np.arange(len(uniq) + 1))
+        span = {t: (starts[j], starts[j + 1]) for j, t in enumerate(uniq)}
+        firsts_all, lasts_all, mx_all, db_all, tb_all, lb_all = (
+            pdf[c].to_numpy()[rows] for c in (
+                "first_doc", "last_doc", "max_tfnorm",
+                "doc_bytes", "tf_bytes", "len_bytes"))
         tombstones = None
         if tombstones_path is not None and len(pdf):
             tombstones = load_tombstones_range(
-                tombstones_path, int(pdf["first_doc"].min()),
-                int(pdf["last_doc"].max()), doc_bits)
+                tombstones_path, int(firsts_all.min()),
+                int(lasts_all.max()), doc_bits)
             if not len(tombstones):
                 tombstones = None
-        by_term: dict[str, pd.DataFrame] = {
-            t: g.sort_values("first_doc").reset_index(drop=True)
-            for t, g in pdf.groupby("term")}
+        if "pos_bytes" in pdf.columns:
+            pb_all = pdf["pos_bytes"].to_numpy()[rows]
+
+            def pos_fetch(needs):
+                out = {}
+                for t, fds in needs.items():
+                    s, e = span[t]
+                    ix = s + np.searchsorted(firsts_all[s:e], fds)
+                    out.update(zip(((t, f) for f in fds), pb_all[ix]))
+                return out
         meta: dict[str, tuple] = {}
         block_cache: dict[tuple[str, int], tuple[np.ndarray, np.ndarray]] = {}
 
@@ -243,11 +280,9 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
             """(firsts, lasts, block score ubs, doc/tf/len byte arrays)."""
             m = meta.get(t)
             if m is None:
-                g = by_term[t]
-                m = (g["first_doc"].to_numpy(), g["last_doc"].to_numpy(),
-                     idfs[t] * g["max_tfnorm"].to_numpy(),
-                     g["doc_bytes"].to_numpy(), g["tf_bytes"].to_numpy(),
-                     g["len_bytes"].to_numpy())
+                s, e = span[t]
+                m = (firsts_all[s:e], lasts_all[s:e], idfs[t] * mx_all[s:e],
+                     db_all[s:e], tb_all[s:e], lb_all[s:e])
                 meta[t] = m
             return m
 
@@ -290,6 +325,7 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
             return np.flatnonzero(hi > lo)
 
         pos_cache: dict[tuple[str, int], tuple] = {}
+        pos_map: dict[tuple[str, int], bytes] = {}  # fetched, not decoded
 
         def decode_pos_blocks(t: str, idx: np.ndarray):
             """Decode the given block ordinals of term t WITH positions →
@@ -300,27 +336,17 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
             blocks reach here through blocks_hitting, so a Zipf-head phrase
             term never decodes its full posting+position stream — Lucene
             PhraseQuery's two-phase iteration, where positions are consulted
-            only for docs passing the conjunctive doc-level approximation."""
+            only for docs passing the conjunctive doc-level approximation.
+            Payloads come from pos_map, which the batch's one pos_fetch call
+            filled with every block phase 2 can ask for."""
             firsts, _lasts, _ubs, db, tb, lb = term_meta(t)
-            pb_col = by_term[t]["pos_bytes"].to_numpy() \
-                if "pos_bytes" in by_term[t].columns else None
             idx_sorted = np.sort(np.asarray(idx, dtype=np.int64))
-            fetched: dict[int, bytes] = {}
-            if pb_col is None and pos_fetch is not None:
-                # point-read exactly the missing candidate blocks' position
-                # payloads (first_doc is unique per block within a term)
-                need = [int(firsts[int(i)]) for i in idx_sorted
-                        if (t, int(i)) not in pos_cache]
-                if need:
-                    fetched = pos_fetch(t, need)
-                    DECODE_STATS["pos_blocks_fetched"] += len(fetched)
             ds_, ts_, ls_, ps_ = [], [], [], []
             for i in idx_sorted:
                 i = int(i)
                 got = pos_cache.get((t, i))
                 if got is None:
-                    pb = pb_col[i] if pb_col is not None \
-                        else fetched.get(int(firsts[i]))
+                    pb = pos_map.pop((t, int(firsts[i])), None)
                     if pb is None or len(pb) == 0:
                         raise ValueError(
                             "PHRASE queries require an index built with "
@@ -358,12 +384,74 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
             add[pos[hit]] = c[hit]
             return cand_docs[keep_mask], (cand_scores + add)[keep_mask]
 
+        PAD = 64  # phrase slot shift head-room; bounds phrase length
+
+        def phrase_candidates(terms: list[str]) -> np.ndarray:
+            """PHRASE phase 1: sorted docs holding every phrase term.
+            Exact-phrase BM25 (Lucene PhraseQuery semantics): docs
+            containing the terms at CONSECUTIVE positions; tf = number of
+            phrase occurrences; weight = Σ idf(tᵢ) over the phrase slots.
+            CONJUNCTION-DRIVEN, two-phase like Lucene 7.7.2 PhraseQuery (the
+            reference output format's evaluator): phase 1 intersects doc
+            sets rarest-term-outward — only the rarest term's postings
+            decode fully; every other term decodes only blocks whose doc
+            range intersects surviving candidates (block metadata, no
+            payload touch otherwise). Phase 2 decodes POSITIONS only for
+            candidate-overlapping blocks and intersects per-slot
+            (doc, pos − slot) key sets; survivors' counts are the phrase
+            freqs. A Zipf-head term in the phrase therefore costs
+            O(candidate blocks), not a full posting+position decode."""
+            uniqs = sorted(set(terms))
+            if not terms or any(t not in span for t in uniqs):
+                return np.empty(0, np.int64)
+            if len(terms) > PAD:
+                raise ValueError(f"phrase longer than {PAD} terms "
+                                 "is unsupported")
+            if pos_fetch is None:
+                raise ValueError(
+                    "PHRASE queries require an index built with "
+                    "positions=True (IndexConfig.positions)")
+            by_rarity = sorted(uniqs, key=lambda t: (-idfs[t], t))
+            # Phase 1 is postings-only (decode_blocks): the doc/tf/len
+            # streams are separate payloads from positions, so a block ruled
+            # out here NEVER pays position decode — even the lead term's.
+            # Positions are decoded lazily in phase 2 for candidate-
+            # overlapping blocks only (Lucene's two-phase iterator:
+            # matches() runs only on approximation hits).
+            t0 = by_rarity[0]
+            cand, _c0 = decode_blocks(t0, np.arange(len(term_meta(t0)[0])))
+            for t in by_rarity[1:]:
+                d, _c = decode_blocks(t, blocks_hitting(t, cand))
+                cand = cand[np.isin(cand, d, assume_unique=True)]
+                if not len(cand):
+                    break
+            return cand
+
+        # Phase 1 of every PHRASE query in the batch first, then ONE read of
+        # the position payloads all their phase-2 slots can touch.
+        phrase_cand: dict[int, np.ndarray] = {}
+        needs: dict[str, set] = {}
+        for qi, q in enumerate(queries):
+            if q["mode"] != "PHRASE":
+                continue
+            cand = phrase_candidates(q["terms"])
+            if not len(cand):
+                continue
+            phrase_cand[qi] = cand
+            for t in set(q["terms"]):
+                needs.setdefault(t, set()).update(
+                    term_meta(t)[0][blocks_hitting(t, cand)].tolist())
+        if needs:
+            got = pos_fetch({t: sorted(v) for t, v in needs.items()})
+            DECODE_STATS["pos_blocks_fetched"] += len(got)
+            pos_map.update(got)
+
         out_q, out_d, out_s = [], [], []
-        for q in queries:
+        for qi, q in enumerate(queries):
             k = q["k"]
             if q["mode"] == "AND":
                 terms = q["terms"]
-                if any(t not in by_term for t in terms):
+                if any(t not in span for t in terms):
                     continue  # this shard can't contain a conjunctive match
                 # essential list = rarest term (highest idf); process its
                 # blocks in descending score-bound order with early stop.
@@ -403,50 +491,12 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
                 scores = (np.concatenate(acc_s) if acc_s
                           else np.empty(0, np.float64))
             elif q["mode"] == "PHRASE":
-                # Exact-phrase BM25 (Lucene PhraseQuery semantics): docs
-                # containing the terms at CONSECUTIVE positions; tf = number
-                # of phrase occurrences; weight = Σ idf(tᵢ) over the phrase
-                # slots. CONJUNCTION-DRIVEN, two-phase like Lucene 7.7.2
-                # PhraseQuery (the reference output format's evaluator):
-                # phase 1 intersects doc sets rarest-term-outward — only the
-                # rarest term's postings decode fully; every other term
-                # decodes only blocks whose doc range intersects surviving
-                # candidates (block metadata, no payload touch otherwise).
-                # Phase 2 decodes POSITIONS only for candidate-overlapping
-                # blocks and intersects per-slot (doc, pos − slot) key sets;
-                # survivors' counts are the phrase freqs. A Zipf-head term
-                # in the phrase therefore costs O(candidate blocks), not a
-                # full posting+position decode.
+                # phase 2 over the candidates phase 1 left (see
+                # phrase_candidates)
+                cand = phrase_cand.get(qi)
+                if cand is None:
+                    continue
                 terms = q["terms"]  # ordered, duplicates meaningful
-                uniqs = sorted(set(terms))
-                if not terms or any(t not in by_term for t in uniqs):
-                    continue
-                PAD = 64  # slot shift head-room; bounds phrase length
-                if len(terms) > PAD:
-                    raise ValueError(f"phrase longer than {PAD} terms "
-                                     "is unsupported")
-                if "pos_bytes" not in pdf.columns and pos_fetch is None:
-                    raise ValueError(
-                        "PHRASE queries require an index built with "
-                        "positions=True (IndexConfig.positions)")
-                by_rarity = sorted(uniqs, key=lambda t: (-idfs[t], t))
-                # Phase 1 is postings-only (decode_blocks): the doc/tf/len
-                # streams are separate payloads from positions, so a block
-                # ruled out here NEVER pays position decode — even the lead
-                # term's. Positions are decoded lazily in phase 2 for
-                # candidate-overlapping blocks only (Lucene's two-phase
-                # iterator: matches() runs only on approximation hits).
-                t0 = by_rarity[0]
-                d0, _c0 = decode_blocks(
-                    t0, np.arange(len(term_meta(t0)[0])))
-                cand = d0
-                for t in by_rarity[1:]:
-                    d, _c = decode_blocks(t, blocks_hitting(t, cand))
-                    cand = cand[np.isin(cand, d, assume_unique=True)]
-                    if not len(cand):
-                        break
-                if not len(cand):
-                    continue
                 dls_cand = None
                 keys = None
                 for i, t in enumerate(terms):
@@ -491,7 +541,7 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
                                                avgdl, k1, b)
             else:  # OR — vectorized MaxScore (Turtle & Flood '95) with
                    # block-max skipping in both phases (Q5).
-                terms = [t for t in q["terms"] if t in by_term]
+                terms = [t for t in q["terms"] if t in span]
                 if not terms:
                     continue
                 # term-level score upper bound: idf * max block tfnorm
@@ -568,6 +618,10 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
     return score
 
 
+_RESULT_SCHEMA = ("query_id long, rank int, doc_id long, conv_id string, "
+                  "turn_idx int, score double")
+
+
 def run_queries(spark: SparkSession, h: IndexHandle,
                 queries: list[dict]) -> DataFrame:
     """Batch top-k evaluation. Each query: {query_id, terms: [str], mode:
@@ -610,19 +664,20 @@ def run_queries(spark: SparkSession, h: IndexHandle,
                      "mode": q.get("mode", "AND"),
                      "k": int(q.get("k", 10))} for q in queries]
     present = [t for t in all_terms if t in dfs]
-    empty = spark.createDataFrame(
-        [], "query_id long, rank int, doc_id long, conv_id string, "
-            "turn_idx int, score double")
     if not present:
-        return empty
+        return spark.createDataFrame([], _RESULT_SCHEMA)
 
-    # One kernel task per shard: query parallelism IS the shard count,
-    # exactly like a Solr/ES fan-out — provision shards >= cores per the
-    # deployment's query throughput needs. (A per-(shard, query-slice)
-    # fan-out was measured here and REGRESSED 2x on Zipf-head batches:
-    # the same hot terms appear in every slice, so slicing multiplies the
-    # dominant decode work by the slice count while the per-shard batch
-    # kernel already shares each decoded block across all queries.)
+    # One kernel call per shard, like a Solr/ES fan-out, with the shards
+    # packed into one wave of min(|shards|, defaultParallelism) tasks: every
+    # Python task pays a fixed start-up cost. defaultParallelism is read
+    # once, when the batch is planned, so executors that register later get
+    # none of this batch (README "Query parallelism"). Query parallelism is
+    # still bounded by the shard count — provision shards >= cores. Shards
+    # are never split by query slice: a per-(shard, query-slice) fan-out was
+    # measured here and REGRESSED 2x on Zipf-head batches, because the same
+    # hot terms appear in every slice, so slicing multiplies the dominant
+    # decode work by the slice count while the per-shard batch kernel
+    # already shares each decoded block across all queries.
     kernel = _score_shard_kernel(norm_queries, idfs, h.avgdl,
                                  cfg.k1, cfg.b,
                                  tombstones_path=h.tombstones_path,
@@ -646,9 +701,10 @@ def run_queries(spark: SparkSession, h: IndexHandle,
             phrase_terms = sorted({t for q in norm_queries
                                    if q["mode"] == "PHRASE"
                                    for t in q["terms"] if t in dfs})
+            sc = spark.sparkContext
             sdf = spark.createDataFrame(
-                spark.sparkContext.parallelize(
-                    [(int(s),) for s in h.shard_ids], len(h.shard_ids)),
+                sc.parallelize([(int(s),) for s in h.shard_ids],
+                               min(len(h.shard_ids), sc.defaultParallelism)),
                 "shard_id int")
             cand = sdf.mapInPandas(
                 _direct_fetch_gen(h.postings_path, present, phrase_terms,
@@ -682,14 +738,13 @@ def run_queries(spark: SparkSession, h: IndexHandle,
         raise RuntimeError(
             f"{len(cpdf)} candidate rows collected, above the |shards| x sum(k) "
             f"bound of {bound} ({len(h.shard_ids)} shards)")
+    if len(cpdf):
+        cpdf = cpdf.sort_values(["query_id", "score", "doc_id"],
+                                ascending=[True, False, True], kind="stable")
+        cpdf["rank"] = cpdf.groupby("query_id").cumcount() + 1
+        cpdf = cpdf[cpdf["rank"] <= cpdf["query_id"].map(ks)]
     if not len(cpdf):
-        return empty
-    cpdf = cpdf.sort_values(["query_id", "score", "doc_id"],
-                            ascending=[True, False, True], kind="stable")
-    cpdf["rank"] = cpdf.groupby("query_id").cumcount() + 1
-    cpdf = cpdf[cpdf["rank"] <= cpdf["query_id"].map(ks)]
-    if not len(cpdf):
-        return empty
+        return spark.createDataFrame([], _RESULT_SCHEMA)
 
     # FETCH the ≤ Σ k docmap rows as coordinator point lookups (the Solr/ES
     # stored-fields fetch phase): pyarrow.dataset prunes to the touched
@@ -738,9 +793,7 @@ def run_queries(spark: SparkSession, h: IndexHandle,
         raise RuntimeError(f"scored doc ids missing from docmap: {missing}")
     out = out[["query_id", "rank", "doc_id", "conv_id", "turn_idx", "score"]]
     out["turn_idx"] = out["turn_idx"].astype(np.int32)
-    return spark.createDataFrame(
-        out, "query_id long, rank int, doc_id long, conv_id string, "
-             "turn_idx int, score double")
+    return spark.createDataFrame(out, _RESULT_SCHEMA)
 
 
 def bm25_topk(spark: SparkSession, h: IndexHandle, terms: list[str],

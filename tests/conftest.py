@@ -10,6 +10,26 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from solr_mapreduce_indexer_spark.session import get_spark  # noqa: E402
 
 
+def settled_job_ids(sc, group):
+    """Spark job ids in `group` plus the ungrouped ones, read from
+    statusTracker once the id set stops growing (the listener bus that
+    feeds it is asynchronous)."""
+    import time
+    tr = sc.statusTracker()
+
+    def ids():
+        return (set(tr.getJobIdsForGroup(None))
+                | set(tr.getJobIdsForGroup(group)))
+    got, deadline = ids(), time.monotonic() + 5.0
+    while time.monotonic() < deadline:
+        time.sleep(0.2)
+        nxt = ids()
+        if nxt == got:
+            break
+        got = nxt
+    return got
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app="engine-tests", master="local[4]", shuffle_partitions=8)

@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import settled_job_ids
 from solr_mapreduce_indexer_spark.config import IndexConfig
 from solr_mapreduce_indexer_spark.index.build import build_index
 from solr_mapreduce_indexer_spark.index.manifest import checkpoint_path, read_manifest
@@ -175,24 +176,6 @@ def merge_inputs(spark, tmp_path_factory):
     return dirs, pdf_a
 
 
-def _job_ids(sc, group):
-    tr = sc.statusTracker()
-    return set(tr.getJobIdsForGroup(None)) | set(tr.getJobIdsForGroup(group))
-
-
-def _settled_job_ids(sc, group):
-    # the listener bus is asynchronous: wait until the id set stops growing
-    import time
-    ids, deadline = _job_ids(sc, group), time.monotonic() + 5.0
-    while time.monotonic() < deadline:
-        time.sleep(0.2)
-        nxt = _job_ids(sc, group)
-        if nxt == ids:
-            break
-        ids = nxt
-    return ids
-
-
 def _jobs_by_phase(spark, cut_at, fn):
     """Run fn() at the benchmark session's 2 shuffle partitions (from 8 on,
     term_stats' range-partitioned write adds one sampling job) and count its
@@ -200,13 +183,13 @@ def _jobs_by_phase(spark, cut_at, fn):
     (module, name) in cut_at starts and ends a sub-phase. Returns fn's
     result, the total and the job count of each sub-phase in order."""
     sc, group = spark.sparkContext, "job-budget"
-    cuts = [_settled_job_ids(sc, group)]
+    cuts = [settled_job_ids(sc, group)]
 
     def counting(inner):
         def counted(*a, **kw):
-            cuts.append(_settled_job_ids(sc, group))
+            cuts.append(settled_job_ids(sc, group))
             out = inner(*a, **kw)
-            cuts.append(_settled_job_ids(sc, group))
+            cuts.append(settled_job_ids(sc, group))
             return out
         return counted
 
@@ -222,7 +205,7 @@ def _jobs_by_phase(spark, cut_at, fn):
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
             spark.conf.set("spark.sql.shuffle.partitions", parts)
-    cuts.append(_settled_job_ids(sc, group))
+    cuts.append(settled_job_ids(sc, group))
     return (out, len(cuts[-1] - cuts[0]),
             [len(hi - lo) for lo, hi in zip(cuts[:-1], cuts[1:])])
 

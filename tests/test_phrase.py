@@ -247,6 +247,26 @@ def test_phrase_prunes_hot_term_blocks(zipf_positional):
         assert got[d] == pytest.approx(want[d], rel=1e-12)
 
 
+def _table_fetcher(pdf, requested=None, calls=None):
+    """A pos_fetch over an in-memory block table with the direct plan's
+    contract ({term: [first_doc, ...]} → {(term, first_doc): pos_bytes});
+    records the requested blocks per term and each call's needs."""
+    def pos_fetch(needs):
+        if calls is not None:
+            calls.append(needs)
+        out = {}
+        for term, first_docs in needs.items():
+            if requested is not None:
+                requested.setdefault(term, set()).update(
+                    int(x) for x in first_docs)
+            g = pdf[(pdf["term"] == term)
+                    & pdf["first_doc"].isin(list(first_docs))]
+            out.update(((term, int(f)), pb)
+                       for f, pb in zip(g["first_doc"], g["pos_bytes"]))
+        return out
+    return pos_fetch
+
+
 def test_phrase_position_payload_io_pruned(zipf_positional):
     """Direct-plan shape: position payloads are READ (pos_fetch point-read),
     not shipped up front — and only for candidate-overlapping blocks. The
@@ -263,16 +283,9 @@ def test_phrase_position_payload_io_pruned(zipf_positional):
     # direct-plan simulation: no pos_bytes column; a counting fetcher serves
     # point-reads from the same table
     requested: dict[str, set] = {}
-
-    def pos_fetch(term, first_docs):
-        requested.setdefault(term, set()).update(int(x) for x in first_docs)
-        g = pdf[(pdf["term"] == term)
-                & pdf["first_doc"].isin(list(first_docs))]
-        return dict(zip(g["first_doc"].astype(int), g["pos_bytes"]))
-
     Q.DECODE_STATS["pos_blocks_fetched"] = 0
     got = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75)(
-        pdf.drop(columns=["pos_bytes"]), pos_fetch)
+        pdf.drop(columns=["pos_bytes"]), _table_fetcher(pdf, requested))
     assert dict(zip(got.doc_id, got.score)) == dict(zip(ref.doc_id, ref.score))
 
     n_hot = int((pdf["term"] == "hot").sum())
@@ -281,6 +294,127 @@ def test_phrase_position_payload_io_pruned(zipf_positional):
     assert len(requested["hot"]) < 0.6 * n_hot, (len(requested["hot"]), n_hot)
     assert Q.DECODE_STATS["pos_blocks_fetched"] == sum(
         len(v) for v in requested.values())
+
+
+def test_phrase_early_empty_fetches_undecoded_slot_blocks(zipf_positional):
+    """The one read per shard happens before phase 2, so it also fetches the
+    blocks of slots after the one where a phrase's (doc, pos − slot) key set
+    empties: those are fetched and never decoded. 'rare' is always directly
+    followed by 'hot', so 'rare f01 hot' has doc-level candidates (docs with
+    all three terms) but empties at slot 1; the extra fetched blocks are
+    exactly 'hot's candidate-overlapping blocks. A phrase that survives
+    every slot fetches no block it does not decode."""
+    from solr_mapreduce_indexer_spark.query import bm25 as Q
+    docs, pdf, idfs, doc_lens, avgdl = zipf_positional
+    cand = np.array([d for d, toks in enumerate(docs)
+                     if {"rare", "f01", "hot"} <= set(toks)])
+    assert len(cand)
+    hot = pdf[pdf["term"] == "hot"]
+    lo = np.searchsorted(cand, hot["first_doc"].to_numpy(), side="left")
+    hi = np.searchsorted(cand, hot["last_doc"].to_numpy(), side="right")
+    n_hot_hit = int((hi > lo).sum())
+
+    def stats(terms):
+        for key in ("pos_blocks_fetched", "pos_blocks_decoded"):
+            Q.DECODE_STATS[key] = 0
+        res = Q._score_shard_kernel(
+            [{"query_id": 0, "terms": terms, "mode": "PHRASE", "k": 100}],
+            idfs, avgdl, 1.2, 0.75)(pdf.drop(columns=["pos_bytes"]),
+                                    _table_fetcher(pdf))
+        return (len(res), Q.DECODE_STATS["pos_blocks_fetched"],
+                Q.DECODE_STATS["pos_blocks_decoded"])
+
+    rows, fetched, decoded = stats(["rare", "f01", "hot"])
+    assert rows == 0
+    assert fetched - decoded == n_hot_hit > 0, (fetched, decoded, n_hot_hit)
+    rows, fetched, decoded = stats(["rare", "hot"])
+    assert rows == 40 and fetched == decoded
+
+
+def test_phrase_batch_reads_positions_once(zipf_positional):
+    """Every PHRASE query's phase 1 runs before any position read, so a
+    batch of several phrases calls the fetcher ONCE for the shard, and
+    equals the column-shipped path row for row."""
+    from solr_mapreduce_indexer_spark.query import bm25 as Q
+    docs, pdf, idfs, doc_lens, avgdl = zipf_positional
+    queries = [
+        {"query_id": 0, "terms": ["rare", "hot"], "mode": "PHRASE", "k": 50},
+        {"query_id": 1, "terms": ["f01", "f02"], "mode": "PHRASE", "k": 20},
+        {"query_id": 2, "terms": ["hot", "f03", "f04"], "mode": "PHRASE",
+         "k": 20},
+        {"query_id": 3, "terms": ["f05", "hot"], "mode": "AND", "k": 10},
+    ]
+    ref = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75)(pdf)
+    calls: list = []
+    got = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75)(
+        pdf.drop(columns=["pos_bytes"]), _table_fetcher(pdf, calls=calls))
+    pd.testing.assert_frame_equal(got, ref)
+    assert len(calls) == 1
+    assert {"hot", "f01", "f02", "f03", "f04"} <= set(calls[0])
+    for qid in (0, 1, 2):  # every phrase matched somewhere
+        assert (got["query_id"] == qid).any(), qid
+
+
+def test_direct_fetch_reads_positions_once_per_shard(pidx, spark):
+    """The direct plan's generator hands each shard's kernel one pos_fetch;
+    a batch of several PHRASE queries calls it at most once per shard, and
+    the per-shard candidates equal the legacy column-shipped kernel's."""
+    import pyarrow.dataset as pads
+
+    from solr_mapreduce_indexer_spark.query import bm25 as Q
+    h = load_index(pidx)
+    phrases = [["quick", "brown"], ["lazy", "dog"], ["brown", "cat"],
+               ["repeat", "repeat"]]
+    queries = [{"query_id": i, "terms": t, "mode": "PHRASE", "k": 10}
+               for i, t in enumerate(phrases)]
+    terms = sorted({t for p in phrases for t in p})
+    idfs = {t: 1.0 + i / 10 for i, t in enumerate(terms)}
+    kernel = Q._score_shard_kernel(queries, idfs, h.avgdl, h.cfg.k1, h.cfg.b)
+    calls: list = []
+
+    def counting_kernel(blocks, pos_fetch):
+        def counted(needs):
+            calls[-1] += 1
+            return pos_fetch(needs)
+        calls.append(0)
+        return kernel(blocks, counted)
+
+    gen = Q._direct_fetch_gen(h.postings_path, terms, terms, counting_kernel)
+    got = pd.concat(list(gen(iter([pd.DataFrame(
+        {"shard_id": list(h.shard_ids)})]))), ignore_index=True)
+    assert len(calls) == len(h.shard_ids)
+    assert all(c <= 1 for c in calls) and sum(calls) >= 1, calls
+    legacy = pd.concat([
+        kernel(pads.dataset(f"{h.postings_path}/shard_id={s}",
+                            format="parquet").to_table(
+            filter=pads.field("term").isin(terms)).to_pandas())
+        for s in h.shard_ids], ignore_index=True)
+    pd.testing.assert_frame_equal(got, legacy)
+    assert set(got["query_id"]) == {0, 1, 2, 3}
+
+
+def test_kernel_ignores_input_row_order(zipf_positional):
+    """Rows of one shard arrive in file order, not (term, first_doc) order;
+    shuffled input must score identically, with the pos_bytes column and
+    with a fetcher."""
+    from solr_mapreduce_indexer_spark.query import bm25 as Q
+    docs, pdf, idfs, doc_lens, avgdl = zipf_positional
+    queries = [
+        {"query_id": 0, "terms": ["rare", "hot"], "mode": "PHRASE", "k": 50},
+        {"query_id": 1, "terms": ["f01", "hot"], "mode": "AND", "k": 20},
+        {"query_id": 2, "terms": ["f02", "rare", "f07"], "mode": "OR",
+         "k": 30},
+    ]
+    shuffled = pdf.sample(frac=1, random_state=0)
+    assert not shuffled.index.equals(pdf.index)
+    kern = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75)
+    ref = kern(pdf)
+    assert set(ref["query_id"]) == {0, 1, 2}
+    pd.testing.assert_frame_equal(kern(shuffled), ref)
+    no_pos = shuffled.drop(columns=["pos_bytes"])
+    pd.testing.assert_frame_equal(kern(no_pos, _table_fetcher(pdf)), ref)
+    pd.testing.assert_frame_equal(
+        kern(pdf.drop(columns=["pos_bytes"]), _table_fetcher(pdf)), ref)
 
 
 def test_phrase_position_overflow_fails_loudly():

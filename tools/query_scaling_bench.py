@@ -1,8 +1,13 @@
 """Query-batch scaling evidence at shard counts >= top-level cores.
 
-The per-shard batch kernel is the unit of query parallelism (one task per
-shard, like a Solr/ES fan-out), so the design claim is: provision S >= cores
-and the batch scales with executors. Every round-4 scaling run used S=8
+The per-shard batch kernel is the unit of query parallelism (one kernel
+call per shard, like a Solr/ES fan-out). The batch runs as one stage of
+min(S, defaultParallelism) tasks, so one task holds several shards when
+S > cores; with S < cores some cores get no shard. The design claim this
+tool tests: provision S >= cores and the batch scales with executors. The
+task count is read when each batch is planned (README "Query
+parallelism"): a batch planned while a level's executors are still
+registering runs in fewer tasks. Every round-4 scaling run used S=8
 against 8 top-level cores — the shard cap and the executor count were
 conflated. This tool isolates the query side:
 
