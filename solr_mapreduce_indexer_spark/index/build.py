@@ -41,15 +41,14 @@ from .. import fsutil
 from ..config import IndexConfig
 from ..functions.analysis import tokenize_col
 from ..functions.routing import routing_pandas_udf
-from ..operators.dedup import RESOLVERS
+from ..operators.dedup import RESOLVERS, recency_order
 from . import manifest as mf
 from .codec import encode_blocks
 
 POSTINGS_SCHEMA = ("shard_id int, term string, first_doc long, last_doc long, "
                    "n int, max_tf int, sum_tf long, min_dl int, "
                    "max_tfnorm double, "
-                   "doc_bytes binary, tf_bytes binary, len_bytes binary, "
-                   "pos_bytes binary")
+                   "doc_bytes binary, tf_bytes binary, pos_bytes binary")
 POSTINGS_COLS = [f.split()[0] for f in POSTINGS_SCHEMA.split(", ")]
 # docmap_cols output. Engine reads pass these schemas explicitly: schema
 # inference costs one footer-reading Spark job per read (validate.py keeps
@@ -69,8 +68,9 @@ def prepare_docs(df: DataFrame, cfg: IndexConfig, partitions: int,
     colocates every key's rows — a fact the optimizer cannot know, so the
     naive plan paid a second full-row shuffle for the dedup window (guide §8:
     use problem knowledge the optimizer lacks). retain_most_recent therefore
-    runs INSIDE the shard partitions: sort by (key, ts desc, text desc) and
-    keep each key run's first row via lag() over the same shard clustering —
+    runs INSIDE the shard partitions: sort by (key, ts desc, text desc,
+    role desc, tool desc) and keep each key run's first row via lag() over
+    the same shard clustering —
     identical winners to the per-key row_number()==1 window. The doc-id
     window then reuses both the clustering and the sort prefix, so the whole
     phase is: scan → route UDF → Exchange(shard_id) → sort → dedup-filter →
@@ -95,12 +95,11 @@ def prepare_docs(df: DataFrame, cfg: IndexConfig, partitions: int,
     if cfg.conflict_resolver in ("retain_most_recent", "no_change"):
         clustered = keyed.repartition(partitions, "shard_id")
         if cfg.conflict_resolver == "retain_most_recent":
+            # the same winner-first order as operators.dedup's
+            # retain_most_recent, ties included
             ws = Window.partitionBy("shard_id").orderBy(
                 F.col("conv_id"), F.col("turn_idx"),
-                F.col(cfg.order_by_field).desc_nulls_last(),
-                # deterministic tie-break for identical ts: lexicographically
-                # max text (same ordering as operators.dedup.retain_most_recent)
-                F.col("text").desc_nulls_last())
+                *recency_order(keyed, cfg.order_by_field))
             key = F.struct(F.col("conv_id"), F.col("turn_idx"))
             prev = F.lag(key).over(ws)
             clustered = (clustered
@@ -201,8 +200,7 @@ def _index_shard_mapper(cfg: IndexConfig, avgdl: float):
                 out.append((shard, term, blk["first_doc"], blk["last_doc"],
                             blk["n"], blk["max_tf"], blk["sum_tf"],
                             blk["min_dl"], blk["max_tfnorm"],
-                            blk["doc_bytes"], blk["tf_bytes"],
-                            blk["len_bytes"], b""))
+                            blk["doc_bytes"], blk["tf_bytes"], b""))
         return pd.DataFrame(out, columns=POSTINGS_COLS)
 
     from ..functions.analysis import tokenize_pandas

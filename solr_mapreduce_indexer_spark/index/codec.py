@@ -3,18 +3,21 @@
 The reference delegates posting compression to shaded Lucene 7.7.2 (delta-encoded
 doc IDs + term frequencies in compressed blocks). We re-derive the same layout
 natively: fixed-size blocks of (doc_id delta, tf) pairs, each block carrying
-(first_doc, last_doc, n, max_tf, max_tfnorm) so the query side can do
-block-max pruning (Ding & Suel, SIGIR'11) before decoding.
+(first_doc, last_doc, n, max_tf, min_dl, max_tfnorm) so the query side can do
+block-max pruning (Ding & Suel, SIGIR'11) before decoding. Doc lengths (BM25
+norms) are not in the blocks: like Lucene's per-document norms file they are
+stored once per doc, as the docmap's ``doc_len`` column.
 
 Two value codecs, self-describing via a 1-byte payload tag:
 
 * varint — LEB128, byte-aligned (tag 0)
-* FOR — frame-of-reference fixed-width bit packing (tag 1), the base scheme
-  of the PForDelta family (Zukowski et al., ICDE'06) without exception
-  patching: blocks are 128 postings, short enough that one outlier widening
-  the whole block costs less than patch bookkeeping. Measured on this
-  sandbox: 2.5-4x faster decode than varint and ~2.5x smaller tf streams —
-  FOR is the default (IndexConfig.posting_codec).
+* FOR — fixed-width bit packing (tag 1): every value of a block is packed
+  at the bit width of the block's largest value, with no reference value
+  subtracted and no exception patching (the PForDelta family's base case,
+  Zukowski et al., ICDE'06). Blocks are 128 postings, short enough that one
+  outlier widening the whole block costs less than patch bookkeeping.
+  Measured on this sandbox: 2.5-4x faster decode than varint and ~2.5x
+  smaller tf streams — FOR is the default (IndexConfig.posting_codec).
 
 All kernels are numpy-vectorized — inner loops are over byte/bit position,
 never over values.
@@ -232,14 +235,16 @@ def encode_blocks(doc_ids: np.ndarray, tfs: np.ndarray, doc_lens: np.ndarray,
     """Split one term's sorted postings into fixed-size compressed blocks.
 
     Returns a list of dict rows:
-      first_doc, last_doc, n, doc_bytes, tf_bytes, len_bytes, max_tf, max_tfnorm
+      first_doc, last_doc, n, doc_bytes, tf_bytes, max_tf, sum_tf, min_dl,
+      max_tfnorm
     Block-max soundness: max_tfnorm >= tfnorm of every posting in the block,
     so idf*max_tfnorm is an upper bound on any BM25 contribution in the block.
 
-    Doc lengths are stored per posting (impact-style) so query scoring is
-    self-contained — no norms-table join at query time (Lucene keeps norms in
-    a separate per-doc file; inlining costs ~1 byte/posting and removes a
-    shuffle from the query path).
+    `doc_lens` (one per posting) feed only the block metadata. The lengths
+    themselves are not stored per posting: the docmap keeps each doc's
+    `doc_len` once, and readers fetch one shard's lengths beside its blocks
+    (README "Storage access") — repeating them in every posting list made
+    the length stream the largest column of a served index.
     """
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     tfs = np.asarray(tfs, dtype=np.int64)
@@ -255,7 +260,6 @@ def encode_blocks(doc_ids: np.ndarray, tfs: np.ndarray, doc_lens: np.ndarray,
             "n": int(e - s),
             "doc_bytes": encode_doc_deltas(d, codec),
             "tf_bytes": encode_values(t, codec),
-            "len_bytes": encode_values(dl, codec),
             "max_tf": int(t.max()),
             # sum_tf/min_dl let df/cf derive from block METADATA alone
             # (term_stats without re-exploding tokens) and give an
@@ -267,12 +271,11 @@ def encode_blocks(doc_ids: np.ndarray, tfs: np.ndarray, doc_lens: np.ndarray,
     return out
 
 
-def decode_block(doc_bytes: bytes, tf_bytes: bytes, len_bytes: bytes,
-                 first_doc: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Inverse of encode_blocks for one block → (doc_ids, tfs, doc_lens).
+def decode_block(doc_bytes: bytes, tf_bytes: bytes,
+                 first_doc: int) -> tuple[np.ndarray, np.ndarray]:
+    """Inverse of encode_blocks for one block → (doc_ids, tfs).
     Payloads are self-describing (codec tag byte), so blocks written with
     either codec — even mixed within one index — decode uniformly."""
     docs = decode_doc_deltas(doc_bytes, first_doc)
     tfs = decode_values(tf_bytes).astype(np.int64)
-    lens = decode_values(len_bytes).astype(np.int64)
-    return docs, tfs, lens
+    return docs, tfs

@@ -77,7 +77,7 @@ def _pack_for_groups(vals: np.ndarray, starts: np.ndarray,
                      lens: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """FOR-encode every block at once.
 
-    vals: all posting values (one stream: deltas, tfs, or dls), blocks are
+    vals: all posting values (one stream: deltas, tfs or positions), blocks are
     vals[starts[i] : starts[i]+lens[i]]. Returns (payload, offsets, nbits):
     payload is one byte buffer holding each block's packed bits at
     payload[offsets[i] : offsets[i+1]] — the exact bytes for_encode's
@@ -121,9 +121,10 @@ def encode_blocks_bulk(doc_ids: np.ndarray, tfs: np.ndarray,
                        ) -> dict[str, np.ndarray]:
     """All blocks of all terms in one pass. Inputs are postings sorted by
     (term_code, doc_id). Returns columnar arrays: block_term (code),
-    first_doc, last_doc, n, max_tf, sum_tf, min_dl, max_tfnorm, and the
-    three payload (buffer, offsets) pairs; byte layout identical to
-    codec.encode_blocks with codec='for'.
+    first_doc, last_doc, n, max_tf, sum_tf, min_dl, max_tfnorm, and the doc
+    and tf payload (buffer, offsets, nbits) triples; byte layout identical
+    to codec.encode_blocks with codec='for'. `doc_lens` feed min_dl and
+    max_tfnorm only — they are not stored per posting.
 
     With positions enabled, `pos_sorted` holds the in-doc position of every
     TOKEN in the same (term, doc, appearance) order the postings were run-
@@ -155,7 +156,6 @@ def encode_blocks_bulk(doc_ids: np.ndarray, tfs: np.ndarray,
 
     d_pay, d_off, d_nb = _pack_for_groups(deltas, starts, lens)
     t_pay, t_off, t_nb = _pack_for_groups(tfs, starts, lens)
-    l_pay, l_off, l_nb = _pack_for_groups(doc_lens, starts, lens)
     pos_payload = None
     if pos_sorted is not None:
         pstarts_ext = np.append(pstarts, len(pos_sorted))
@@ -175,8 +175,7 @@ def encode_blocks_bulk(doc_ids: np.ndarray, tfs: np.ndarray,
         "sum_tf": np.add.reduceat(tfs, starts),
         "min_dl": np.minimum.reduceat(doc_lens, starts).astype(np.int32),
         "max_tfnorm": np.maximum.reduceat(tfnorm, starts),
-        "payloads": [(d_pay, d_off, d_nb), (t_pay, t_off, t_nb),
-                     (l_pay, l_off, l_nb)],
+        "payloads": [(d_pay, d_off, d_nb), (t_pay, t_off, t_nb)],
         "pos_payload": pos_payload,
         "block_lens": lens,
     }
@@ -345,7 +344,6 @@ def build_shard_fast(shard: int, doc_ids: np.ndarray, texts,
     term_arr = np.asarray(terms, dtype=object)[blk["term_code"]]
     d_bytes = _assemble_payload_bytes(*blk["payloads"][0], blk["block_lens"])
     t_bytes = _assemble_payload_bytes(*blk["payloads"][1], blk["block_lens"])
-    l_bytes = _assemble_payload_bytes(*blk["payloads"][2], blk["block_lens"])
     p_bytes = (_assemble_pos_bytes(*blk["pos_payload"])
                if blk["pos_payload"] is not None
                else [b""] * blk["n_blocks"])
@@ -361,6 +359,5 @@ def build_shard_fast(shard: int, doc_ids: np.ndarray, texts,
         "max_tfnorm": blk["max_tfnorm"],
         "doc_bytes": d_bytes,
         "tf_bytes": t_bytes,
-        "len_bytes": l_bytes,
         "pos_bytes": p_bytes,
     }, columns=columns)

@@ -76,11 +76,13 @@ def merge_level(spark: SparkSession, index_dir: str, level: int,
     return dst_path, n_out
 
 
-def _compact_mapper(cfg: IndexConfig, avgdl: float,
+def _compact_mapper(cfg: IndexConfig, avgdl: float, docmap_path: str,
                     tombstones_path: str | None = None):
     """applyInPandas kernel: all blocks of one (shard, term) → re-encoded
-    full-size blocks (decode + concat + encode). Exactness: tf/doc/len values
-    round-trip the codec; max_tfnorm recomputed from the same avgdl.
+    full-size blocks (decode + concat + encode). Exactness: doc/tf values
+    round-trip the codec; min_dl and max_tfnorm are recomputed from the
+    docmap's doc lengths (read once per shard per worker process, like the
+    tombstones) under the same avgdl.
     Tombstoned docs are PURGED — the Lucene merge-applies-deletes lifecycle.
     Each kernel reads only ITS OWN doc-id slice of the tombstone parquet
     (row-group-pruned, cached per worker process per shard) — the tombstone
@@ -88,7 +90,8 @@ def _compact_mapper(cfg: IndexConfig, avgdl: float,
     def compact(pdf: pd.DataFrame) -> pd.DataFrame:
         from .build import POSTINGS_COLS as _COLS
         from .codec import decode_positions, encode_positions, tune_allocator
-        from .tombstones import load_tombstones_range
+        from .tombstones import (doc_lens_of, load_doc_lens,
+                                 load_tombstones_range)
         tune_allocator()
         tombstones = None
         if tombstones_path is not None and len(pdf):
@@ -98,14 +101,13 @@ def _compact_mapper(cfg: IndexConfig, avgdl: float,
         pdf = pdf.sort_values("first_doc")
         has_pos = "pos_bytes" in pdf.columns and any(
             p is not None and len(p) for p in pdf["pos_bytes"])
-        docs, tfs, lens, pflat = [], [], [], []
+        docs, tfs, pflat = [], [], []
         for r in pdf.itertuples(index=False):
-            d, t, ln = decode_block(r.doc_bytes, r.tf_bytes, r.len_bytes,
-                                    r.first_doc)
+            d, t = decode_block(r.doc_bytes, r.tf_bytes, r.first_doc)
             if has_pos:
                 pflat.append(decode_positions(r.pos_bytes, t)[0])
-            docs.append(d); tfs.append(t); lens.append(ln)
-        d = np.concatenate(docs); t = np.concatenate(tfs); ln = np.concatenate(lens)
+            docs.append(d); tfs.append(t)
+        d = np.concatenate(docs); t = np.concatenate(tfs)
         pp = np.concatenate(pflat) if has_pos else None
         if tombstones is not None and len(tombstones):
             pos = np.searchsorted(tombstones, d)
@@ -113,9 +115,12 @@ def _compact_mapper(cfg: IndexConfig, avgdl: float,
             keep = tombstones[pos] != d
             if has_pos:  # drop the purged postings' position runs too
                 pp = pp[np.repeat(keep, t)]
-            d, t, ln = d[keep], t[keep], ln[keep]
+            d, t = d[keep], t[keep]
             if not len(d):
                 return pd.DataFrame(columns=_COLS)
+        # after the purge: a compacted docmap holds only live docs
+        ln = doc_lens_of(*load_doc_lens(docmap_path, pdf["first_doc"],
+                                        pdf["last_doc"], cfg.doc_bits), d)
         shard = int(pdf["shard_id"].iloc[0]); term = pdf["term"].iloc[0]
         ct = np.concatenate(([0], np.cumsum(t)))  # token offset per posting
         # explicit column order — a partitioned-parquet read reorders input
@@ -129,14 +134,13 @@ def _compact_mapper(cfg: IndexConfig, avgdl: float,
                   if has_pos else b"")
             rows.append((shard, term, b["first_doc"], b["last_doc"], b["n"],
                          b["max_tf"], b["sum_tf"], b["min_dl"],
-                         b["max_tfnorm"], b["doc_bytes"], b["tf_bytes"],
-                         b["len_bytes"], pb))
+                         b["max_tfnorm"], b["doc_bytes"], b["tf_bytes"], pb))
         return pd.DataFrame(rows, columns=_COLS)
 
     return compact
 
 
-def compact_level(spark: SparkSession, src_path: str,
+def compact_level(spark: SparkSession, src_path: str, docmap_path: str,
                   cfg: IndexConfig, avgdl: float, n_shards: int,
                   tombstones_path: str | None = None) -> str:
     """forceMerge(maxSegments) analog: rewrite a level so every (shard, term)
@@ -157,7 +161,8 @@ def compact_level(spark: SparkSession, src_path: str,
     dst = src_path.rstrip("/") + "_compact"
     m = max(1, int(cfg.max_segments))
     out = (src.groupBy("shard_id", "term")
-           .applyInPandas(_compact_mapper(cfg, avgdl, tombstones_path),
+           .applyInPandas(_compact_mapper(cfg, avgdl, docmap_path,
+                                          tombstones_path),
                           schema=POSTINGS_SCHEMA))
     if m == 1:
         out = out.repartition(n_shards, "shard_id")
@@ -493,7 +498,8 @@ def compact_final(spark: SparkSession, index_dir: str,
                  "avgdl": float(agg["avgdl"] or 0.0),
                  "total_tokens": int(agg["tt"])}
 
-    path = compact_level(spark, final["path"], cfg,
+    path = compact_level(spark, final["path"],
+                         os.path.join(index_dir, "docmap"), cfg,
                          float(stats["avgdl"]), int(final["n_shards"]),
                          tombstones_path=tombs_path)
 

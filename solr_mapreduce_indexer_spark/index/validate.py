@@ -8,12 +8,16 @@ re-opens the committed final level distributedly and checks, per (shard, term):
   * blocks decode, and doc ids are strictly ascending across the whole
     concatenated posting list (blocks visited in first_doc order);
   * every block's stored metadata matches the decoded payload
-    (n, last_doc, max_tf) and max_tfnorm upper-bounds the true tfnorms;
+    (n, last_doc, max_tf) and the docmap's doc lengths (min_dl equals the
+    block's least doc_len, max_tfnorm upper-bounds the true tfnorms, every
+    position is below its doc's doc_len);
   * posting count per term sums to the term_stats df, and Σtf equals cf;
-  * corpus stats (n_docs, avgdl) agree with the docmap.
+  * corpus stats (n_docs, avgdl) agree with the docmap, and Σtf per doc
+    equals its docmap doc_len.
 
 Everything runs as one applyInPandas pass over the postings plus two
-aggregates — no driver-side loops.
+aggregates — no driver-side loops. Doc lengths are read per shard inside
+the kernel, exactly as the query and compaction kernels read them.
 """
 
 from __future__ import annotations
@@ -26,12 +30,16 @@ from pyspark.sql import functions as F
 from ..config import IndexConfig
 from .codec import bm25_tfnorm, decode_block, tune_allocator
 from .manifest import read_manifest
+from .tombstones import doc_lens_of, load_doc_lens
 
 
-def _check_kernel(avgdl: float, k1: float, b: float):
+def _check_kernel(avgdl: float, k1: float, b: float, docmap_path: str,
+                  doc_bits: int):
     def check(pdf: pd.DataFrame) -> pd.DataFrame:
         tune_allocator()
         pdf = pdf.sort_values("first_doc")
+        ids, lens = load_doc_lens(docmap_path, pdf["first_doc"],
+                                  pdf["last_doc"], doc_bits)
         term = pdf["term"].iloc[0]
         shard = int(pdf["shard_id"].iloc[0])
         errors: list[str] = []
@@ -40,14 +48,17 @@ def _check_kernel(avgdl: float, k1: float, b: float):
         sum_tf = 0
         for r in pdf.itertuples(index=False):
             try:
-                d, tf, dl = decode_block(r.doc_bytes, r.tf_bytes, r.len_bytes,
-                                         r.first_doc)
+                d, tf = decode_block(r.doc_bytes, r.tf_bytes, r.first_doc)
             except Exception as e:  # noqa: BLE001 — corruption must be
                 errors.append(f"decode failed: {type(e).__name__}")  # reported,
                 continue                                             # not crash
-            if not (len(d) == len(tf) == len(dl)):
-                errors.append(f"stream length mismatch: "
-                              f"{len(d)}/{len(tf)}/{len(dl)}")
+            if len(d) != len(tf):
+                errors.append(f"stream length mismatch: {len(d)}/{len(tf)}")
+                continue
+            try:
+                dl = doc_lens_of(ids, lens, d)
+            except ValueError as e:
+                errors.append(str(e))
                 continue
             n_postings += len(d)
             sum_tf += int(tf.sum())
@@ -107,8 +118,7 @@ def _doc_len_kernel():
         docs, tfs = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
         for r in pdf.itertuples(index=False):
             try:
-                d, tf, _dl = decode_block(r.doc_bytes, r.tf_bytes,
-                                          r.len_bytes, r.first_doc)
+                d, tf = decode_block(r.doc_bytes, r.tf_bytes, r.first_doc)
             except Exception:  # noqa: BLE001 — undecodable blocks are
                 continue       # reported by _check_kernel, not here
             if len(d) != len(tf):
@@ -140,7 +150,9 @@ def validate_index(spark: SparkSession, index_dir: str,
         blocks = blocks.where(F.col("term").isin(keep))
 
     per_term = (blocks.groupBy("shard_id", "term")
-                .applyInPandas(_check_kernel(avgdl, cfg.k1, cfg.b),
+                .applyInPandas(_check_kernel(avgdl, cfg.k1, cfg.b,
+                                             f"{index_dir}/docmap",
+                                             cfg.doc_bits),
                                schema="shard_id int, term string, "
                                       "n_postings long, sum_tf long, "
                                       "errors string"))

@@ -26,18 +26,24 @@ class ConflictError(RuntimeError):
     (reference: dedup/RejectingUpdateConflictResolver.java:33-46)."""
 
 
+def recency_order(df: DataFrame, order_by: str = "ts") -> list:
+    """Winner-first sort columns of a key's versions: order_by, then text,
+    role and tool (those df has), each descending with nulls last. Every
+    other transcript column is the key itself, so the winner is the same
+    row whatever order the input arrives in."""
+    return [F.col(c).desc_nulls_last()
+            for c in (order_by, "text", "role", "tool") if c in df.columns]
+
+
 def retain_most_recent(df: DataFrame, order_by: str = "ts",
                        key_cols: list[str] | None = None) -> DataFrame:
-    """Keep the single doc with max(order_by) per key; ties broken by keeping
-    one arbitrary-but-deterministic row (the reference keeps the last one the
-    comparator sorts; we pin determinism with a total ordering on all columns).
+    """Keep the single doc with max(order_by) per key. Ties go to the
+    greatest (text, role, tool), compared in that order with nulls lowest
+    (recency_order), so the winner does not depend on input order; the
+    reference keeps the last one its comparator sorts.
     Reference: dedup/RetainMostRecentUpdateConflictResolver.java:71-112."""
     keys = key_cols or KEY_COLS
-    w = Window.partitionBy(*keys).orderBy(
-        F.col(order_by).desc_nulls_last(),
-        # deterministic tie-break for identical ts: lexicographically max text
-        F.col("text").desc_nulls_last(),
-    )
+    w = Window.partitionBy(*keys).orderBy(*recency_order(df, order_by))
     return (df.withColumn("_rn", F.row_number().over(w))
               .where(F.col("_rn") == 1)
               .drop("_rn"))

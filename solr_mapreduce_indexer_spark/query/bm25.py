@@ -60,7 +60,8 @@ from ..config import IndexConfig
 from ..index.codec import (bm25_tfnorm, decode_block, decode_positions,
                            tune_allocator)
 from ..index.manifest import read_manifest
-from ..index.tombstones import load_tombstones_range
+from ..index.tombstones import (doc_lens_of, load_doc_lens,
+                                load_tombstones_range)
 
 
 @dataclass
@@ -159,16 +160,17 @@ def _direct_fetch_gen(postings_path: str, present: list[str],
     `score_fn(blocks, pos_fetch)` call per shard id.
 
     Reads ONLY the columns the kernel touches (term, doc range, max_tfnorm,
-    payload bytes) — the legacy exchange also carried n/max_tf/sum_tf/min_dl.
-    Position payloads are not read up front at all: the kernel calls
-    `pos_fetch({term: [first_doc, ...]})` once per shard with every
-    candidate-overlapping block of the batch's PHRASE queries, and gets back
+    doc and tf payloads); the kernel reads the shard's doc lengths from the
+    docmap itself (load_doc_lens). Position payloads are not read up front
+    at all: the kernel calls `pos_fetch({term: [first_doc, ...]})` once per
+    shard with every candidate-overlapping block of the batch's PHRASE
+    queries, and gets back
     `{(term, first_doc): pos_bytes}` from ONE scan (filter: OR over terms of
     `term == t AND first_doc IN (...)`, row-group pruned by the term-sorted
     layout) — a Zipf-head phrase term's non-candidate position payloads never
     leave storage."""
     cols = ["term", "first_doc", "last_doc", "max_tfnorm",
-            "doc_bytes", "tf_bytes", "len_bytes"]
+            "doc_bytes", "tf_bytes"]
 
     def gen(pdfs):
         import pyarrow.dataset as pads
@@ -207,14 +209,20 @@ def _direct_fetch_gen(postings_path: str, present: list[str],
 
 
 def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
-                        avgdl: float, k1: float, b: float,
+                        avgdl: float, k1: float, b: float, docmap_path: str,
                         tombstones_path: str | None = None,
                         doc_bits: int = 40):
     """Kernel over one shard's blocks for the whole query batch. Input pdf:
-    term, first_doc, last_doc, max_tfnorm, doc_bytes, tf_bytes, len_bytes
-    (other columns are ignored), in any row order — a merged shard directory
+    term, first_doc, last_doc, max_tfnorm, doc_bytes, tf_bytes (other
+    columns are ignored), in any row order — a merged shard directory
     yields its files' rows one file after another. Output: query_id, doc_id,
     score (per-shard top-k candidates).
+
+    BM25's doc lengths come from the docmap, read once per shard on the
+    executor: the `docmap_path` directories of the micro-shards the blocks
+    cover (load_doc_lens, cached per process like tombstones). The legacy
+    plan ships them instead, as term-less rows with a `doc_len` column whose
+    `first_doc` is the doc id.
 
     Decode sharing is the key batch economics: blocks are cached per
     (term, block), so a term referenced by many queries (Zipf head) is
@@ -245,6 +253,14 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
         # pos_fetch: supplied by the direct-fetch plan; the legacy plan ships
         # a pos_bytes column instead, served below through the same contract
         tune_allocator()
+        norms = None
+        if "doc_len" in pdf.columns:  # legacy plan: docmap rows ride along
+            is_norm = pdf["term"].isna().to_numpy()
+            nr = pdf[is_norm]
+            o = np.argsort(nr["first_doc"].to_numpy(), kind="stable")
+            norms = (nr["first_doc"].to_numpy(np.int64)[o],
+                     nr["doc_len"].to_numpy()[o].astype(np.int64))
+            pdf = pdf[~is_norm]
         # Rows sorted by (term, first_doc) once, then numpy slices per term:
         # row order is file order, and a shard directory may hold several
         # files, so the sort is needed.
@@ -252,10 +268,13 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
         rows = np.lexsort((pdf["first_doc"].to_numpy(), codes))
         starts = np.searchsorted(codes[rows], np.arange(len(uniq) + 1))
         span = {t: (starts[j], starts[j + 1]) for j, t in enumerate(uniq)}
-        firsts_all, lasts_all, mx_all, db_all, tb_all, lb_all = (
+        firsts_all, lasts_all, mx_all, db_all, tb_all = (
             pdf[c].to_numpy()[rows] for c in (
                 "first_doc", "last_doc", "max_tfnorm",
-                "doc_bytes", "tf_bytes", "len_bytes"))
+                "doc_bytes", "tf_bytes"))
+        if norms is None and len(pdf):
+            norms = load_doc_lens(docmap_path, firsts_all, lasts_all,
+                                  doc_bits)
         tombstones = None
         if tombstones_path is not None and len(pdf):
             tombstones = load_tombstones_range(
@@ -277,12 +296,12 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
         block_cache: dict[tuple[str, int], tuple[np.ndarray, np.ndarray]] = {}
 
         def term_meta(t: str) -> tuple:
-            """(firsts, lasts, block score ubs, doc/tf/len byte arrays)."""
+            """(firsts, lasts, block score ubs, doc/tf byte arrays)."""
             m = meta.get(t)
             if m is None:
                 s, e = span[t]
                 m = (firsts_all[s:e], lasts_all[s:e], idfs[t] * mx_all[s:e],
-                     db_all[s:e], tb_all[s:e], lb_all[s:e])
+                     db_all[s:e], tb_all[s:e])
                 meta[t] = m
             return m
 
@@ -292,20 +311,20 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
             docs (duplicate-key losers awaiting compaction) are dropped at
             decode, before caching — Lucene live-docs semantics, so they can
             never enter a candidate set or displace a live top-k doc."""
-            firsts, _lasts, _ubs, db, tb, lb = term_meta(t)
+            firsts, _lasts, _ubs, db, tb = term_meta(t)
             docs, contribs = [], []
             for i in idx:
                 i = int(i)
                 got = block_cache.get((t, i))
                 if got is None:
-                    d, tf, dl = decode_block(db[i], tb[i], lb[i],
-                                             int(firsts[i]))
+                    d, tf = decode_block(db[i], tb[i], int(firsts[i]))
                     if tombstones is not None and len(tombstones) and len(d):
                         pos = np.clip(np.searchsorted(tombstones, d), 0,
                                       len(tombstones) - 1)
                         keep = tombstones[pos] != d
-                        d, tf, dl = d[keep], tf[keep], dl[keep]
-                    got = (d, idfs[t] * bm25_tfnorm(tf, dl, avgdl, k1, b))
+                        d, tf = d[keep], tf[keep]
+                    got = (d, idfs[t] * bm25_tfnorm(
+                        tf, doc_lens_of(*norms, d), avgdl, k1, b))
                     block_cache[(t, i)] = got
                     DECODE_STATS["blocks_decoded"] += 1
                 docs.append(got[0])
@@ -329,7 +348,7 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
 
         def decode_pos_blocks(t: str, idx: np.ndarray):
             """Decode the given block ordinals of term t WITH positions →
-            concatenated (docs, tfs, dls, pos_flat), tombstones applied.
+            concatenated (docs, tfs, pos_flat), tombstones applied.
             Per-block cache for the whole batch: the phrase doc-intersection
             phase and the position-intersection phase touch each block ONCE.
             Only the rarest term decodes all its blocks; every other term's
@@ -339,9 +358,9 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
             only for docs passing the conjunctive doc-level approximation.
             Payloads come from pos_map, which the batch's one pos_fetch call
             filled with every block phase 2 can ask for."""
-            firsts, _lasts, _ubs, db, tb, lb = term_meta(t)
+            firsts, _lasts, _ubs, db, tb = term_meta(t)
             idx_sorted = np.sort(np.asarray(idx, dtype=np.int64))
-            ds_, ts_, ls_, ps_ = [], [], [], []
+            ds_, ts_, ps_ = [], [], []
             for i in idx_sorted:
                 i = int(i)
                 got = pos_cache.get((t, i))
@@ -351,26 +370,24 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
                         raise ValueError(
                             "PHRASE queries require an index built with "
                             "positions=True (IndexConfig.positions)")
-                    d, tf, dl = decode_block(db[i], tb[i], lb[i],
-                                             int(firsts[i]))
+                    d, tf = decode_block(db[i], tb[i], int(firsts[i]))
                     p, _ = decode_positions(pb, tf)
                     if tombstones is not None and len(tombstones) and len(d):
                         ix = np.clip(np.searchsorted(tombstones, d), 0,
                                      len(tombstones) - 1)
                         keep = tombstones[ix] != d
                         p = p[np.repeat(keep, tf)]
-                        d, tf, dl = d[keep], tf[keep], dl[keep]
-                    got = (d, tf, dl, p)
+                        d, tf = d[keep], tf[keep]
+                    got = (d, tf, p)
                     pos_cache[(t, i)] = got
                     DECODE_STATS["blocks_decoded"] += 1
                     DECODE_STATS["pos_blocks_decoded"] += 1
-                ds_.append(got[0]); ts_.append(got[1])
-                ls_.append(got[2]); ps_.append(got[3])
+                ds_.append(got[0]); ts_.append(got[1]); ps_.append(got[2])
             if not ds_:
                 z = np.empty(0, np.int64)
-                return z, z, z, z
+                return z, z, z
             return (np.concatenate(ds_), np.concatenate(ts_),
-                    np.concatenate(ls_), np.concatenate(ps_))
+                    np.concatenate(ps_))
 
         def intersect_update(cand_docs, cand_scores, d, c):
             """AND-step: keep candidates present in (d, c), add contribution."""
@@ -412,7 +429,7 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
                     "PHRASE queries require an index built with "
                     "positions=True (IndexConfig.positions)")
             by_rarity = sorted(uniqs, key=lambda t: (-idfs[t], t))
-            # Phase 1 is postings-only (decode_blocks): the doc/tf/len
+            # Phase 1 is postings-only (decode_blocks): the doc/tf
             # streams are separate payloads from positions, so a block ruled
             # out here NEVER pays position decode — even the lead term's.
             # Positions are decoded lazily in phase 2 for candidate-
@@ -497,15 +514,12 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
                 if cand is None:
                     continue
                 terms = q["terms"]  # ordered, duplicates meaningful
-                dls_cand = None
                 keys = None
                 for i, t in enumerate(terms):
-                    docs_t, tfs_t, dls_t, pflat = decode_pos_blocks(
+                    docs_t, tfs_t, pflat = decode_pos_blocks(
                         t, blocks_hitting(t, cand))
                     offs = np.cumsum(tfs_t) - tfs_t
                     ix = np.searchsorted(docs_t, cand)
-                    if dls_cand is None:
-                        dls_cand = dls_t[ix]
                     ls, st = tfs_t[ix], offs[ix]
                     total = int(ls.sum())
                     gi = (np.arange(total, dtype=np.int64)
@@ -537,8 +551,8 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
                 hit = pf > 0
                 idf_sum = float(sum(idfs[t] for t in terms))
                 docs = cand[hit]
-                scores = idf_sum * bm25_tfnorm(pf[hit], dls_cand[hit],
-                                               avgdl, k1, b)
+                scores = idf_sum * bm25_tfnorm(
+                    pf[hit], doc_lens_of(*norms, docs), avgdl, k1, b)
             else:  # OR — vectorized MaxScore (Turtle & Flood '95) with
                    # block-max skipping in both phases (Q5).
                 terms = [t for t in q["terms"] if t in span]
@@ -679,7 +693,7 @@ def run_queries(spark: SparkSession, h: IndexHandle,
     # decode work by the slice count while the per-shard batch kernel
     # already shares each decoded block across all queries.
     kernel = _score_shard_kernel(norm_queries, idfs, h.avgdl,
-                                 cfg.k1, cfg.b,
+                                 cfg.k1, cfg.b, h.docmap_path,
                                  tombstones_path=h.tombstones_path,
                                  doc_bits=cfg.doc_bits)
     cand_schema = "query_id long, doc_id long, score double"
@@ -711,8 +725,26 @@ def run_queries(spark: SparkSession, h: IndexHandle,
                                   kernel),
                 schema=cand_schema)
     if cand is None:
-        blocks = (spark.read.parquet(h.postings_path)
-                  .where(F.col("term").isin(present)))
+        from ..index.build import DOCMAP_SCHEMA, POSTINGS_SCHEMA
+        blocks = (spark.read.schema(POSTINGS_SCHEMA).parquet(h.postings_path)
+                  .where(F.col("term").isin(present))
+                  .select("shard_id", "term", "first_doc", "last_doc",
+                          "max_tfnorm", "doc_bytes", "tf_bytes", "pos_bytes"))
+        # Each shard's doc lengths ride the same exchange as its blocks:
+        # docmap rows of the micro-shards (doc_id >> doc_bits) its fetched
+        # blocks cover, as term-less rows with first_doc = doc id. So the
+        # fallback reads the docmap through Spark too, never pyarrow.
+        micro = F.sequence(F.shiftright("first_doc", cfg.doc_bits),
+                           F.shiftright("last_doc", cfg.doc_bits))
+        covered = (blocks.select("shard_id", F.explode(micro).alias("micro"))
+                   .distinct())
+        norms = (spark.read.schema(DOCMAP_SCHEMA).parquet(h.docmap_path)
+                 .select(F.col("shard_id").cast("long").alias("micro"),
+                         F.col("doc_id").alias("first_doc"), "doc_len")
+                 .join(F.broadcast(covered), "micro")
+                 .select("shard_id", "first_doc",
+                         F.col("first_doc").alias("last_doc"), "doc_len"))
+        blocks = blocks.unionByName(norms, allowMissingColumns=True)
 
         # single-arg wrapper: applyInPandas dispatches on parameter count,
         # and the kernel's optional pos_fetch arg would make it look like

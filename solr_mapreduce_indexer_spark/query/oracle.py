@@ -73,8 +73,14 @@ class PandasOracle:
         pat = re.compile(token_pattern)
         pdf = pdf.copy()
         if dedup == "retain_most_recent":
-            pdf = (pdf.sort_values(["conv_id", "turn_idx", "ts", "text"])
-                      .groupby(["conv_id", "turn_idx"], as_index=False).last())
+            # the engine's winner: greatest (ts, text, role, tool), nulls
+            # lowest. Whole rows are kept: groupby().last() would take each
+            # column's last NON-NULL value and could mix two versions.
+            ties = [c for c in ("ts", "text", "role", "tool") if c in pdf]
+            pdf = (pdf.sort_values(["conv_id", "turn_idx", *ties],
+                                   na_position="first", kind="stable")
+                      .drop_duplicates(["conv_id", "turn_idx"], keep="last")
+                      .reset_index(drop=True))
         pdf["doc_key"] = pdf["conv_id"] + "#" + pdf["turn_idx"].astype(str)
         pdf["shard"] = [route_scalar(k, shards, partitions)
                         for k in pdf["doc_key"]]

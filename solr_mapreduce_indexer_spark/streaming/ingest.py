@@ -23,7 +23,8 @@ Design:
 * ``append_batch`` is idempotent per generation id (checkpoint-exists skip),
   so ``foreachBatch`` retries after failure give exactly-once segments.
 * BM25's global stats (N, avgdl) drift as data arrives. Posting payloads are
-  immutable and store raw (tf, dl) — scores stay exact under any avgdl. Only
+  immutable and store raw tf, and doc lengths live in the docmap — scores
+  stay exact under any avgdl. Only
   the block-max pruning bound bakes avgdl in; ``concat_segments``
   recomputes it as a pure column expression from the avgdl-independent
   metadata pair (max_tf, min_dl): tfnorm is increasing in tf and decreasing

@@ -30,6 +30,36 @@ def settled_job_ids(sc, group):
     return got
 
 
+def write_docmap(root, doc_ids, doc_lens, doc_bits: int = 40) -> str:
+    """Write the docmap of synthetic posting blocks: (doc_id, doc_len) rows
+    in the engine's layout, one `shard_id=m` directory per micro-shard
+    m = doc_id >> doc_bits. Kernels read doc lengths from it exactly as they
+    read a built index's docmap. Returns its path."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    ids = np.asarray(doc_ids, dtype=np.int64)
+    lens = np.asarray(doc_lens, dtype=np.int64)
+    for m in np.unique(ids >> doc_bits):
+        sel = (ids >> doc_bits) == m
+        part = os.path.join(str(root), f"shard_id={int(m)}")
+        os.makedirs(part, exist_ok=True)
+        pq.write_table(pa.table({"doc_id": ids[sel], "doc_len": lens[sel]}),
+                       os.path.join(part, "part-00000.parquet"))
+    return str(root)
+
+
+def read_doc_lens(docmap_path, docs, doc_bits: int = 40):
+    """Doc lengths of `docs` through the engine's per-shard norms read."""
+    import numpy as np
+
+    from solr_mapreduce_indexer_spark.index.tombstones import (doc_lens_of,
+                                                               load_doc_lens)
+    docs = np.asarray(docs, dtype=np.int64)
+    return doc_lens_of(*load_doc_lens(docmap_path, docs, docs, doc_bits),
+                       docs)
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app="engine-tests", master="local[4]", shuffle_partitions=8)

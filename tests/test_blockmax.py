@@ -11,6 +11,7 @@ import math
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import write_docmap
 
 from solr_mapreduce_indexer_spark.index.codec import bm25_tfnorm, encode_blocks
 from solr_mapreduce_indexer_spark.query import bm25 as Q
@@ -64,12 +65,19 @@ def brute(postings, doc_lens, idfs, terms, mode, k):
     return out[:k]
 
 
-def run_kernel(pdf, idfs, queries):
-    kern = Q._score_shard_kernel(queries, idfs, AVGDL, K1, B)
+@pytest.fixture(scope="module")
+def docmap(corpus, tmp_path_factory):
+    doc_lens = corpus[2]
+    return write_docmap(tmp_path_factory.mktemp("blockmax") / "docmap",
+                        np.arange(len(doc_lens)), doc_lens)
+
+
+def run_kernel(pdf, idfs, queries, docmap):
+    kern = Q._score_shard_kernel(queries, idfs, AVGDL, K1, B, docmap)
     return kern(pdf)
 
 
-def test_results_match_bruteforce(corpus):
+def test_results_match_bruteforce(corpus, docmap):
     pdf, postings, doc_lens, idfs, dfs = corpus
     rng = np.random.default_rng(3)
     terms_by_df = sorted(dfs, key=lambda t: -dfs[t])
@@ -91,7 +99,7 @@ def test_results_match_bruteforce(corpus):
     queries.append({"query_id": 999, "terms": terms_by_df[:2],
                     "mode": "AND", "k": 10**6})
 
-    res = run_kernel(pdf, idfs, queries)
+    res = run_kernel(pdf, idfs, queries, docmap)
     for q in queries:
         exp = brute(postings, doc_lens, idfs, q["terms"], q["mode"], q["k"])
         got = res[res.query_id == q["query_id"]]
@@ -101,7 +109,7 @@ def test_results_match_bruteforce(corpus):
             assert ed == gd and abs(es - gs) < 1e-12, q
 
 
-def test_blockmax_skips_blocks(corpus):
+def test_blockmax_skips_blocks(corpus, docmap):
     """A Zipf-head AND query must decode measurably fewer blocks than its
     terms own (the round-1 kernel always decoded the essential term's entire
     posting list — bench.py make_queries kind-0 is exactly this shape)."""
@@ -109,19 +117,19 @@ def test_blockmax_skips_blocks(corpus):
     hot = sorted(dfs, key=lambda t: -dfs[t])[:2]
     Q.DECODE_STATS["blocks_decoded"] = 0
     run_kernel(pdf, idfs, [{"query_id": 0, "terms": sorted(hot),
-                            "mode": "AND", "k": 5}])
+                            "mode": "AND", "k": 5}], docmap)
     decoded = Q.DECODE_STATS["blocks_decoded"]
     total = int((pdf.term.isin(hot)).sum())
     assert decoded < 0.9 * total, (decoded, total)
 
 
-def test_skip_exactness_on_ties(corpus):
+def test_skip_exactness_on_ties(corpus, docmap):
     """k exactly at a tie boundary: pruning must not drop an equal-score,
     lower-doc-id result (skips use strict bounds)."""
     pdf, postings, doc_lens, idfs, dfs = corpus
     t = sorted(dfs, key=lambda t: -dfs[t])[0]
     res = run_kernel(pdf, idfs, [{"query_id": 0, "terms": [t],
-                                  "mode": "OR", "k": 7}])
+                                  "mode": "OR", "k": 7}], docmap)
     exp = brute(postings, doc_lens, idfs, [t], "OR", 7)
     got = sorted(zip(res.doc_id, res.score), key=lambda x: (-x[1], x[0]))
     assert [d for d, _ in got] == [d for d, _ in exp]

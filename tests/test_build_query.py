@@ -72,7 +72,7 @@ def test_tf_reconstruction_sample(spark, index, oracle):
         want = oracle.tf.get(term, {})
         got = {}
         for r in blocks.itertuples(index=False):
-            d, t, _l = decode_block(r.doc_bytes, r.tf_bytes, r.len_bytes, r.first_doc)
+            d, t = decode_block(r.doc_bytes, r.tf_bytes, r.first_doc)
             got.update(dict(zip(d.tolist(), t.tolist())))
         assert got == want, term
 

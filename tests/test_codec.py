@@ -1,5 +1,6 @@
 import numpy as np
 import pytest
+from conftest import read_doc_lens, write_docmap
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -34,28 +35,30 @@ def test_delta_roundtrip_lengths(n):
 
 
 @pytest.mark.parametrize("n", [1, 127, 128, 129, 1000])
-def test_block_roundtrip_and_blockmax_soundness(n):
+def test_block_roundtrip_and_blockmax_soundness(n, tmp_path):
     rng = np.random.default_rng(13)
     docs = np.sort(rng.choice(10 * n, size=n, replace=False)).astype(np.int64)
     tfs = rng.integers(1, 1000, size=n).astype(np.int64)
     dls = rng.integers(1, 500, size=n).astype(np.int64)
     avgdl = float(dls.mean())
+    docmap = write_docmap(tmp_path / "docmap", docs, dls)
     blocks = encode_blocks(docs, tfs, dls, avgdl, block_size=128)
     assert sum(b["n"] for b in blocks) == n
-    got_d, got_t, got_l = [], [], []
+    assert all("len_bytes" not in b for b in blocks)  # norms live per doc
+    got_d, got_t = [], []
     for b in blocks:
-        d, t, ln = decode_block(b["doc_bytes"], b["tf_bytes"], b["len_bytes"],
-                                b["first_doc"])
+        d, t = decode_block(b["doc_bytes"], b["tf_bytes"], b["first_doc"])
         assert d[0] == b["first_doc"] and d[-1] == b["last_doc"]
-        assert len(d) == b["n"] == len(t) == len(ln)
-        # block-max soundness: bound >= every true tfnorm in the block
+        assert len(d) == b["n"] == len(t)
+        # block-max soundness: bound >= every true tfnorm in the block,
+        # with the lengths the query kernel reads from the docmap
+        ln = read_doc_lens(docmap, d)
         true = bm25_tfnorm(t, ln, avgdl)
         assert b["max_tfnorm"] >= true.max() - 1e-12
-        assert b["max_tf"] == t.max()
-        got_d.append(d); got_t.append(t); got_l.append(ln)
+        assert b["max_tf"] == t.max() and b["min_dl"] == ln.min()
+        got_d.append(d); got_t.append(t)
     assert np.array_equal(np.concatenate(got_d), docs)
     assert np.array_equal(np.concatenate(got_t), tfs)
-    assert np.array_equal(np.concatenate(got_l), dls)
     # postings strictly ascending across block boundaries
     alld = np.concatenate(got_d)
     assert (np.diff(alld) > 0).all()
@@ -90,14 +93,13 @@ def test_tagged_payloads_mixed_codecs_decode():
     for codec in ("for", "varint"):
         blocks = encode_blocks(docs, tfs, dls, 30.0, block_size=64,
                                codec=codec)
-        out_d, out_t, out_l = [], [], []
+        out_d, out_t = [], []
         for b in blocks:
-            d, t, dl = decode_block(b["doc_bytes"], b["tf_bytes"],
-                                    b["len_bytes"], b["first_doc"])
-            out_d.append(d); out_t.append(t); out_l.append(dl)
+            d, t = decode_block(b["doc_bytes"], b["tf_bytes"],
+                                b["first_doc"])
+            out_d.append(d); out_t.append(t)
         assert (np.concatenate(out_d) == docs).all()
         assert (np.concatenate(out_t) == tfs).all()
-        assert (np.concatenate(out_l) == dls).all()
 
 
 def test_for_smaller_and_correct_on_typical_blocks():

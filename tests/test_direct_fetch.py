@@ -100,7 +100,7 @@ def test_direct_plan_has_no_shuffle_before_kernel(spark, pos_index):
                                                          idf)
     kernel = _score_shard_kernel(qs, {"quick": idf(pos_index.n_docs, 5)},
                                  pos_index.avgdl, pos_index.cfg.k1,
-                                 pos_index.cfg.b)
+                                 pos_index.cfg.b, pos_index.docmap_path)
     sdf = spark.createDataFrame(
         spark.sparkContext.parallelize(
             [(int(s),) for s in pos_index.shard_ids],

@@ -15,6 +15,7 @@ from collections import Counter
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import read_doc_lens, write_docmap
 
 from solr_mapreduce_indexer_spark.config import IndexConfig
 from solr_mapreduce_indexer_spark.index.build import POSTINGS_COLS
@@ -68,7 +69,7 @@ def oracle_rows(shard, doc_ids, texts, cfg, avgdl):
             rows.append((shard, term, blk["first_doc"], blk["last_doc"],
                          blk["n"], blk["max_tf"], blk["sum_tf"],
                          blk["min_dl"], blk["max_tfnorm"], blk["doc_bytes"],
-                         blk["tf_bytes"], blk["len_bytes"], pb))
+                         blk["tf_bytes"], pb))
     return pd.DataFrame(rows, columns=POSTINGS_COLS)
 
 
@@ -107,21 +108,27 @@ def test_basic_corpus():
     assert (got.groupby("term").size() > 1).any()
 
 
-def test_block_roundtrip_decodes():
+def test_block_roundtrip_decodes(tmp_path):
     rng = np.random.default_rng(1)
     vocab = [f"w{i}" for i in range(10)]
     texts = [" ".join(rng.choice(vocab, size=20)) for _ in range(500)]
     cfg = IndexConfig()
     doc_ids = np.arange(500, dtype=np.int64) + (3 << 40)
+    docmap = write_docmap(tmp_path / "docmap", doc_ids, np.full(500, 20))
     got = build_shard_fast(3, doc_ids, np.asarray(texts, object), cfg, 20.0,
                            POSTINGS_COLS)
-    # decode every block; postings must be sorted, tf>=1, dl==20
+    # decode every block; postings must be sorted, tf>=1, and every doc's
+    # docmap length (20) is the block's min_dl; Σtf per doc == doc_len
+    tf_per_doc = {}
     for r in got.itertuples(index=False):
-        d, t, dl = decode_block(r.doc_bytes, r.tf_bytes, r.len_bytes,
-                                r.first_doc)
+        d, t = decode_block(r.doc_bytes, r.tf_bytes, r.first_doc)
         assert d[0] == r.first_doc and d[-1] == r.last_doc
-        assert (np.diff(d) > 0).all() and (t >= 1).all() and (dl == 20).all()
+        assert (np.diff(d) > 0).all() and (t >= 1).all()
         assert t.max() == r.max_tf and t.sum() == r.sum_tf
+        assert r.min_dl == read_doc_lens(docmap, d).min() == 20
+        for doc, tf in zip(d.tolist(), t.tolist()):
+            tf_per_doc[doc] = tf_per_doc.get(doc, 0) + tf
+    assert set(tf_per_doc.values()) == {20} and len(tf_per_doc) == 500
 
 
 def test_edge_cases():

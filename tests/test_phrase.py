@@ -14,6 +14,7 @@ import re
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import write_docmap
 
 from solr_mapreduce_indexer_spark.config import IndexConfig
 from solr_mapreduce_indexer_spark.index.build import build_index
@@ -167,8 +168,10 @@ def test_validate_checks_positions(pidx, spark):
 # decodes via DECODE_STATS, exactly like tests/test_blockmax.py.
 # ---------------------------------------------------------------------------
 
-def _positional_table(docs_tokens, avgdl, block_size=32, k1=1.2, b=0.75):
-    """Token lists → posting-block pandas table WITH position streams."""
+def _positional_table(docs_tokens, avgdl, docmap_root, block_size=32,
+                      k1=1.2, b=0.75):
+    """Token lists → posting-block pandas table WITH position streams, and
+    the docmap holding the docs' lengths (written under docmap_root)."""
     from solr_mapreduce_indexer_spark.index.codec import (
         encode_blocks, encode_positions)
     postings = {}  # term -> list[(doc, positions)]
@@ -198,11 +201,12 @@ def _positional_table(docs_tokens, avgdl, block_size=32, k1=1.2, b=0.75):
     dfs = {t: len(pl) for t, pl in postings.items()}
     idfs = {t: math.log(1.0 + (n - d + 0.5) / (d + 0.5))
             for t, d in dfs.items()}
-    return pd.DataFrame(rows), idfs, doc_lens
+    docmap = write_docmap(docmap_root, np.arange(n), doc_lens)
+    return pd.DataFrame(rows), idfs, doc_lens, docmap
 
 
 @pytest.fixture(scope="module")
-def zipf_positional():
+def zipf_positional(tmp_path_factory):
     """4000 docs; 'hot' appears in nearly every doc (Zipf head), 'rare' in a
     handful — and the phrase 'rare hot' occurs in exactly those docs."""
     rng = np.random.default_rng(11)
@@ -216,18 +220,19 @@ def zipf_positional():
             toks[j:j] = ["rare", "hot"]
         docs.append(toks)
     avgdl = float(np.mean([len(t) for t in docs]))
-    pdf, idfs, doc_lens = _positional_table(docs, avgdl)
-    return docs, pdf, idfs, doc_lens, avgdl
+    pdf, idfs, doc_lens, docmap = _positional_table(
+        docs, avgdl, tmp_path_factory.mktemp("zipf") / "docmap")
+    return docs, pdf, idfs, doc_lens, avgdl, docmap
 
 
 def test_phrase_prunes_hot_term_blocks(zipf_positional):
     from solr_mapreduce_indexer_spark.query import bm25 as Q
-    docs, pdf, idfs, doc_lens, avgdl = zipf_positional
+    docs, pdf, idfs, doc_lens, avgdl, docmap = zipf_positional
     Q.DECODE_STATS["blocks_decoded"] = 0
     Q.DECODE_STATS["pos_blocks_decoded"] = 0
     kern = Q._score_shard_kernel(
         [{"query_id": 0, "terms": ["rare", "hot"], "mode": "PHRASE",
-          "k": 100}], idfs, avgdl, 1.2, 0.75)
+          "k": 100}], idfs, avgdl, 1.2, 0.75, docmap)
     res = kern(pdf)
     pos_decoded = Q.DECODE_STATS["pos_blocks_decoded"]
     postings_decoded = Q.DECODE_STATS["blocks_decoded"] - pos_decoded
@@ -273,18 +278,18 @@ def test_phrase_position_payload_io_pruned(zipf_positional):
     hot term's non-candidate pos_bytes must never be requested from
     storage, and results must equal the column-shipped path exactly."""
     from solr_mapreduce_indexer_spark.query import bm25 as Q
-    docs, pdf, idfs, doc_lens, avgdl = zipf_positional
+    docs, pdf, idfs, doc_lens, avgdl, docmap = zipf_positional
     queries = [{"query_id": 0, "terms": ["rare", "hot"], "mode": "PHRASE",
                 "k": 100}]
 
     # reference: legacy path with the pos_bytes column present
-    ref = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75)(pdf)
+    ref = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75, docmap)(pdf)
 
     # direct-plan simulation: no pos_bytes column; a counting fetcher serves
     # point-reads from the same table
     requested: dict[str, set] = {}
     Q.DECODE_STATS["pos_blocks_fetched"] = 0
-    got = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75)(
+    got = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75, docmap)(
         pdf.drop(columns=["pos_bytes"]), _table_fetcher(pdf, requested))
     assert dict(zip(got.doc_id, got.score)) == dict(zip(ref.doc_id, ref.score))
 
@@ -305,7 +310,7 @@ def test_phrase_early_empty_fetches_undecoded_slot_blocks(zipf_positional):
     exactly 'hot's candidate-overlapping blocks. A phrase that survives
     every slot fetches no block it does not decode."""
     from solr_mapreduce_indexer_spark.query import bm25 as Q
-    docs, pdf, idfs, doc_lens, avgdl = zipf_positional
+    docs, pdf, idfs, doc_lens, avgdl, docmap = zipf_positional
     cand = np.array([d for d, toks in enumerate(docs)
                      if {"rare", "f01", "hot"} <= set(toks)])
     assert len(cand)
@@ -319,8 +324,8 @@ def test_phrase_early_empty_fetches_undecoded_slot_blocks(zipf_positional):
             Q.DECODE_STATS[key] = 0
         res = Q._score_shard_kernel(
             [{"query_id": 0, "terms": terms, "mode": "PHRASE", "k": 100}],
-            idfs, avgdl, 1.2, 0.75)(pdf.drop(columns=["pos_bytes"]),
-                                    _table_fetcher(pdf))
+            idfs, avgdl, 1.2, 0.75, docmap)(
+                pdf.drop(columns=["pos_bytes"]), _table_fetcher(pdf))
         return (len(res), Q.DECODE_STATS["pos_blocks_fetched"],
                 Q.DECODE_STATS["pos_blocks_decoded"])
 
@@ -336,7 +341,7 @@ def test_phrase_batch_reads_positions_once(zipf_positional):
     batch of several phrases calls the fetcher ONCE for the shard, and
     equals the column-shipped path row for row."""
     from solr_mapreduce_indexer_spark.query import bm25 as Q
-    docs, pdf, idfs, doc_lens, avgdl = zipf_positional
+    docs, pdf, idfs, doc_lens, avgdl, docmap = zipf_positional
     queries = [
         {"query_id": 0, "terms": ["rare", "hot"], "mode": "PHRASE", "k": 50},
         {"query_id": 1, "terms": ["f01", "f02"], "mode": "PHRASE", "k": 20},
@@ -344,9 +349,9 @@ def test_phrase_batch_reads_positions_once(zipf_positional):
          "k": 20},
         {"query_id": 3, "terms": ["f05", "hot"], "mode": "AND", "k": 10},
     ]
-    ref = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75)(pdf)
+    ref = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75, docmap)(pdf)
     calls: list = []
-    got = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75)(
+    got = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75, docmap)(
         pdf.drop(columns=["pos_bytes"]), _table_fetcher(pdf, calls=calls))
     pd.testing.assert_frame_equal(got, ref)
     assert len(calls) == 1
@@ -369,7 +374,8 @@ def test_direct_fetch_reads_positions_once_per_shard(pidx, spark):
                for i, t in enumerate(phrases)]
     terms = sorted({t for p in phrases for t in p})
     idfs = {t: 1.0 + i / 10 for i, t in enumerate(terms)}
-    kernel = Q._score_shard_kernel(queries, idfs, h.avgdl, h.cfg.k1, h.cfg.b)
+    kernel = Q._score_shard_kernel(queries, idfs, h.avgdl, h.cfg.k1, h.cfg.b,
+                                   h.docmap_path)
     calls: list = []
 
     def counting_kernel(blocks, pos_fetch):
@@ -398,7 +404,7 @@ def test_kernel_ignores_input_row_order(zipf_positional):
     shuffled input must score identically, with the pos_bytes column and
     with a fetcher."""
     from solr_mapreduce_indexer_spark.query import bm25 as Q
-    docs, pdf, idfs, doc_lens, avgdl = zipf_positional
+    docs, pdf, idfs, doc_lens, avgdl, docmap = zipf_positional
     queries = [
         {"query_id": 0, "terms": ["rare", "hot"], "mode": "PHRASE", "k": 50},
         {"query_id": 1, "terms": ["f01", "hot"], "mode": "AND", "k": 20},
@@ -407,7 +413,7 @@ def test_kernel_ignores_input_row_order(zipf_positional):
     ]
     shuffled = pdf.sample(frac=1, random_state=0)
     assert not shuffled.index.equals(pdf.index)
-    kern = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75)
+    kern = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75, docmap)
     ref = kern(pdf)
     assert set(ref["query_id"]) == {0, 1, 2}
     pd.testing.assert_frame_equal(kern(shuffled), ref)
@@ -417,7 +423,7 @@ def test_kernel_ignores_input_row_order(zipf_positional):
         kern(pdf.drop(columns=["pos_bytes"]), _table_fetcher(pdf)), ref)
 
 
-def test_phrase_position_overflow_fails_loudly():
+def test_phrase_position_overflow_fails_loudly(tmp_path):
     """In-doc positions beyond the 32-bit key field must raise, not silently
     drop matches (the round-3 21-bit packing lost hits past ~2.09M tokens)."""
     from solr_mapreduce_indexer_spark.index.codec import (
@@ -432,14 +438,15 @@ def test_phrase_position_overflow_fails_loudly():
         blk["pos_bytes"] = encode_positions(pos, np.array([1]))
         rows.append(dict(shard_id=0, term=term, **blk))
     idfs = {"aa": 1.0, "bb": 1.0}
+    docmap = write_docmap(tmp_path / "docmap", [5], [big + 100])
     kern = Q._score_shard_kernel(
         [{"query_id": 0, "terms": ["aa", "bb"], "mode": "PHRASE", "k": 10}],
-        idfs, 50.0, 1.2, 0.75)
+        idfs, 50.0, 1.2, 0.75, docmap)
     with pytest.raises(ValueError, match="2\\^32"):
         kern(pd.DataFrame(rows))
 
 
-def test_phase1_ruled_out_blocks_never_pay_position_decode():
+def test_phase1_ruled_out_blocks_never_pay_position_decode(tmp_path):
     """Round-5 lazy decode: phase 1 is postings-only, so a lead-term block
     whose docs are all eliminated by the conjunction NEVER decodes its
     position payload. Fixture: 'lead' (rarest, leads) spans 16 blocks across
@@ -464,7 +471,8 @@ def test_phase1_ruled_out_blocks_never_pay_position_decode():
     # 'com' df~1080; candidates = docs {0,8,...,88} only.
         docs.append(toks)
     avgdl = float(np.mean([len(t) for t in docs]))
-    pdf, idfs, doc_lens = _positional_table(docs, avgdl)
+    pdf, idfs, doc_lens, docmap = _positional_table(docs, avgdl,
+                                                    tmp_path / "docmap")
     assert idfs["lead"] > idfs["com"]  # 'lead' really is the lead term
     n_lead_blocks = int((pdf.term == "lead").sum())
     assert n_lead_blocks >= 12
@@ -472,7 +480,7 @@ def test_phase1_ruled_out_blocks_never_pay_position_decode():
     Q.DECODE_STATS["pos_blocks_decoded"] = 0
     kern = Q._score_shard_kernel(
         [{"query_id": 0, "terms": ["lead", "com"], "mode": "PHRASE",
-          "k": 100}], idfs, avgdl, 1.2, 0.75)
+          "k": 100}], idfs, avgdl, 1.2, 0.75, docmap)
     res = kern(pdf)
     pos_decoded = Q.DECODE_STATS["pos_blocks_decoded"]
     all_decoded = Q.DECODE_STATS["blocks_decoded"]
