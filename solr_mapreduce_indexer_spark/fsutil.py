@@ -16,6 +16,10 @@ the publish snapshot tree. This module gives them one seam:
 ``file:``-scheme URIs deliberately go through the Hadoop path — that is the
 test double for HDFS semantics (no symlinks, rename-no-overwrite), per the
 Hadoop compatibility contract.
+
+Index reads outside Spark jobs (query, tombstones, doc lengths, compaction,
+validation) use pyarrow instead, and ``arrow_fs`` is the one place that turns
+an index path into a pyarrow filesystem (README "Storage access").
 """
 
 from __future__ import annotations
@@ -44,6 +48,34 @@ def local_path(path: str) -> str:
         return p
     return path
 
+
+def arrow_fs(path: str):
+    """(pyarrow FileSystem, path inside it) for a local path or a URI. A
+    scheme pyarrow has no filesystem for (e.g. ``s3a://``) raises here."""
+    import pyarrow.fs as pafs
+    path = local_path(path)  # Spark emits file:/… URIs pyarrow won't parse
+    if has_scheme(path):
+        return pafs.FileSystem.from_uri(path)
+    return pafs.LocalFileSystem(), os.path.abspath(path)
+
+
+def data_files(path: str, subdirs: list[str]) -> tuple[str, ...]:
+    """Sorted parquet data files directly under each existing `path/<sub>`
+    ("" = path itself) — a metadata-only listing, with paths inside
+    ``arrow_fs(path)``'s filesystem. Missing directories are skipped (a
+    micro-shard without docs has no docmap directory), and so are Spark's
+    `_SUCCESS` / `.crc` side files."""
+    import pyarrow.fs as pafs
+    fs, base = arrow_fs(path)
+    dirs = [f"{base.rstrip('/')}/{s}" if s else base for s in subdirs]
+    files = []
+    for d in fs.get_file_info(dirs):
+        if d.type == pafs.FileType.Directory:
+            listing = fs.get_file_info(pafs.FileSelector(d.path))
+            files += [f.path for f in listing
+                      if f.type == pafs.FileType.File
+                      and not f.base_name.startswith((".", "_"))]
+    return tuple(sorted(files))
 
 
 def _session():

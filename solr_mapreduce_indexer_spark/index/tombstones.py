@@ -32,11 +32,12 @@ calls read only the overlapping row groups of the overlapping files.
 from __future__ import annotations
 
 import functools
-import os
 
 import numpy as np
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from ..fsutil import arrow_fs, data_files
 
 
 def write_tombstones(losers: DataFrame, path: str,
@@ -59,35 +60,6 @@ def write_tombstones(losers: DataFrame, path: str,
     return int(obs.get["n"])
 
 
-def _filesystem(path: str):
-    """(pyarrow FileSystem, path inside it) for a local path or a URI."""
-    import pyarrow.fs as pafs
-
-    from ..fsutil import has_scheme, local_path
-    path = local_path(path)  # Spark emits file:/… URIs pyarrow won't parse
-    if has_scheme(path):
-        return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), os.path.abspath(path)
-
-
-def _data_files(path: str, subdirs: list[str]) -> tuple[str, ...]:
-    """Sorted parquet data files directly under each existing `path/<sub>`
-    ("" = path itself) — a metadata-only listing. Missing directories are
-    skipped (a micro-shard without docs has no docmap directory), and so
-    are Spark's `_SUCCESS` / `.crc` side files."""
-    import pyarrow.fs as pafs
-    fs, base = _filesystem(path)
-    dirs = [f"{base.rstrip('/')}/{s}" if s else base for s in subdirs]
-    files = []
-    for d in fs.get_file_info(dirs):
-        if d.type == pafs.FileType.Directory:
-            listing = fs.get_file_info(pafs.FileSelector(d.path))
-            files += [f.path for f in listing
-                      if f.type == pafs.FileType.File
-                      and not f.base_name.startswith((".", "_"))]
-    return tuple(sorted(files))
-
-
 @functools.lru_cache(maxsize=8)
 def _load_range_cached(path: str, lo: int, hi: int, files: tuple[str, ...],
                        extra: tuple[str, ...] = ()) -> tuple[np.ndarray, ...]:
@@ -98,7 +70,7 @@ def _load_range_cached(path: str, lo: int, hi: int, files: tuple[str, ...],
     entry. Files are read one by one: for the few small files of one shard
     this took about half the time of a pyarrow.dataset scan."""
     import pyarrow.parquet as pq
-    fs = _filesystem(path)[0]
+    fs = arrow_fs(path)[0]
     columns = ["doc_id", *extra]
     parts: list[list[np.ndarray]] = [[] for _ in columns]
     for f in files:
@@ -139,7 +111,7 @@ def load_tombstones_range(path: str, lo_doc: int, hi_doc: int,
     collide and silently serve a stale set."""
     lo = (int(lo_doc) >> doc_bits) << doc_bits
     hi = (((int(hi_doc) >> doc_bits) + 1) << doc_bits) - 1
-    return _load_range_cached(path, lo, hi, _data_files(path, [""]))[0]
+    return _load_range_cached(path, lo, hi, data_files(path, [""]))[0]
 
 
 def load_doc_lens(docmap_path: str, first_docs: np.ndarray,
@@ -161,7 +133,7 @@ def load_doc_lens(docmap_path: str, first_docs: np.ndarray,
     micros = np.unique(np.concatenate(
         [lo_m] + [np.arange(lo_m[i], hi_m[i] + 1)
                   for i in np.flatnonzero(hi_m > lo_m)]))
-    files = _data_files(docmap_path, [f"shard_id={int(m)}" for m in micros])
+    files = data_files(docmap_path, [f"shard_id={int(m)}" for m in micros])
     lo = int(micros[0]) << doc_bits
     hi = ((int(micros[-1]) + 1) << doc_bits) - 1
     return _load_range_cached(docmap_path, lo, hi, files, ("doc_len",))

@@ -6,18 +6,19 @@ Semantics target (SURVEY §2.7): Lucene/Solr 7.7.2 BM25Similarity —
   score(q,d)  = Σ_t idf(t) * tfnorm(t,d)        (k1=1.2, b=0.75)
 AND = posting intersection, OR = union; ties break by ascending doc_id.
 
-Physical plan (default, Solr/ES fan-out shape): the batch runs as ONE stage
-of min(|shards|, defaultParallelism) tasks, each handed several shard ids.
-For each of its shards a task reads that shard's own hive partition of the
-served level directly — pyarrow with the batch's `term IN (...)` pushed
+Physical plan (Solr/ES fan-out shape; the only one): the batch runs as ONE
+stage of min(|shards|, defaultParallelism) tasks, each handed several shard
+ids. For each of its shards a task reads that shard's own hive partition of
+the served level directly — pyarrow with the batch's `term IN (...)` pushed
 down; segments are written sorted by term so row-group stats prune — and
 scores every query in the batch vectorized (numpy) in one kernel call,
 emitting per-(query, shard) top-k candidates; the driver ranks them into
-each query's global top-k. No shuffle touches payload bytes. A legacy plan
-(parquet scan stage → hash exchange → per-shard applyInPandas kernel)
-remains as the automatic fallback for storage only Spark's Hadoop conf can
-open. All float math is float64 with a fixed term-iteration order (sorted
-terms) so results are reproducible and oracle-comparable across both plans.
+each query's global top-k. No shuffle touches payload bytes. Every read
+outside the stage (df lookup, docmap map-back) is pyarrow too, through
+`fsutil.arrow_fs`; storage pyarrow cannot open raises on the driver at the
+df lookup, before any job (README "Storage access"). All float math is
+float64 with a fixed term-iteration order (sorted terms) so results are
+reproducible and oracle-comparable.
 
 Block-max pruning (SURVEY §2.7 Q5; Ding & Suel SIGIR'11, reference semantics
 from shaded Lucene's BlockMax WAND): every block stores max_tfnorm, so
@@ -54,9 +55,9 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import IndexConfig
+from ..fsutil import arrow_fs, data_files
 from ..index.codec import (bm25_tfnorm, decode_block, decode_positions,
                            tune_allocator)
 from ..index.manifest import read_manifest
@@ -113,23 +114,18 @@ def _lookup_dfs(spark: SparkSession, h: IndexHandle, terms: list[str]) -> dict[s
     written range-partitioned + sorted by term, so pyarrow's `term IN` filter
     prunes to the overlapping row groups; the read is bounded by |terms|, not
     corpus size, and skips a whole Spark job's scheduling latency per batch.
-    Falls back to the Spark read when pyarrow's filesystem stack can't open
-    the path (same credential split as the docmap point-fetch; README
-    "Storage access")."""
-    try:
-        import pyarrow.dataset as pads
-
-        from ..fsutil import local_path
-        tbl = (pads.dataset(local_path(h.term_stats_path), format="parquet")
-               .to_table(columns=["term", "df"],
-                         filter=pads.field("term").isin(terms)))
-        return {t: int(d) for t, d in
-                zip(tbl["term"].to_pylist(), tbl["df"].to_pylist())}
-    except Exception:
-        rows = (spark.read.parquet(h.term_stats_path)
-                .where(F.col("term").isin(terms))
-                .select("term", "df").collect())
-        return {r["term"]: int(r["df"]) for r in rows}
+    It is a batch's first storage read, so storage pyarrow cannot open
+    raises here, on the driver, before any Spark job launches."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+    fs, base = arrow_fs(h.term_stats_path)
+    # typed value set: an empty list would be a null array, which pyarrow
+    # refuses to compare with the string column
+    tbl = (pads.dataset(base, filesystem=fs, format="parquet")
+           .to_table(columns=["term", "df"], filter=pads.field("term").isin(
+               pa.array(terms, pa.string()))))
+    return {t: int(d) for t, d in
+            zip(tbl["term"].to_pylist(), tbl["df"].to_pylist())}
 
 
 # Decoded-block observability: incremented on every block-cache MISS inside
@@ -140,24 +136,12 @@ DECODE_STATS = {"blocks_decoded": 0, "pos_blocks_decoded": 0,
 
 _EPS = 1e-9  # absolute slack on bound-vs-theta comparisons (scores are O(10))
 
-DIRECT_FETCH = True
-"""When True (default), each scoring task reads its shards' hive partitions
-of the served postings level directly (pyarrow, term-IN pushdown, row-group
-pruning via the term-sorted file layout) — a Solr/ES shard reading its own
-segment files. The whole batch then runs as ONE stage with no exchange. The
-legacy plan (parquet scan stage → hash shuffle → per-shard kernel) moved
-every matching block's payload bytes through the shuffle — on positional
-indexes including pos_bytes for every term in the batch — which at 16M docs
-is GBs per Zipf-head batch and was the dominant poorly-scaling query cost.
-Falls back to the legacy plan when pyarrow's own filesystem stack can't see
-the postings path (same credential split as the docmap point-fetch; see
-README "Storage access")."""
-
 
 def _direct_fetch_gen(postings_path: str, present: list[str],
                       phrase_terms: list[str], score_fn):
     """mapInPandas generator: rows of shard ids → scored candidates, one
-    `score_fn(blocks, pos_fetch)` call per shard id.
+    `score_fn(blocks, pos_fetch)` call per shard id — a Solr/ES shard
+    reading its own segment files, so no exchange moves payload bytes.
 
     Reads ONLY the columns the kernel touches (term, doc range, max_tfnorm,
     doc and tf payloads); the kernel reads the shard's doc lengths from the
@@ -168,15 +152,15 @@ def _direct_fetch_gen(postings_path: str, present: list[str],
     `{(term, first_doc): pos_bytes}` from ONE scan (filter: OR over terms of
     `term == t AND first_doc IN (...)`, row-group pruned by the term-sorted
     layout) — a Zipf-head phrase term's non-candidate position payloads never
-    leave storage."""
+    leave storage. `pos_fetch` is None when the batch has no PHRASE term or
+    the shard holds no position payloads."""
     cols = ["term", "first_doc", "last_doc", "max_tfnorm",
             "doc_bytes", "tf_bytes"]
 
     def gen(pdfs):
         import pyarrow.dataset as pads
-
-        from ..fsutil import local_path
-        root = local_path(postings_path).rstrip("/")
+        fs, root = arrow_fs(postings_path)
+        root = root.rstrip("/")
         for pdf in pdfs:
             for sid in pdf["shard_id"].tolist():
                 # Each shard is read from ONLY its own partition directory: a
@@ -186,7 +170,7 @@ def _direct_fetch_gen(postings_path: str, present: list[str],
                 # come from the manifest, so the dir exists for every id
                 # handed to us.)
                 ds = pads.dataset(f"{root}/shard_id={int(sid)}",
-                                  format="parquet")
+                                  filesystem=fs, format="parquet")
                 blocks = ds.to_table(
                     columns=cols,
                     filter=pads.field("term").isin(present)).to_pandas()
@@ -212,17 +196,16 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
                         avgdl: float, k1: float, b: float, docmap_path: str,
                         tombstones_path: str | None = None,
                         doc_bits: int = 40):
-    """Kernel over one shard's blocks for the whole query batch. Input pdf:
-    term, first_doc, last_doc, max_tfnorm, doc_bytes, tf_bytes (other
-    columns are ignored), in any row order — a merged shard directory
-    yields its files' rows one file after another. Output: query_id, doc_id,
-    score (per-shard top-k candidates).
+    """Kernel over one shard's blocks for the whole query batch:
+    `score(pdf, pos_fetch=None)`, where `pdf` holds the shard's blocks
+    (term, first_doc, last_doc, max_tfnorm, doc_bytes, tf_bytes; other
+    columns are ignored) in any row order: a merged shard directory yields
+    its files' rows one file after another. Output: query_id, doc_id, score
+    (per-shard top-k candidates).
 
     BM25's doc lengths come from the docmap, read once per shard on the
     executor: the `docmap_path` directories of the micro-shards the blocks
-    cover (load_doc_lens, cached per process like tombstones). The legacy
-    plan ships them instead, as term-less rows with a `doc_len` column whose
-    `first_doc` is the doc id.
+    cover (load_doc_lens, cached per process like tombstones).
 
     Decode sharing is the key batch economics: blocks are cached per
     (term, block), so a term referenced by many queries (Zipf head) is
@@ -235,12 +218,11 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
     phase 1 (doc-level candidates) runs for every PHRASE query first, then
     `pos_fetch({term: [first_doc, ...]}) → {(term, first_doc): pos_bytes}`
     is called once with every candidate-overlapping block of every phrase
-    slot. Legacy input carries a pos_bytes column instead and is served
-    through the same contract. Phase 2 decodes positions lazily, slot by
-    slot, so DECODE_STATS["pos_blocks_fetched"] can exceed
-    "pos_blocks_decoded" — but only when a phrase's slot intersection
-    empties before its last slot, leaving the later slots' fetched blocks
-    undecoded.
+    slot; without a `pos_fetch` a PHRASE query with candidates raises.
+    Phase 2 decodes positions lazily, slot by slot, so
+    DECODE_STATS["pos_blocks_fetched"] can exceed "pos_blocks_decoded" —
+    but only when a phrase's slot intersection empties before its last
+    slot, leaving the later slots' fetched blocks undecoded.
 
     Tombstones (duplicate-key losers awaiting compaction) are read HERE, per
     shard: the kernel loads only its own doc-id slice of the tombstone
@@ -250,17 +232,7 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
     O(shard slice) per task."""
 
     def score(pdf: pd.DataFrame, pos_fetch=None) -> pd.DataFrame:
-        # pos_fetch: supplied by the direct-fetch plan; the legacy plan ships
-        # a pos_bytes column instead, served below through the same contract
         tune_allocator()
-        norms = None
-        if "doc_len" in pdf.columns:  # legacy plan: docmap rows ride along
-            is_norm = pdf["term"].isna().to_numpy()
-            nr = pdf[is_norm]
-            o = np.argsort(nr["first_doc"].to_numpy(), kind="stable")
-            norms = (nr["first_doc"].to_numpy(np.int64)[o],
-                     nr["doc_len"].to_numpy()[o].astype(np.int64))
-            pdf = pdf[~is_norm]
         # Rows sorted by (term, first_doc) once, then numpy slices per term:
         # row order is file order, and a shard directory may hold several
         # files, so the sort is needed.
@@ -272,9 +244,7 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
             pdf[c].to_numpy()[rows] for c in (
                 "first_doc", "last_doc", "max_tfnorm",
                 "doc_bytes", "tf_bytes"))
-        if norms is None and len(pdf):
-            norms = load_doc_lens(docmap_path, firsts_all, lasts_all,
-                                  doc_bits)
+        norms = load_doc_lens(docmap_path, firsts_all, lasts_all, doc_bits)
         tombstones = None
         if tombstones_path is not None and len(pdf):
             tombstones = load_tombstones_range(
@@ -282,16 +252,6 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
                 int(lasts_all.max()), doc_bits)
             if not len(tombstones):
                 tombstones = None
-        if "pos_bytes" in pdf.columns:
-            pb_all = pdf["pos_bytes"].to_numpy()[rows]
-
-            def pos_fetch(needs):
-                out = {}
-                for t, fds in needs.items():
-                    s, e = span[t]
-                    ix = s + np.searchsorted(firsts_all[s:e], fds)
-                    out.update(zip(((t, f) for f in fds), pb_all[ix]))
-                return out
         meta: dict[str, tuple] = {}
         block_cache: dict[tuple[str, int], tuple[np.ndarray, np.ndarray]] = {}
 
@@ -646,29 +606,12 @@ def run_queries(spark: SparkSession, h: IndexHandle,
     Returns (query_id, rank, doc_id, conv_id, turn_idx, score) with rank 1..k
     ordered by (score desc, doc_id asc).
 
-    A PHRASE query on an index built without positions raises ValueError on
-    the driver before any job starts. Each shard kernel emits at most k rows
-    per query, so the driver collects at most |shards| × Σk candidate rows;
-    a larger collect raises RuntimeError instead of ranking it."""
-    from ..session import ensure_shipped
-    ensure_shipped(spark)
-    cfg = h.cfg
-    if not cfg.positions and any(q.get("mode") == "PHRASE" for q in queries):
-        # fail fast on the driver: without this, the kernel's lazy position
-        # decode only raises when a phrase has doc-level candidates (a
-        # zero-candidate phrase would return 0 rows with no signal), and the
-        # executor-side ValueError reaches the caller wrapped in a
-        # PythonException after a doomed batch has already run.
-        raise ValueError("PHRASE queries require an index built with "
-                         "positions=True (IndexConfig.positions)")
-    all_terms = sorted({t.lower() for q in queries for t in q["terms"]})
-    dfs = _lookup_dfs(spark, h, all_terms)
-    idfs = {t: idf(h.n_docs, dfs.get(t, 0)) for t in all_terms}
-
-    # Tombstones (duplicate-key losers; compact purges them physically) are
-    # NOT loaded here: each shard kernel range-reads its own slice of the
-    # sorted tombstone parquet — nothing collision-count-sized ever touches
-    # the driver.
+    Bad input raises ValueError on the driver before any job starts: a mode
+    outside AND/OR/PHRASE, k < 1, a repeated query_id, or a PHRASE query on
+    an index built without positions. So does storage pyarrow cannot open
+    (at `_lookup_dfs`). Each shard kernel emits at most k rows per query, so
+    the driver collects at most |shards| × Σk candidate rows; a larger
+    collect raises RuntimeError instead of ranking it."""
     norm_queries = [{"query_id": int(q["query_id"]),
                      # PHRASE keeps the given order (and duplicate slots);
                      # AND/OR sort+dedup for reproducible float sums
@@ -677,10 +620,43 @@ def run_queries(spark: SparkSession, h: IndexHandle,
                                else sorted({t.lower() for t in q["terms"]})),
                      "mode": q.get("mode", "AND"),
                      "k": int(q.get("k", 10))} for q in queries]
+    # Checked before any job: the kernel scores any other mode as OR, k < 1
+    # would only trip the collect bound, and a repeated query_id would merge
+    # two queries into one ranking.
+    seen = set()
+    for q in norm_queries:
+        qid = q["query_id"]
+        if q["mode"] not in ("AND", "OR", "PHRASE"):
+            raise ValueError(f"query {qid}: mode {q['mode']!r} is not "
+                             "'AND', 'OR' or 'PHRASE'")
+        if q["k"] < 1:
+            raise ValueError(f"query {qid}: k must be >= 1, got {q['k']}")
+        if qid in seen:
+            raise ValueError(f"query_id {qid} appears more than once")
+        seen.add(qid)
+    cfg = h.cfg
+    if not cfg.positions and any(q["mode"] == "PHRASE" for q in norm_queries):
+        # fail fast on the driver: without this, the kernel's lazy position
+        # decode only raises when a phrase has doc-level candidates (a
+        # zero-candidate phrase would return 0 rows with no signal), and the
+        # executor-side ValueError reaches the caller wrapped in a
+        # PythonException after a doomed batch has already run.
+        raise ValueError("PHRASE queries require an index built with "
+                         "positions=True (IndexConfig.positions)")
+    from ..session import ensure_shipped
+    ensure_shipped(spark)
+    all_terms = sorted({t for q in norm_queries for t in q["terms"]})
+    dfs = _lookup_dfs(spark, h, all_terms)
+    idfs = {t: idf(h.n_docs, dfs.get(t, 0)) for t in all_terms}
     present = [t for t in all_terms if t in dfs]
-    if not present:
+    if not present or not h.shard_ids:
         return spark.createDataFrame([], _RESULT_SCHEMA)
 
+    # Tombstones (duplicate-key losers; compact purges them physically) are
+    # NOT loaded here: each shard kernel range-reads its own slice of the
+    # sorted tombstone parquet — nothing collision-count-sized ever touches
+    # the driver.
+    #
     # One kernel call per shard, like a Solr/ES fan-out, with the shards
     # packed into one wave of min(|shards|, defaultParallelism) tasks: every
     # Python task pays a fixed start-up cost. defaultParallelism is read
@@ -696,64 +672,15 @@ def run_queries(spark: SparkSession, h: IndexHandle,
                                  cfg.k1, cfg.b, h.docmap_path,
                                  tombstones_path=h.tombstones_path,
                                  doc_bits=cfg.doc_bits)
-    cand_schema = "query_id long, doc_id long, score double"
-    cand = None
-    if DIRECT_FETCH and h.shard_ids:
-        try:
-            import pyarrow.dataset as pads
-
-            from ..fsutil import local_path
-            # Driver-side probe: fails fast when pyarrow's filesystem/
-            # credential stack can't see the postings (kerberized HDFS,
-            # cluster-side-only S3A creds) — degrade to the legacy Spark
-            # scan, which reads through Spark's Hadoop conf.
-            pads.dataset(local_path(h.postings_path), format="parquet",
-                         partitioning="hive")
-        except Exception:
-            cand = None
-        else:
-            phrase_terms = sorted({t for q in norm_queries
-                                   if q["mode"] == "PHRASE"
-                                   for t in q["terms"] if t in dfs})
-            sc = spark.sparkContext
-            sdf = spark.createDataFrame(
-                sc.parallelize([(int(s),) for s in h.shard_ids],
-                               min(len(h.shard_ids), sc.defaultParallelism)),
-                "shard_id int")
-            cand = sdf.mapInPandas(
-                _direct_fetch_gen(h.postings_path, present, phrase_terms,
-                                  kernel),
-                schema=cand_schema)
-    if cand is None:
-        from ..index.build import DOCMAP_SCHEMA, POSTINGS_SCHEMA
-        blocks = (spark.read.schema(POSTINGS_SCHEMA).parquet(h.postings_path)
-                  .where(F.col("term").isin(present))
-                  .select("shard_id", "term", "first_doc", "last_doc",
-                          "max_tfnorm", "doc_bytes", "tf_bytes", "pos_bytes"))
-        # Each shard's doc lengths ride the same exchange as its blocks:
-        # docmap rows of the micro-shards (doc_id >> doc_bits) its fetched
-        # blocks cover, as term-less rows with first_doc = doc id. So the
-        # fallback reads the docmap through Spark too, never pyarrow.
-        micro = F.sequence(F.shiftright("first_doc", cfg.doc_bits),
-                           F.shiftright("last_doc", cfg.doc_bits))
-        covered = (blocks.select("shard_id", F.explode(micro).alias("micro"))
-                   .distinct())
-        norms = (spark.read.schema(DOCMAP_SCHEMA).parquet(h.docmap_path)
-                 .select(F.col("shard_id").cast("long").alias("micro"),
-                         F.col("doc_id").alias("first_doc"), "doc_len")
-                 .join(F.broadcast(covered), "micro")
-                 .select("shard_id", "first_doc",
-                         F.col("first_doc").alias("last_doc"), "doc_len"))
-        blocks = blocks.unionByName(norms, allowMissingColumns=True)
-
-        # single-arg wrapper: applyInPandas dispatches on parameter count,
-        # and the kernel's optional pos_fetch arg would make it look like
-        # the (key, pdf) form; the legacy plan ships pos_bytes in the pdf
-        def legacy_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return kernel(pdf)
-
-        cand = (blocks.groupBy("shard_id")
-                .applyInPandas(legacy_kernel, schema=cand_schema))
+    phrase_terms = sorted({t for q in norm_queries if q["mode"] == "PHRASE"
+                           for t in q["terms"] if t in dfs})
+    sc = spark.sparkContext
+    cand = spark.createDataFrame(
+        sc.parallelize([(int(s),) for s in h.shard_ids],
+                       min(len(h.shard_ids), sc.defaultParallelism)),
+        "shard_id int").mapInPandas(
+            _direct_fetch_gen(h.postings_path, present, phrase_terms, kernel),
+            schema="query_id long, doc_id long, score double")
 
     # Land the per-shard candidates driver-side (≤ |shards| × Σ k rows —
     # tiny by construction: the kernel emits at most k rows per query per
@@ -779,40 +706,24 @@ def run_queries(spark: SparkSession, h: IndexHandle,
         return spark.createDataFrame([], _RESULT_SCHEMA)
 
     # FETCH the ≤ Σ k docmap rows as coordinator point lookups (the Solr/ES
-    # stored-fields fetch phase): pyarrow.dataset prunes to the touched
-    # micro-shard partitions via the doc-id high bits (hive dirs) and to
-    # overlapping row groups via doc_id min/max stats — the same pruning
-    # works against HDFS/S3 through pyarrow's filesystems. An earlier
-    # implementation ran a Spark job that scanned every row of every hit
-    # shard partition and broadcast-joined the top-k set: measured per-batch
-    # cost grew from ~9s (4M docs) to ~44s (16M docs) — corpus-proportional,
-    # fatal at 10^12 docs. The point-fetch reads 2.5k rows of a 16M-doc
-    # docmap in 0.3-0.5s and is corpus-size-independent.
+    # stored-fields fetch phase): only the hit micro-shards' `shard_id=m`
+    # directories are listed (data_files, as load_doc_lens does — never a
+    # root-level discovery of all R), and row groups are pruned by doc_id
+    # min/max stats. An earlier implementation ran a Spark job that scanned
+    # every row of every hit shard partition and broadcast-joined the top-k
+    # set: measured per-batch cost grew from ~9s (4M docs) to ~44s (16M
+    # docs) — corpus-proportional, fatal at 10^12 docs. The point-fetch
+    # reads 2.5k rows of a 16M-doc docmap in 0.3-0.5s and is
+    # corpus-size-independent.
+    import pyarrow.dataset as pads
     ids = sorted(set(cpdf["doc_id"].astype(int).tolist()))
-    hit_shards = sorted({i >> cfg.doc_bits for i in ids})
-    try:
-        import pyarrow.dataset as pads
-
-        from ..fsutil import local_path
-        dm = (pads.dataset(local_path(h.docmap_path), format="parquet",
-                           partitioning="hive")
-              .to_table(columns=["doc_id", "conv_id", "turn_idx"],
-                        filter=(pads.field("shard_id").isin(hit_shards)
-                                & pads.field("doc_id").isin(ids)))
-              .to_pandas())
-    except Exception:
-        # pyarrow reads storage with ITS OWN filesystem/credential stack,
-        # not Spark's Hadoop conf — on kerberized HDFS or S3A with
-        # cluster-side-only credentials the point-fetch can fail even
-        # though every Spark read works. Degrade to the partition-pruned
-        # Spark read (slower: scheduling latency + row-group scan, still
-        # pruned to hit shards and pushed doc_id IN filter) instead of
-        # failing the batch. See README "Storage access" note.
-        dm = (spark.read.parquet(h.docmap_path)
-              .where(F.col("shard_id").isin([int(s) for s in hit_shards]))
-              .where(F.col("doc_id").isin([int(i) for i in ids]))
-              .select("doc_id", "conv_id", "turn_idx")
-              .toPandas())
+    files = data_files(h.docmap_path, sorted(
+        {f"shard_id={i >> cfg.doc_bits}" for i in ids}))
+    dm = (pads.dataset(list(files), filesystem=arrow_fs(h.docmap_path)[0],
+                       format="parquet")
+          .to_table(columns=["doc_id", "conv_id", "turn_idx"],
+                    filter=pads.field("doc_id").isin(ids))
+          .to_pandas())
     tk = pd.DataFrame({
         "query_id": cpdf["query_id"].to_numpy(np.int64),
         "rank": cpdf["rank"].to_numpy(np.int32),

@@ -110,18 +110,24 @@ def test_single_query_helper(spark, index, oracle):
     assert got["doc_id"].tolist() == want["doc_id"].tolist()
 
 
-def test_fetch_falls_back_to_spark_read(spark, index, oracle, monkeypatch):
-    """If the coordinator pyarrow point-fetch cannot see storage (auth lives
-    only in Spark's Hadoop conf on some clusters), run_queries must degrade
-    to the partition-pruned Spark docmap read, not fail the batch."""
-    import pyarrow.dataset as pads
+def test_map_back_lists_only_hit_shards(spark, index, oracle, monkeypatch):
+    """The docmap map-back lists only the `shard_id=m` directories of the
+    hit docs' micro-shards (the listing load_doc_lens uses), never a
+    root-level discovery of every directory, and returns the oracle's
+    rows."""
+    from solr_mapreduce_indexer_spark.query import bm25
+    listed = []
+    real = bm25.data_files
 
-    def boom(*a, **kw):
-        raise OSError("no credentials visible to pyarrow")
+    def recording(path, subdirs):
+        listed.append((path, list(subdirs)))
+        return real(path, subdirs)
 
-    monkeypatch.setattr(pads, "dataset", boom)
+    monkeypatch.setattr(bm25, "data_files", recording)
     q = [{"query_id": 7, "terms": [NEEDLES[1]], "mode": "AND", "k": 5}]
     got = run_queries(spark, index, q).toPandas().sort_values("rank")
     want = oracle.score([NEEDLES[1]], "AND", 5)
     assert got["doc_id"].tolist() == want["doc_id"].tolist()
     assert got["conv_id"].tolist() == want["conv_id"].tolist()
+    hit = sorted({f"shard_id={d >> index.cfg.doc_bits}" for d in got["doc_id"]})
+    assert listed == [(index.docmap_path, hit)]

@@ -1,17 +1,18 @@
-"""Direct per-shard postings reads (the default query plan) vs the legacy
-scan+shuffle plan: results must be identical row-for-row, including PHRASE
-queries on positional indexes, and the fallback must engage when pyarrow
-cannot open the postings path."""
+"""The query plan: per-shard direct postings reads in one stage of packed
+tasks. Results must equal the independent oracles (`PandasOracle` for
+AND/OR, `phrase_oracle` for PHRASE); a bad batch, or storage pyarrow cannot
+open, must raise on the driver before any Spark job launches."""
 
 from __future__ import annotations
 
 import pandas as pd
 import pytest
-from conftest import settled_job_ids
+from conftest import assert_batch_matches_oracle, settled_job_ids
 
 from solr_mapreduce_indexer_spark.config import IndexConfig
 from solr_mapreduce_indexer_spark.index.build import build_index
 from solr_mapreduce_indexer_spark.query import bm25
+from solr_mapreduce_indexer_spark.query.oracle import PandasOracle
 from solr_mapreduce_indexer_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
 TEXTS = [
@@ -36,13 +37,16 @@ BATCH = [
 ]
 
 
-@pytest.fixture(scope="module")
-def pos_index(spark, tmp_path_factory):
+def _texts_pdf():
     rows = [(f"c{i}", 0, "user", t, None, pd.Timestamp("2024-01-01"))
             for i, t in enumerate(TEXTS)]
-    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text",
-                                      "tool", "ts"])
-    df = spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA)
+    return pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text",
+                                       "tool", "ts"])
+
+
+@pytest.fixture(scope="module")
+def pos_index(spark, tmp_path_factory):
+    df = spark.createDataFrame(_texts_pdf(), schema=TRANSCRIPT_SCHEMA)
     d = str(tmp_path_factory.mktemp("idx_direct"))
     build_index(spark, df,
                 IndexConfig(shards=2, reducers=4, positions=True),
@@ -55,43 +59,78 @@ def _run(spark, h, batch=BATCH):
     return out.sort_values(["query_id", "rank"]).reset_index(drop=True)
 
 
-def test_direct_and_legacy_plans_identical(spark, pos_index, monkeypatch):
-    direct = _run(spark, pos_index)
-    assert len(direct)  # non-degenerate batch
-    monkeypatch.setattr(bm25, "DIRECT_FETCH", False)
-    legacy = _run(spark, pos_index)
-    pd.testing.assert_frame_equal(direct, legacy)
+def test_batch_matches_oracles(spark, pos_index):
+    got = _run(spark, pos_index)
+    assert len(got)  # non-degenerate batch
+    assert_batch_matches_oracle(
+        got, PandasOracle(_texts_pdf(), shards=1, partitions=1), BATCH)
 
 
 def test_handle_carries_served_level_shard_ids(pos_index):
     assert pos_index.shard_ids == (0, 1)
 
 
-def test_fallback_when_pyarrow_cannot_open(spark, pos_index, monkeypatch):
-    """Storage visible to Spark but not pyarrow (credential split): the
-    driver-side probe must fail fast and route the batch to the legacy
-    plan."""
-    import pyarrow.dataset as pads
+def _jobs_during(spark, fn):
+    """(Spark job ids launched while fn() runs, fn's result)."""
+    sc, group = spark.sparkContext, "jobs-during"
+    before = settled_job_ids(sc, group)
+    sc.setJobGroup(group, "counted jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return settled_job_ids(sc, group) - before, out
 
-    real = pads.dataset
+
+def test_pyarrow_open_error_raises_on_driver(spark, pos_index, monkeypatch):
+    """Storage visible to Spark but not pyarrow (credential split): the
+    error pyarrow raises surfaces from run_queries on the driver, at the df
+    lookup, with no Spark job launched — there is no Spark fallback."""
+    import pyarrow.dataset as pads
 
     def boom(*a, **kw):  # noqa: ANN002, ANN003
         raise OSError("no credentials for this filesystem")
 
     monkeypatch.setattr(pads, "dataset", boom)
-    try:
-        out = _run(spark, pos_index)
-    finally:
-        monkeypatch.setattr(pads, "dataset", real)
-    # the docmap point-fetch also falls back (to a Spark read), so the
-    # whole batch must still answer correctly
-    expect = _run(spark, pos_index)
-    pd.testing.assert_frame_equal(out, expect)
+
+    def run():
+        with pytest.raises(OSError, match="no credentials"):
+            bm25.run_queries(spark, pos_index, BATCH)
+    assert _jobs_during(spark, run)[0] == set()
+
+
+@pytest.mark.parametrize("bad", [
+    {"mode": "and"}, {"mode": "phrase"}, {"mode": "XOR"},
+    {"k": 0}, {"k": -3}, {"query_id": 0},
+], ids=["lower-and", "lower-phrase", "unknown-mode", "k0", "k-negative",
+        "duplicate-query-id"])
+def test_bad_batch_raises_before_any_job(spark, pos_index, bad):
+    """An unknown mode (the kernel would score it as OR), k < 1 (it would
+    only trip the collect bound) and a repeated query_id (two queries would
+    merge into one ranking) raise ValueError before any job launches."""
+    batch = [{"query_id": 0, "terms": ["quick"], "mode": "OR", "k": 3},
+             {"query_id": 2, "terms": ["quick", "brown"], "mode": "AND",
+              "k": 3, **{k: v for k, v in bad.items() if k != "query_id"}},
+             {"query_id": bad.get("query_id", 3), "terms": ["dog"],
+              "mode": "OR", "k": 2}]
+
+    def run():
+        with pytest.raises(ValueError, match="mode|k must|query_id"):
+            bm25.run_queries(spark, pos_index, batch)
+    assert _jobs_during(spark, run)[0] == set()
+
+
+def test_empty_terms_return_no_rows(spark, pos_index):
+    out = bm25.run_queries(spark, pos_index,
+                           [{"query_id": 0, "terms": [], "mode": "AND",
+                             "k": 3}])
+    assert out.count() == 0
 
 
 def test_direct_plan_has_no_shuffle_before_kernel(spark, pos_index):
-    """The candidate stage must be a single mapInPandas over the shard list:
-    no Exchange node below it (the legacy plan shuffles payload bytes)."""
+    """The candidate stage must be a single mapInPandas over the shard list,
+    with no Exchange node below it: no shuffle moves payload bytes."""
     qs = [{"query_id": 0, "terms": ["quick"], "mode": "OR", "k": 3}]
     from pyspark.sql import functions as F
 
@@ -133,10 +172,10 @@ def _synth_batch(pdf):
     ]
 
 
-def test_batch_runs_one_wave_of_packed_shards(spark, tmp_path, monkeypatch):
+def test_batch_runs_one_wave_of_packed_shards(spark, tmp_path):
     """An index with 8 served shards answers a batch with ONE candidate
     stage of min(8, defaultParallelism) tasks — several shards per task —
-    and the same rows as the legacy plan for AND, OR and PHRASE."""
+    and the oracles' top k for AND, OR and PHRASE."""
     from solr_mapreduce_indexer_spark.sources.transcripts import (
         synth_transcripts_pandas)
     pdf = synth_transcripts_pandas(n_convs=80, turns_per_conv=4, seed=5)
@@ -144,26 +183,19 @@ def test_batch_runs_one_wave_of_packed_shards(spark, tmp_path, monkeypatch):
                                 IndexConfig(shards=8, positions=True))
     assert len(h.shard_ids) == 8
     batch = _synth_batch(pdf)
-    sc, group = spark.sparkContext, "packed-query"
-    before = settled_job_ids(sc, group)
-    sc.setJobGroup(group, "packed query batch")
-    try:
-        res = bm25.run_queries(spark, h, batch)  # its result is local data
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    # run_queries' result is local data: its jobs all run inside the call
+    jobs, res = _jobs_during(spark, lambda: bm25.run_queries(spark, h, batch))
+    sc = spark.sparkContext
     tr = sc.statusTracker()
-    stages = [tr.getStageInfo(s) for j in sorted(settled_job_ids(sc, group)
-                                                 - before)
+    stages = [tr.getStageInfo(s) for j in sorted(jobs)
               for s in tr.getJobInfo(j).stageIds]
     assert [st.numTasks for st in stages] == [min(8, sc.defaultParallelism)]
 
-    direct = res.toPandas()
-    direct = direct.sort_values(["query_id", "rank"]).reset_index(drop=True)
-    assert set(direct["query_id"]) == {0, 1, 2, 3}
-    monkeypatch.setattr(bm25, "DIRECT_FETCH", False)
-    legacy = _run(spark, h, batch)
-    pd.testing.assert_frame_equal(direct, legacy)
+    got = res.toPandas()
+    got = got.sort_values(["query_id", "rank"]).reset_index(drop=True)
+    assert set(got["query_id"]) == {0, 1, 2, 3}
+    assert_batch_matches_oracle(got, PandasOracle(pdf, shards=1, partitions=1),
+                                batch)
 
 
 def test_merged_multi_file_shards_equal_union_build(spark, tmp_path):

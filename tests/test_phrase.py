@@ -9,12 +9,11 @@ BM25 (tf = phrase freq, weight = Σ idf of the phrase slots).
 from __future__ import annotations
 
 import math
-import re
 
 import numpy as np
 import pandas as pd
 import pytest
-from conftest import write_docmap
+from conftest import assert_batch_matches_oracle, phrase_oracle, write_docmap
 
 from solr_mapreduce_indexer_spark.config import IndexConfig
 from solr_mapreduce_indexer_spark.index.build import build_index
@@ -43,26 +42,6 @@ def _corpus(spark):
                                       "tool", "ts"])
     pdf["ts"] = pd.to_datetime(pdf["ts"])
     return spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA)
-
-
-def phrase_oracle(texts, phrase, k1=1.2, b=0.75):
-    """Per-doc (phrase_freq, dl) + BM25 phrase scores over the corpus."""
-    pat = re.compile("[a-z0-9]+")
-    toks = [pat.findall(t.lower()) for t in texts]
-    n = len(toks)
-    avgdl = sum(map(len, toks)) / n
-    dfs = {t: sum(1 for tk in toks if t in tk) for t in set(phrase)}
-    idf_sum = sum(math.log(1 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5))
-                  for t in phrase)
-    out = {}
-    for i, tk in enumerate(toks):
-        pf = sum(1 for j in range(len(tk) - len(phrase) + 1)
-                 if tk[j:j + len(phrase)] == phrase)
-        if pf:
-            dl = len(tk)
-            out[i] = idf_sum * pf * (k1 + 1) / (
-                pf + k1 * (1 - b + b * dl / avgdl))
-    return out
 
 
 def test_position_codec_roundtrip():
@@ -225,6 +204,24 @@ def zipf_positional(tmp_path_factory):
     return docs, pdf, idfs, doc_lens, avgdl, docmap
 
 
+@pytest.fixture(scope="module")
+def zipf_oracle(zipf_positional):
+    """PandasOracle over the zipf corpus: doc d is conversation f"c{d}"."""
+    from solr_mapreduce_indexer_spark.query.oracle import PandasOracle
+    docs = zipf_positional[0]
+    return PandasOracle(pd.DataFrame({
+        "conv_id": [f"c{d}" for d in range(len(docs))], "turn_idx": 0,
+        "text": [" ".join(t) for t in docs]}), shards=1, partitions=1)
+
+
+def _ranked(kernel_out):
+    """Kernel candidates (query_id, doc_id, score; rank order per query) as
+    run_queries-shaped rows keyed like zipf_oracle's docs."""
+    return kernel_out.assign(
+        rank=kernel_out.groupby("query_id").cumcount() + 1,
+        conv_id="c" + kernel_out["doc_id"].astype(str), turn_idx=0)
+
+
 def test_phrase_prunes_hot_term_blocks(zipf_positional):
     from solr_mapreduce_indexer_spark.query import bm25 as Q
     docs, pdf, idfs, doc_lens, avgdl, docmap = zipf_positional
@@ -233,7 +230,7 @@ def test_phrase_prunes_hot_term_blocks(zipf_positional):
     kern = Q._score_shard_kernel(
         [{"query_id": 0, "terms": ["rare", "hot"], "mode": "PHRASE",
           "k": 100}], idfs, avgdl, 1.2, 0.75, docmap)
-    res = kern(pdf)
+    res = kern(pdf, _table_fetcher(pdf))
     pos_decoded = Q.DECODE_STATS["pos_blocks_decoded"]
     postings_decoded = Q.DECODE_STATS["blocks_decoded"] - pos_decoded
     total = int(pdf.term.isin(["rare", "hot"]).sum())
@@ -273,25 +270,25 @@ def _table_fetcher(pdf, requested=None, calls=None):
 
 
 def test_phrase_position_payload_io_pruned(zipf_positional):
-    """Direct-plan shape: position payloads are READ (pos_fetch point-read),
-    not shipped up front — and only for candidate-overlapping blocks. The
-    hot term's non-candidate pos_bytes must never be requested from
-    storage, and results must equal the column-shipped path exactly."""
+    """Position payloads are READ (pos_fetch point-read), not shipped up
+    front — and only for candidate-overlapping blocks. The hot term's
+    non-candidate pos_bytes must never be requested from storage, and
+    results must equal the phrase oracle."""
     from solr_mapreduce_indexer_spark.query import bm25 as Q
     docs, pdf, idfs, doc_lens, avgdl, docmap = zipf_positional
     queries = [{"query_id": 0, "terms": ["rare", "hot"], "mode": "PHRASE",
                 "k": 100}]
 
-    # reference: legacy path with the pos_bytes column present
-    ref = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75, docmap)(pdf)
-
-    # direct-plan simulation: no pos_bytes column; a counting fetcher serves
-    # point-reads from the same table
+    # no pos_bytes column; a counting fetcher serves point-reads from the
+    # same table
     requested: dict[str, set] = {}
     Q.DECODE_STATS["pos_blocks_fetched"] = 0
     got = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75, docmap)(
         pdf.drop(columns=["pos_bytes"]), _table_fetcher(pdf, requested))
-    assert dict(zip(got.doc_id, got.score)) == dict(zip(ref.doc_id, ref.score))
+    want = phrase_oracle([" ".join(t) for t in docs], ["rare", "hot"])
+    assert set(got.doc_id) == set(want)
+    for d, sc in zip(got.doc_id, got.score):
+        assert sc == pytest.approx(want[d], rel=1e-12)
 
     n_hot = int((pdf["term"] == "hot").sum())
     assert "hot" in requested
@@ -336,10 +333,10 @@ def test_phrase_early_empty_fetches_undecoded_slot_blocks(zipf_positional):
     assert rows == 40 and fetched == decoded
 
 
-def test_phrase_batch_reads_positions_once(zipf_positional):
+def test_phrase_batch_reads_positions_once(zipf_positional, zipf_oracle):
     """Every PHRASE query's phase 1 runs before any position read, so a
     batch of several phrases calls the fetcher ONCE for the shard, and
-    equals the column-shipped path row for row."""
+    every query's top k equals the oracles'."""
     from solr_mapreduce_indexer_spark.query import bm25 as Q
     docs, pdf, idfs, doc_lens, avgdl, docmap = zipf_positional
     queries = [
@@ -349,11 +346,10 @@ def test_phrase_batch_reads_positions_once(zipf_positional):
          "k": 20},
         {"query_id": 3, "terms": ["f05", "hot"], "mode": "AND", "k": 10},
     ]
-    ref = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75, docmap)(pdf)
     calls: list = []
     got = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75, docmap)(
         pdf.drop(columns=["pos_bytes"]), _table_fetcher(pdf, calls=calls))
-    pd.testing.assert_frame_equal(got, ref)
+    assert_batch_matches_oracle(_ranked(got), zipf_oracle, queries)
     assert len(calls) == 1
     assert {"hot", "f01", "f02", "f03", "f04"} <= set(calls[0])
     for qid in (0, 1, 2):  # every phrase matched somewhere
@@ -363,7 +359,8 @@ def test_phrase_batch_reads_positions_once(zipf_positional):
 def test_direct_fetch_reads_positions_once_per_shard(pidx, spark):
     """The direct plan's generator hands each shard's kernel one pos_fetch;
     a batch of several PHRASE queries calls it at most once per shard, and
-    the per-shard candidates equal the legacy column-shipped kernel's."""
+    the per-shard candidates equal the kernel's on the whole shard table
+    served by an in-memory fetcher."""
     import pyarrow.dataset as pads
 
     from solr_mapreduce_indexer_spark.query import bm25 as Q
@@ -390,19 +387,20 @@ def test_direct_fetch_reads_positions_once_per_shard(pidx, spark):
         {"shard_id": list(h.shard_ids)})]))), ignore_index=True)
     assert len(calls) == len(h.shard_ids)
     assert all(c <= 1 for c in calls) and sum(calls) >= 1, calls
-    legacy = pd.concat([
-        kernel(pads.dataset(f"{h.postings_path}/shard_id={s}",
-                            format="parquet").to_table(
-            filter=pads.field("term").isin(terms)).to_pandas())
-        for s in h.shard_ids], ignore_index=True)
-    pd.testing.assert_frame_equal(got, legacy)
+    tables = [pads.dataset(f"{h.postings_path}/shard_id={s}",
+                           format="parquet").to_table(
+        filter=pads.field("term").isin(terms)).to_pandas()
+        for s in h.shard_ids]
+    want = pd.concat([kernel(t, _table_fetcher(t)) for t in tables],
+                     ignore_index=True)
+    pd.testing.assert_frame_equal(got, want)
     assert set(got["query_id"]) == {0, 1, 2, 3}
 
 
-def test_kernel_ignores_input_row_order(zipf_positional):
+def test_kernel_ignores_input_row_order(zipf_positional, zipf_oracle):
     """Rows of one shard arrive in file order, not (term, first_doc) order;
-    shuffled input must score identically, with the pos_bytes column and
-    with a fetcher."""
+    shuffled input must score identically, with or without the (ignored)
+    pos_bytes column, and equal the oracles."""
     from solr_mapreduce_indexer_spark.query import bm25 as Q
     docs, pdf, idfs, doc_lens, avgdl, docmap = zipf_positional
     queries = [
@@ -414,13 +412,12 @@ def test_kernel_ignores_input_row_order(zipf_positional):
     shuffled = pdf.sample(frac=1, random_state=0)
     assert not shuffled.index.equals(pdf.index)
     kern = Q._score_shard_kernel(queries, idfs, avgdl, 1.2, 0.75, docmap)
-    ref = kern(pdf)
+    ref = kern(pdf, _table_fetcher(pdf))
     assert set(ref["query_id"]) == {0, 1, 2}
-    pd.testing.assert_frame_equal(kern(shuffled), ref)
+    assert_batch_matches_oracle(_ranked(ref), zipf_oracle, queries)
+    pd.testing.assert_frame_equal(kern(shuffled, _table_fetcher(pdf)), ref)
     no_pos = shuffled.drop(columns=["pos_bytes"])
     pd.testing.assert_frame_equal(kern(no_pos, _table_fetcher(pdf)), ref)
-    pd.testing.assert_frame_equal(
-        kern(pdf.drop(columns=["pos_bytes"]), _table_fetcher(pdf)), ref)
 
 
 def test_phrase_position_overflow_fails_loudly(tmp_path):
@@ -442,8 +439,9 @@ def test_phrase_position_overflow_fails_loudly(tmp_path):
     kern = Q._score_shard_kernel(
         [{"query_id": 0, "terms": ["aa", "bb"], "mode": "PHRASE", "k": 10}],
         idfs, 50.0, 1.2, 0.75, docmap)
+    table = pd.DataFrame(rows)
     with pytest.raises(ValueError, match="2\\^32"):
-        kern(pd.DataFrame(rows))
+        kern(table, _table_fetcher(table))
 
 
 def test_phase1_ruled_out_blocks_never_pay_position_decode(tmp_path):
@@ -481,7 +479,7 @@ def test_phase1_ruled_out_blocks_never_pay_position_decode(tmp_path):
     kern = Q._score_shard_kernel(
         [{"query_id": 0, "terms": ["lead", "com"], "mode": "PHRASE",
           "k": 100}], idfs, avgdl, 1.2, 0.75, docmap)
-    res = kern(pdf)
+    res = kern(pdf, _table_fetcher(pdf))
     pos_decoded = Q.DECODE_STATS["pos_blocks_decoded"]
     all_decoded = Q.DECODE_STATS["blocks_decoded"]
     # candidates live in docs 0..88: <=2 lead blocks + <=4 com blocks
