@@ -78,6 +78,16 @@ def prepare_docs(df: DataFrame, cfg: IndexConfig, partitions: int,
     exchanges before: dedup by key, doc-id window by shard, postings
     repartition by shard).
 
+    Placement by id: that one exchange is `repartitionById(P, "shard_id")`,
+    P = min(partitions, spark.sql.shuffle.partitions), so micro-shard m
+    lands in partition m mod P and every partition holds ⌊R/P⌋ or ⌈R/P⌉ of
+    the R micro-shards (hash placement put R=16 ids into 10 of 16
+    partitions). The docmap write and the level-0 kernel then run P tasks,
+    each building its micro-shards one at a time: one Python worker per
+    task, not per micro-shard. P is the session's declared shuffle width,
+    not defaultParallelism, which under dynamic allocation counts only the
+    executors registered when the build is planned.
+
     micro_base shifts the micro-shard namespace (streaming generations:
     micro = gen*S + shard).
 
@@ -87,13 +97,15 @@ def prepare_docs(df: DataFrame, cfg: IndexConfig, partitions: int,
     expression, so each consumer derives tokens inline and streams them into
     its own aggregation."""
     route = routing_pandas_udf(cfg.shards, partitions)
+    width = min(partitions, int(df.sparkSession.conf.get(
+        "spark.sql.shuffle.partitions")))
     keyed = (df
              .withColumn("doc_key", F.concat_ws("#", F.col("conv_id"),
                                                 F.col("turn_idx").cast("string")))
              .withColumn("shard_id", route(F.col("doc_key"))))
 
     if cfg.conflict_resolver in ("retain_most_recent", "no_change"):
-        clustered = keyed.repartition(partitions, "shard_id")
+        clustered = keyed.repartitionById(width, "shard_id")
         if cfg.conflict_resolver == "retain_most_recent":
             # the same winner-first order as operators.dedup's
             # retain_most_recent, ties included
@@ -109,7 +121,7 @@ def prepare_docs(df: DataFrame, cfg: IndexConfig, partitions: int,
     else:
         resolver = RESOLVERS[cfg.conflict_resolver]
         clustered = resolver(keyed, order_by=cfg.order_by_field) \
-            .repartition(partitions, "shard_id")
+            .repartitionById(width, "shard_id")
 
     w = Window.partitionBy("shard_id").orderBy("conv_id", "turn_idx")
     micro = F.col("shard_id").cast("long") + F.lit(int(micro_base))
@@ -214,8 +226,8 @@ def _index_shard_mapper(cfg: IndexConfig, avgdl: float):
 
     def finish(shard: int, doc_ids: np.ndarray, texts) -> pd.DataFrame:
         # input-contract guard (cheap, vectorized): each micro-shard's rows
-        # must arrive in strictly increasing doc_id order — build_postings'
-        # pre_partitioned path relies on the upstream window's sort instead
+        # must arrive in strictly increasing doc_id order — build_postings
+        # relies on the upstream window's sort instead
         # of re-sorting, so a violated contract must fail loudly here, not
         # silently emit mis-ordered posting blocks
         if len(doc_ids) > 1 and not bool(np.all(np.diff(doc_ids) > 0)):
@@ -265,57 +277,41 @@ def _index_shard_mapper(cfg: IndexConfig, avgdl: float):
     return index_partition
 
 
-def build_postings(docs: DataFrame, cfg: IndexConfig, avgdl: float,
-                   partitions: int, pre_partitioned: bool = False) -> DataFrame:
-    """docs (shard_id, doc_id, …, text) → compressed posting-block rows.
+def build_postings(docs: DataFrame, cfg: IndexConfig,
+                   avgdl: float) -> DataFrame:
+    """prepare_docs output → compressed posting-block rows: raw text crosses
+    Arrow once and each micro-shard's index is built by a single fused
+    kernel (tokenize → tf → posting lists → blocks; see
+    _index_shard_mapper).
 
-    Co-locate each micro-shard's rows, sort by doc id, ship raw text over
-    Arrow, and build each shard's index in a single fused kernel (tokenize →
-    tf → posting lists → blocks; see _index_shard_mapper).
-
-    pre_partitioned=True skips BOTH the shuffle and the sort: the caller
-    guarantees docs are prepare_docs output — hash-clustered by shard_id
-    (its doc-id window established exactly that clustering, so
-    repartitioning again re-shuffled every text byte for an identical
-    distribution) AND already ordered (shard_id, conv_id, turn_idx) within
-    partitions by the same window's sort, which is doc_id order by
-    construction. SortExec can't prove the derived doc_id preserves that
-    ordering, so the explicit sort here re-sorted already-sorted data — one
-    wasted full in-memory pass per build at scale. The kernel guards the
-    contract: a non-monotonic doc_id run fails loudly (see
+    No shuffle and no sort: prepare_docs already placed each micro-shard in
+    one partition (by id) and ordered the rows (shard_id, conv_id,
+    turn_idx) with its doc-id window, which is doc_id order by
+    construction. SortExec cannot prove that the derived doc_id keeps that
+    order, so an explicit sort would re-sort sorted data. The kernel guards
+    the contract: a non-monotonic doc_id run fails loudly (see
     _index_shard_mapper) rather than silently mis-building postings."""
-    src = docs.select("shard_id", "doc_id", "text")
-    if not pre_partitioned:
-        src = (src.repartition(partitions, "shard_id")
-                  .sortWithinPartitions("shard_id", "doc_id"))
-    return src.mapInPandas(_index_shard_mapper(cfg, avgdl),
-                           schema=POSTINGS_SCHEMA)
+    return (docs.select("shard_id", "doc_id", "text")
+            .mapInPandas(_index_shard_mapper(cfg, avgdl),
+                         schema=POSTINGS_SCHEMA))
 
 
-def shard_payload_bytes(spark: SparkSession, segments_path: str) -> dict[int, int]:
-    """On-disk bytes per `shard_id=N` directory of a partitioned level — a
-    file listing, never a payload read."""
+def shard_payload_bytes(segments_path: str) -> dict[int, int]:
+    """On-disk bytes of the data files in each `shard_id=N` directory of a
+    partitioned level: one recursive listing through `fsutil.arrow_fs`, the
+    filesystem every read-side path uses, never a payload read."""
+    import pyarrow.fs as pafs
+    fs, base = fsutil.arrow_fs(segments_path)
+    base = base.rstrip("/")
     sizes: dict[int, int] = {}
-    if os.path.isdir(segments_path):
-        for entry in os.scandir(segments_path):
-            if entry.is_dir() and entry.name.startswith("shard_id="):
-                sid = int(entry.name.split("=", 1)[1])
-                sizes[sid] = sum(f.stat().st_size for f in os.scandir(entry.path)
-                                 if f.is_file() and not f.name.startswith("."))
-    else:
-        # non-local path (HDFS/S3 under spark-submit): Hadoop FileSystem
-        # listing — still metadata-only, never reads payload bytes
-        try:
-            jvm = spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(segments_path)
-            fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            for st in fs.listStatus(jpath):
-                name = st.getPath().getName()
-                if st.isDirectory() and name.startswith("shard_id="):
-                    sid = int(name.split("=", 1)[1])
-                    sizes[sid] = int(fs.getContentSummary(st.getPath()).getLength())
-        except Exception:  # noqa: BLE001 — metrics must never fail a build
-            pass
+    for f in fs.get_file_info(pafs.FileSelector(base, recursive=True,
+                                                allow_not_found=True)):
+        parts = f.path[len(base) + 1:].split("/")
+        if (f.type == pafs.FileType.File and len(parts) == 2
+                and parts[0].startswith("shard_id=")
+                and not f.base_name.startswith((".", "_"))):
+            sid = int(parts[0].split("=", 1)[1])
+            sizes[sid] = sizes.get(sid, 0) + f.size
     return sizes
 
 
@@ -335,7 +331,7 @@ def segment_metrics(spark: SparkSession, segments_path: str) -> list[dict]:
                        F.count(F.lit(1)).alias("n_blocks"),
                        F.sum("n").alias("n_postings"))
                   .collect(), key=lambda r: r["shard_id"])
-    sizes = shard_payload_bytes(spark, segments_path)
+    sizes = shard_payload_bytes(segments_path)
     return [r.asDict() | {"payload_bytes": sizes.get(r["shard_id"], -1)}
             for r in rows]
 
@@ -406,13 +402,13 @@ def build_index(spark: SparkSession, df: DataFrame, cfg: IndexConfig,
         # corpus stats ride the write job as Observation metrics instead of
         # a second full docmap scan: one fewer Spark job of
         # corpus-size-independent scheduling latency per build. prepare_docs
-        # already hash-clustered rows by shard_id (its doc-id window), so no
-        # repartition is needed before the partitionBy write — the old
-        # explicit repartition re-shuffled the docmap rows for an identical
-        # distribution. The CollectMetrics node therefore runs in the RESULT
-        # stage (downstream of prepare_docs' exchange — on re-runs from the
-        # populated cache the whole job IS one result stage), where Spark's
-        # exactly-once accumulator guarantee holds; in a shuffle-map stage, a
+        # already placed rows by shard_id and sorted them (its doc-id
+        # window), so the partitionBy write needs no repartition and no
+        # sort, and each of its tasks writes one file per micro-shard. The
+        # CollectMetrics node therefore runs in the RESULT stage (downstream
+        # of prepare_docs' exchange — on re-runs from the populated cache
+        # the whole job IS one result stage), where Spark's exactly-once
+        # accumulator guarantee holds; in a shuffle-map stage, a
         # fetch-failure retry or speculative task would double-count
         # n_docs/avgdl and silently skew BM25 idf on a real cluster.
         obs = Observation()
@@ -436,13 +432,15 @@ def build_index(spark: SparkSession, df: DataFrame, cfg: IndexConfig,
     # --- phase: level-0 posting segments ------------------------------------
     if not (resume and mf.read_checkpoint(index_dir, "level_0")):
         t0 = time.time()
-        postings = build_postings(get_docs(), cfg, stats["avgdl"], partitions,
-                                  pre_partitioned=True)
+        postings = build_postings(get_docs(), cfg, stats["avgdl"])
         # level 0 is rewritten by the merge tree when one exists — write it
         # with the cheap codec then; only a merge-less build serves from it
         l0_codec = (cfg.intermediate_compression if n_iters > 0
                     else cfg.compression)
-        (postings.sortWithinPartitions("term", "first_doc")
+        # shard_id leads the sort: a task writes several micro-shards, and
+        # with ("term", "first_doc") alone the partitioned writer re-sorts
+        # by shard_id and the optimizer drops the inner sort
+        (postings.sortWithinPartitions("shard_id", "term", "first_doc")
                  .write.mode("overwrite").option("compression", l0_codec)
                  .partitionBy("shard_id").parquet(level0_path))
         mf.write_checkpoint(index_dir, "level_0", {

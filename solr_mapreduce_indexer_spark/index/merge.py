@@ -156,7 +156,9 @@ def compact_level(spark: SparkSession, src_path: str, docmap_path: str,
 
     max_segments > 1 trades file count for write parallelism: each shard's
     rows are salted into max_segments groups by term hash (a term's blocks
-    stay within one file), so a shard is written by up to max_segments tasks."""
+    stay within one file), so a shard is written by up to max_segments tasks.
+    Rows are placed by id, (shard, salt) → partition shard·m + salt, so no
+    two shards share a task, and each file is sorted by (term, first_doc)."""
     src = spark.read.schema(POSTINGS_SCHEMA).parquet(src_path)
     dst = src_path.rstrip("/") + "_compact"
     m = max(1, int(cfg.max_segments))
@@ -164,12 +166,11 @@ def compact_level(spark: SparkSession, src_path: str, docmap_path: str,
            .applyInPandas(_compact_mapper(cfg, avgdl, docmap_path,
                                           tombstones_path),
                           schema=POSTINGS_SCHEMA))
-    if m == 1:
-        out = out.repartition(n_shards, "shard_id")
-    else:
-        out = out.repartition(n_shards * m, F.col("shard_id"),
-                              F.pmod(F.xxhash64("term"), F.lit(m)))
-    (out.sortWithinPartitions("term", "first_doc")
+    pid = F.col("shard_id")
+    if m > 1:
+        pid = pid * m + F.pmod(F.xxhash64("term"), F.lit(m)).cast("int")
+    (out.repartitionById(n_shards * m, pid)
+        .sortWithinPartitions("shard_id", "term", "first_doc")
         .write.mode("overwrite").option("compression", cfg.compression)
         .partitionBy("shard_id").parquet(dst))
     return dst
@@ -300,9 +301,9 @@ def concat_segments(spark: SparkSession,
     Exchange rule, from the inputs: each owns its micro-shards, so docmap
     rows are copied out by their scan tasks. Posting rows are repartitioned
     by shard_id only when two inputs share an output shard (stream
-    generations), giving one file per served shard; otherwise they are
-    copied out too, one or more files per shard, each sorted by
-    (term, first_doc). Writes docmap/, segments/<level_name>/, term_stats/
+    generations), placed by id (shard m in partition m mod |shards|), giving
+    one file per served shard; otherwise they are copied out too, one or
+    more files per shard, each sorted by (term, first_doc). Writes docmap/, segments/<level_name>/, term_stats/
     and tombstones/ under out_dir."""
     from functools import reduce
 
@@ -334,7 +335,7 @@ def concat_segments(spark: SparkSession,
     blocks = reduce(DataFrame.unionByName, parts).withColumn("max_tfnorm", bound)
     shards = set().union(*owned)
     if sum(map(len, owned)) > len(shards):
-        blocks = blocks.repartition(len(shards), "shard_id")
+        blocks = blocks.repartitionById(len(shards), "shard_id")
     (blocks.sortWithinPartitions("shard_id", "term", "first_doc")
      .write.mode("overwrite").option("compression", cfg.compression)
      .partitionBy("shard_id").parquet(level_path))
@@ -417,7 +418,7 @@ def merge_indexes(spark: SparkSession, input_dirs: list[str],
     n_terms, n_tombs = out["n_terms"], out["n_tombstones"]
 
     # --- segment metrics carried over, re-tagged; sizes from the listing ---
-    sizes = shard_payload_bytes(spark, out["level"])
+    sizes = shard_payload_bytes(out["level"])
     segments = []
     for m, soff in zip(manifests, shard_offsets):
         for seg in m["levels"][-1]["segments"]:

@@ -8,8 +8,9 @@ AND = posting intersection, OR = union; ties break by ascending doc_id.
 
 Physical plan (Solr/ES fan-out shape; the only one): the batch runs as ONE
 stage of min(|shards|, defaultParallelism) tasks, each handed several shard
-ids. For each of its shards a task reads that shard's own hive partition of
-the served level directly — pyarrow with the batch's `term IN (...)` pushed
+ids by a JVM-side range, so each task runs one Python worker. For each of
+its shards a task reads that shard's own hive partition of the served level
+directly — pyarrow with the batch's `term IN (...)` pushed
 down; segments are written sorted by term so row-group stats prune — and
 scores every query in the batch vectorized (numpy) in one kernel call,
 emitting per-(query, shard) top-k candidates; the driver ranks them into
@@ -592,8 +593,33 @@ def _score_shard_kernel(queries: list[dict], idfs: dict[str, float],
     return score
 
 
-_RESULT_SCHEMA = ("query_id long, rank int, doc_id long, conv_id string, "
-                  "turn_idx int, score double")
+def _result_df(spark: SparkSession, out: pd.DataFrame) -> DataFrame:
+    """A batch's ranked rows as a local relation (query_id long, rank int,
+    doc_id long, conv_id string, turn_idx int, score double). It goes
+    through pyarrow because pyspark turns an empty pandas frame into a
+    Python RDD, whose every read starts Python workers."""
+    import pyarrow as pa
+    schema = pa.schema([("query_id", pa.int64()), ("rank", pa.int32()),
+                        ("doc_id", pa.int64()), ("conv_id", pa.string()),
+                        ("turn_idx", pa.int32()), ("score", pa.float64())])
+    return spark.createDataFrame(pa.Table.from_pandas(
+        out.reindex(columns=schema.names), schema=schema,
+        preserve_index=False))
+
+
+def _shard_rows(spark: SparkSession, shard_ids) -> DataFrame:
+    """One `shard_id int` row per served shard, in min(|shards|,
+    defaultParallelism) partitions. The rows come from a JVM-side range
+    (row i → the i-th id), so a task's `mapInPandas` worker is its only
+    Python worker: a `createDataFrame(sc.parallelize(...))` source runs a
+    second, plain Python RDD worker in front of it in every task."""
+    from pyspark.sql import functions as F
+    n = len(shard_ids)
+    ids = F.array(*[F.lit(int(s)) for s in shard_ids])
+    return (spark.range(n, numPartitions=min(
+                n, spark.sparkContext.defaultParallelism))
+            .select(F.element_at(ids, (F.col("id") + 1).cast("int"))
+                    .alias("shard_id")))
 
 
 def run_queries(spark: SparkSession, h: IndexHandle,
@@ -607,33 +633,38 @@ def run_queries(spark: SparkSession, h: IndexHandle,
     ordered by (score desc, doc_id asc).
 
     Bad input raises ValueError on the driver before any job starts: a mode
-    outside AND/OR/PHRASE, k < 1, a repeated query_id, or a PHRASE query on
-    an index built without positions. So does storage pyarrow cannot open
-    (at `_lookup_dfs`). Each shard kernel emits at most k rows per query, so
-    the driver collects at most |shards| × Σk candidate rows; a larger
-    collect raises RuntimeError instead of ranking it."""
-    norm_queries = [{"query_id": int(q["query_id"]),
-                     # PHRASE keeps the given order (and duplicate slots);
-                     # AND/OR sort+dedup for reproducible float sums
-                     "terms": ([t.lower() for t in q["terms"]]
-                               if q.get("mode") == "PHRASE"
-                               else sorted({t.lower() for t in q["terms"]})),
-                     "mode": q.get("mode", "AND"),
-                     "k": int(q.get("k", 10))} for q in queries]
+    outside AND/OR/PHRASE, k < 1, a repeated query_id, terms that are not a
+    list or tuple of strings, or a PHRASE query on an index built without
+    positions. So does storage pyarrow cannot open (at `_lookup_dfs`). Each
+    shard kernel emits at most k rows per query, so the driver collects at
+    most |shards| × Σk candidate rows; a larger collect raises RuntimeError
+    instead of ranking it."""
     # Checked before any job: the kernel scores any other mode as OR, k < 1
-    # would only trip the collect bound, and a repeated query_id would merge
-    # two queries into one ranking.
-    seen = set()
-    for q in norm_queries:
-        qid = q["query_id"]
-        if q["mode"] not in ("AND", "OR", "PHRASE"):
-            raise ValueError(f"query {qid}: mode {q['mode']!r} is not "
+    # would only trip the collect bound, a repeated query_id would merge two
+    # queries into one ranking, and a string of terms would be scored
+    # letter by letter.
+    norm_queries, seen = [], set()
+    for q in queries:
+        qid, terms = int(q["query_id"]), q["terms"]
+        mode, k = q.get("mode", "AND"), int(q.get("k", 10))
+        if mode not in ("AND", "OR", "PHRASE"):
+            raise ValueError(f"query {qid}: mode {mode!r} is not "
                              "'AND', 'OR' or 'PHRASE'")
-        if q["k"] < 1:
-            raise ValueError(f"query {qid}: k must be >= 1, got {q['k']}")
+        if k < 1:
+            raise ValueError(f"query {qid}: k must be >= 1, got {k}")
         if qid in seen:
             raise ValueError(f"query_id {qid} appears more than once")
+        if (not isinstance(terms, (list, tuple))
+                or not all(isinstance(t, str) for t in terms)):
+            raise ValueError(f"query {qid}: terms must be a list or tuple "
+                             f"of strings, got {terms!r}")
         seen.add(qid)
+        norm_queries.append({
+            "query_id": qid, "mode": mode, "k": k,
+            # PHRASE keeps the given order (and duplicate slots); AND/OR
+            # sort+dedup for reproducible float sums
+            "terms": ([t.lower() for t in terms] if mode == "PHRASE"
+                      else sorted({t.lower() for t in terms}))})
     cfg = h.cfg
     if not cfg.positions and any(q["mode"] == "PHRASE" for q in norm_queries):
         # fail fast on the driver: without this, the kernel's lazy position
@@ -650,7 +681,7 @@ def run_queries(spark: SparkSession, h: IndexHandle,
     idfs = {t: idf(h.n_docs, dfs.get(t, 0)) for t in all_terms}
     present = [t for t in all_terms if t in dfs]
     if not present or not h.shard_ids:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
+        return _result_df(spark, pd.DataFrame())
 
     # Tombstones (duplicate-key losers; compact purges them physically) are
     # NOT loaded here: each shard kernel range-reads its own slice of the
@@ -674,13 +705,9 @@ def run_queries(spark: SparkSession, h: IndexHandle,
                                  doc_bits=cfg.doc_bits)
     phrase_terms = sorted({t for q in norm_queries if q["mode"] == "PHRASE"
                            for t in q["terms"] if t in dfs})
-    sc = spark.sparkContext
-    cand = spark.createDataFrame(
-        sc.parallelize([(int(s),) for s in h.shard_ids],
-                       min(len(h.shard_ids), sc.defaultParallelism)),
-        "shard_id int").mapInPandas(
-            _direct_fetch_gen(h.postings_path, present, phrase_terms, kernel),
-            schema="query_id long, doc_id long, score double")
+    cand = _shard_rows(spark, h.shard_ids).mapInPandas(
+        _direct_fetch_gen(h.postings_path, present, phrase_terms, kernel),
+        schema="query_id long, doc_id long, score double")
 
     # Land the per-shard candidates driver-side (≤ |shards| × Σ k rows —
     # tiny by construction: the kernel emits at most k rows per query per
@@ -703,7 +730,7 @@ def run_queries(spark: SparkSession, h: IndexHandle,
         cpdf["rank"] = cpdf.groupby("query_id").cumcount() + 1
         cpdf = cpdf[cpdf["rank"] <= cpdf["query_id"].map(ks)]
     if not len(cpdf):
-        return spark.createDataFrame([], _RESULT_SCHEMA)
+        return _result_df(spark, pd.DataFrame())
 
     # FETCH the ≤ Σ k docmap rows as coordinator point lookups (the Solr/ES
     # stored-fields fetch phase): only the hit micro-shards' `shard_id=m`
@@ -734,9 +761,7 @@ def run_queries(spark: SparkSession, h: IndexHandle,
     if out["conv_id"].isna().any():
         missing = out[out["conv_id"].isna()]["doc_id"].tolist()[:5]
         raise RuntimeError(f"scored doc ids missing from docmap: {missing}")
-    out = out[["query_id", "rank", "doc_id", "conv_id", "turn_idx", "score"]]
-    out["turn_idx"] = out["turn_idx"].astype(np.int32)
-    return spark.createDataFrame(out, _RESULT_SCHEMA)
+    return _result_df(spark, out)
 
 
 def bm25_topk(spark: SparkSession, h: IndexHandle, terms: list[str],

@@ -84,8 +84,8 @@ def append_batch(spark: SparkSession, df: DataFrame, cfg: IndexConfig,
     seg_path = os.path.join(index_dir, "segments", f"gen_{gen}")
 
     docs = _prepare_gen_docs(df, cfg, gen).persist()
-    # prepare_docs output is already hash-clustered by shard_id — write
-    # directly, no re-shuffle; the stats ride the write's result stage as
+    # prepare_docs output is already placed by shard_id — write directly,
+    # no re-shuffle; the stats ride the write's result stage as
     # Observation metrics (counted once, as in build_index)
     obs = Observation()
     (docmap_cols(docs, cfg)
@@ -103,9 +103,10 @@ def append_batch(spark: SparkSession, df: DataFrame, cfg: IndexConfig,
 
     avgdl_batch = total_tokens / n_docs  # encoding-time bound only; finalize
     # recomputes bounds from (max_tf, min_dl) with the global avgdl.
-    postings = build_postings(docs, cfg, avgdl_batch, cfg.shards,
-                              pre_partitioned=True)
-    (postings.sortWithinPartitions("term", "first_doc")
+    postings = build_postings(docs, cfg, avgdl_batch)
+    # shard_id first, as in build_index's level 0: a task may hold several
+    # shards, and the partitioned writer would otherwise drop the term sort
+    (postings.sortWithinPartitions("shard_id", "term", "first_doc")
              .write.mode("overwrite")
              .option("compression", cfg.intermediate_compression)
              .partitionBy("shard_id").parquet(seg_path))

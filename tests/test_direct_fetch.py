@@ -66,6 +66,31 @@ def test_batch_matches_oracles(spark, pos_index):
         got, PandasOracle(_texts_pdf(), shards=1, partitions=1), BATCH)
 
 
+def test_batch_runs_without_python_rdd(spark, pos_index, monkeypatch):
+    """The shard stage's rows come from a JVM-side range and the results
+    from a local relation: with `SparkContext.parallelize` raising, a batch
+    still matches the oracles and an empty result still reads as 0 rows.
+    A Python RDD source would run a second Python worker in every task."""
+    from pyspark import SparkContext
+
+    def boom(*a, **kw):  # noqa: ANN002, ANN003
+        raise AssertionError("SparkContext.parallelize called")
+
+    monkeypatch.setattr(SparkContext, "parallelize", boom)
+    got = _run(spark, pos_index)
+    assert len(got)
+    assert_batch_matches_oracle(
+        got, PandasOracle(_texts_pdf(), shards=1, partitions=1), BATCH)
+    for q in ({"query_id": 0, "terms": ["absentterm"], "mode": "OR", "k": 3},
+              {"query_id": 0, "terms": ["lazy", "cat"], "mode": "AND",
+               "k": 3}):
+        out = bm25.run_queries(spark, pos_index, [q])
+        assert out.count() == 0
+        assert out.schema.simpleString() == (
+            "struct<query_id:bigint,rank:int,doc_id:bigint,conv_id:string,"
+            "turn_idx:int,score:double>")
+
+
 def test_handle_carries_served_level_shard_ids(pos_index):
     assert pos_index.shard_ids == (0, 1)
 
@@ -103,12 +128,17 @@ def test_pyarrow_open_error_raises_on_driver(spark, pos_index, monkeypatch):
 @pytest.mark.parametrize("bad", [
     {"mode": "and"}, {"mode": "phrase"}, {"mode": "XOR"},
     {"k": 0}, {"k": -3}, {"query_id": 0},
+    {"terms": "quick brown"}, {"terms": "quick brown", "mode": "PHRASE"},
+    {"terms": ["quick", 3]}, {"terms": None},
 ], ids=["lower-and", "lower-phrase", "unknown-mode", "k0", "k-negative",
-        "duplicate-query-id"])
+        "duplicate-query-id", "string-terms", "string-phrase-terms",
+        "non-string-term", "none-terms"])
 def test_bad_batch_raises_before_any_job(spark, pos_index, bad):
     """An unknown mode (the kernel would score it as OR), k < 1 (it would
-    only trip the collect bound) and a repeated query_id (two queries would
-    merge into one ranking) raise ValueError before any job launches."""
+    only trip the collect bound), a repeated query_id (two queries would
+    merge into one ranking) and terms that are not a list or tuple of
+    strings (a string would be scored letter by letter) raise ValueError
+    before any job launches."""
     batch = [{"query_id": 0, "terms": ["quick"], "mode": "OR", "k": 3},
              {"query_id": 2, "terms": ["quick", "brown"], "mode": "AND",
               "k": 3, **{k: v for k, v in bad.items() if k != "query_id"}},
@@ -116,7 +146,7 @@ def test_bad_batch_raises_before_any_job(spark, pos_index, bad):
               "mode": "OR", "k": 2}]
 
     def run():
-        with pytest.raises(ValueError, match="mode|k must|query_id"):
+        with pytest.raises(ValueError, match="mode|k must|query_id|terms"):
             bm25.run_queries(spark, pos_index, batch)
     assert _jobs_during(spark, run)[0] == set()
 
@@ -132,19 +162,13 @@ def test_direct_plan_has_no_shuffle_before_kernel(spark, pos_index):
     """The candidate stage must be a single mapInPandas over the shard list,
     with no Exchange node below it: no shuffle moves payload bytes."""
     qs = [{"query_id": 0, "terms": ["quick"], "mode": "OR", "k": 3}]
-    from pyspark.sql import functions as F
-
     from solr_mapreduce_indexer_spark.query.bm25 import (_direct_fetch_gen,
                                                          _score_shard_kernel,
                                                          idf)
     kernel = _score_shard_kernel(qs, {"quick": idf(pos_index.n_docs, 5)},
                                  pos_index.avgdl, pos_index.cfg.k1,
                                  pos_index.cfg.b, pos_index.docmap_path)
-    sdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(int(s),) for s in pos_index.shard_ids],
-            len(pos_index.shard_ids)), "shard_id int")
-    cand = sdf.mapInPandas(
+    cand = bm25._shard_rows(spark, pos_index.shard_ids).mapInPandas(
         _direct_fetch_gen(pos_index.postings_path, ["quick"], [], kernel),
         schema="query_id long, doc_id long, score double")
     plan = cand._jdf.queryExecution().executedPlan().toString()

@@ -115,26 +115,27 @@ with open({prep_stats!r}) as fh:
 avgdl = stats["avgdl"]
 cfg = IndexConfig(shards={shards}, reducers={reducers}, fanout={fanout})
 
-# Reproduce EXACTLY what build_index's level-0 phase executes since round 6:
-# the fused kernel + partitioned write over docs that prepare_docs left
-# hash-clustered by micro-shard, sorted, and PERSISTED (the shuffle+sort
-# belong to the prepare/docmap phase and are measured there). The
-# clustering/sort/persist below is untimed setup replaying prepare_docs'
-# output state; the prepared artifact itself is staged on tmpfs by the
+# Reproduce EXACTLY what build_index's level-0 phase executes: the fused
+# kernel + partitioned write over docs that prepare_docs left placed by
+# micro-shard id (micro-shard m in partition m mod P, P = min(R, shuffle
+# partitions)), sorted, and PERSISTED (the shuffle+sort belong to the
+# prepare/docmap phase and are measured there). The placement/sort/persist
+# below is untimed setup replaying prepare_docs' output state; the prepared artifact itself is staged on tmpfs by the
 # parent (a cluster reads node-local data — this sandbox's single shared
 # disk is not a cluster property, the same argument BENCH.md makes for the
 # docmap phase).
+width = min({reducers}, int(spark.conf.get("spark.sql.shuffle.partitions")))
 prepared = (spark.read.parquet({prepared!r})
-            .repartition({reducers}, "shard_id")
+            .repartitionById(width, "shard_id")
             .sortWithinPartitions("shard_id", "doc_id")
             .persist())
 n = prepared.count()  # untimed: materialize the cache, as build_index does
 out_base = {idx!r}
 
 def level0_once(out_path):
-    postings = build_postings(prepared, cfg, avgdl, {reducers},
-                              pre_partitioned=True)
-    (postings.write.mode("overwrite").option("compression", "snappy")
+    postings = build_postings(prepared, cfg, avgdl)
+    (postings.sortWithinPartitions("shard_id", "term", "first_doc")
+             .write.mode("overwrite").option("compression", "snappy")
              .partitionBy("shard_id").parquet(out_path))
 
 # warm-up: one UNTIMED full-size pass. A 1/10 warm-up leaves the kernel's
