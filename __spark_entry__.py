@@ -64,7 +64,7 @@ def _entry_index(spark: SparkSession, sf_dir: str, positions: bool = False):
     suffix = "_pos" if positions else ""
     idx_dir = os.path.join(
         "/tmp",
-        f"smis_entry_idx_v5_{os.path.basename(key[0].rstrip('/'))}{suffix}")
+        f"smis_entry_idx_v6_{os.path.basename(key[0].rstrip('/'))}{suffix}")
     tr = transcripts_from_documents(spark, sf_dir)
     build_index(spark, tr, cfg, idx_dir, input_path=f"{sf_dir}/documents.parquet")
     h = load_index(idx_dir)

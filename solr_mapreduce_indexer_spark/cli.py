@@ -8,7 +8,8 @@ Parity with the reference's three executable tools:
   merge    — standalone IndexMergeTool (resume/extend the merge tree of an
              existing index dir), reference IndexMergeTool.java:48-177.
   compact  — forceMerge(maxSegments) analog: rewrite the final level so every
-             (shard, term) posting list uses full-size blocks,
+             (shard, term) posting list uses full-size blocks, purging
+             tombstones; a batch build's last merge level already does this,
              reference TreeMergeOutputFormat.java:170-183.
   query    — top-k BM25 over a built index (the query semantics the
              reference's output serves from Solr).
@@ -90,8 +91,7 @@ def cmd_merge(args) -> int:
 
     spark = _spark(args, "smis-merge")
     m = mf.read_manifest(args.index_dir)
-    cfg = IndexConfig(**{k: (tuple(v) if k == "stopwords" else v)
-                         for k, v in m["config"].items()})
+    cfg = IndexConfig.from_dict(m["config"])
     partitions, fanout, n_iters = cfg.plan_build_partitions()
     if n_iters == 0:
         print(json.dumps({"skipped": True, "reason": "R <= S, nothing to merge"}))

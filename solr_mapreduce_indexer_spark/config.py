@@ -8,7 +8,7 @@ thread pools) is delegated to Spark.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, fields
 
 
 @dataclass(frozen=True)
@@ -48,11 +48,6 @@ class IndexConfig:
                                    # (pom.xml:36-37). Off by default: ~1
                                    # byte/occurrence extra index size.
     doc_bits: int = 40             # doc_id = (shard_id << doc_bits) | local_idx
-    chunk_bits: int = 18           # retained for manifest compat; the fused
-                                   # per-shard index kernel (build.py
-                                   # _index_shard_mapper) bounds memory by
-                                   # micro-shard, so range-chunk salting of
-                                   # posting groups is no longer needed
 
     # --- BM25 (Lucene BM25Similarity defaults) ---
     k1: float = 1.2
@@ -82,8 +77,15 @@ class IndexConfig:
             raise ValueError("shards must be >= 1")
         if self.block_size < 1:
             raise ValueError("block_size must be >= 1")
-        if self.chunk_bits < 1 or self.chunk_bits > self.doc_bits:
-            raise ValueError("chunk_bits must be in [1, doc_bits]")
+
+    @classmethod
+    def from_dict(cls, d: dict) -> "IndexConfig":
+        """The config a manifest stores (JSON: tuples come back as lists).
+        Keys this version does not define are ignored, so a manifest
+        written with a since-retired knob still loads."""
+        known = {f.name for f in fields(cls)}
+        return cls(**{k: (tuple(v) if k == "stopwords" else v)
+                      for k, v in d.items() if k in known})
 
     # Reference invariant: R rounded up to S * F^N so the merge tree is uniform
     # (IndexTool.java:193-210). Returns (R, F, iterations).

@@ -24,6 +24,7 @@ an index path into a pyarrow filesystem (README "Storage access").
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import shutil
@@ -49,14 +50,30 @@ def local_path(path: str) -> str:
     return path
 
 
+@functools.lru_cache(maxsize=None)
+def _arrow_root(scheme: str, authority: str, query: str):
+    """(pyarrow FileSystem, path inside it) of a URI root, made once per
+    process: on ``hdfs://`` each new filesystem is a new connection."""
+    import pyarrow.fs as pafs
+    return pafs.FileSystem.from_uri(
+        f"{scheme}://{authority}/" + (f"?{query}" if query else ""))
+
+
 def arrow_fs(path: str):
     """(pyarrow FileSystem, path inside it) for a local path or a URI. A
-    scheme pyarrow has no filesystem for (e.g. ``s3a://``) raises here."""
+    scheme pyarrow has no filesystem for (e.g. ``s3a://``) raises here.
+    URIs under one scheme and authority share one filesystem; the path
+    inside it is the root's inner path joined with the URI's path."""
     import pyarrow.fs as pafs
+    from urllib.parse import urlsplit
     path = local_path(path)  # Spark emits file:/… URIs pyarrow won't parse
-    if has_scheme(path):
-        return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), os.path.abspath(path)
+    if not has_scheme(path):
+        return pafs.LocalFileSystem(), os.path.abspath(path)
+    u = urlsplit(path)
+    fs, inner = _arrow_root(u.scheme, u.netloc, u.query)
+    if inner and not inner.endswith("/"):
+        inner += "/"
+    return fs, inner + u.path.lstrip("/")
 
 
 def data_files(path: str, subdirs: list[str]) -> tuple[str, ...]:

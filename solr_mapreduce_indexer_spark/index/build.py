@@ -15,7 +15,9 @@ Spark-first restatement of the reference's five-phase MR pipeline
                a term's postings within one micro-shard are just an array
                slice (no collect_list groups), and shard sizes are uniform by
                murmur3 routing
-  mtree merge→ index/merge.py (block concat, addIndexes analog)
+  mtree merge→ index/merge.py (block concat, addIndexes analog; the last
+               level re-cuts each posting list into full blocks, the
+               forceMerge analog)
   go-live    → manifest commit (atomic JSON rename)
 
 Doc IDs are two-level exactly like Lucene's per-segment docBase:

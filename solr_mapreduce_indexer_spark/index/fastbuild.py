@@ -97,20 +97,70 @@ def _pack_for_groups(vals: np.ndarray, starts: np.ndarray,
     in_block = np.arange(len(vals), dtype=np.int64) - np.repeat(starts, lens)
     vbits = np.repeat(nbits, lens)
     vbase = vblock_base + in_block * vbits
-    # scatter per distinct width (few distinct values; one 2-D op each).
+    # scatter per distinct width, one bit plane at a time: scratch stays a
+    # few arrays of one value each, never a (values × width) matrix.
     # for_encode emits each value LSB-first, then packbits reads the stream
     # MSB-first per byte — reproduced here exactly by bit POSITION.
     for w in np.unique(nbits):
         sel = np.flatnonzero(vbits == w)
-        if not len(sel):
-            continue
-        v = vals[sel]
-        bits = ((v[:, None] >> np.arange(w, dtype=np.uint64)) & np.uint64(1))
-        pos = vbase[sel][:, None] + np.arange(w, dtype=np.int64)
-        bitarr[pos.ravel()] = bits.astype(np.uint8).ravel()
+        v, base = vals[sel], vbase[sel]
+        for k in range(int(w)):
+            bitarr[base + k] = (v >> np.uint64(k)) & np.uint64(1)
     # packbits is MSB-first within each byte, matching for_encode's ravel
     payload = np.packbits(bitarr.reshape(-1, 8), axis=1, bitorder="big")
     return payload.ravel(), offsets, nbits
+
+
+def _unpack_for_groups(buf: np.ndarray, bit_starts: np.ndarray,
+                       nbits: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Inverse of _pack_for_groups: the values of every block, concatenated
+    in block order. Block i holds lens[i] values of nbits[i] bits each from
+    bit bit_starts[i] of `buf` (each value LSB-first in a stream that
+    np.packbits wrote MSB-first per byte). Values are gathered per
+    distinct width one bit plane at a time, so scratch memory stays a few
+    arrays of one value each, never a (values × width) matrix."""
+    bits = np.unpackbits(buf)
+    n = int(lens.sum())
+    first = np.cumsum(lens) - lens
+    vbits = np.repeat(nbits, lens)
+    vbase = (np.repeat(bit_starts, lens)
+             + (np.arange(n, dtype=np.int64) - np.repeat(first, lens)) * vbits)
+    out = np.zeros(n, dtype=np.uint64)
+    for w in np.unique(nbits):
+        sel = np.flatnonzero(vbits == w)
+        base, v = vbase[sel], np.zeros(len(sel), dtype=np.uint64)
+        for k in range(int(w)):
+            v |= bits[base + k].astype(np.uint64) << np.uint64(k)
+        out[sel] = v
+    return out
+
+
+def decode_payloads_bulk(payloads) -> tuple[np.ndarray, np.ndarray]:
+    """(values, counts) of many tagged payloads: every payload's values
+    concatenated in order (uint64) and each payload's value count. FOR
+    (tag 1, 2-byte count) and FOR32 (tag 2, 4-byte count) payloads decode
+    in one pass grouped by bit width. If any payload is varint-tagged
+    (tag 0), each payload goes through codec.decode_values instead."""
+    payloads = list(payloads)
+    plen = np.fromiter(map(len, payloads), np.int64, len(payloads))
+    buf = np.frombuffer(b"".join(payloads), dtype=np.uint8)
+    start = np.cumsum(plen) - plen
+    tag = buf[start]
+    if (tag == 0).any():
+        from .codec import decode_values
+        parts = [decode_values(p) for p in payloads]
+        return (np.concatenate(parts),
+                np.fromiter(map(len, parts), np.int64, len(parts)))
+    wide = tag == 2
+    # count bytes; a short FOR payload at the buffer's end clips the two
+    # bytes only FOR32 reads
+    h = buf[np.minimum(start[:, None] + np.arange(2, 6), len(buf) - 1)
+            ].astype(np.int64)
+    count = h[:, 0] | (h[:, 1] << 8) | np.where(
+        wide, (h[:, 2] << 16) | (h[:, 3] << 24), 0)
+    return (_unpack_for_groups(buf, (start + np.where(wide, 6, 4)) * 8,
+                               buf[start + 1].astype(np.int64), count),
+            count)
 
 
 def encode_blocks_bulk(doc_ids: np.ndarray, tfs: np.ndarray,

@@ -4,11 +4,12 @@ Spark restatement of the reference's mapper-only merge jobs
 (IndexMergeTool.java:104-171, iteration count `:96-101`): each iteration maps
 micro-shard F-groups to one merged shard. Because our doc ids embed the
 micro-shard in the high bits and micro-shards of a root shard are contiguous
-(micro = root*(R/S) + offset, SolrCloudPartitioner.java:133-136), merging is a
-*metadata-level concat* exactly like Lucene IndexWriter.addIndexes
-(TreeMergeOutputFormat.java:141-158): posting blocks from sibling micro-shards
-have disjoint, ordered doc-id ranges, so the merged posting list is just the
-union of block rows — no decode, no rewrite, no shuffle beyond the re-tag.
+(micro = root*(R/S) + offset, SolrCloudPartitioner.java:133-136), an inner
+merge level is a *metadata-level concat* exactly like Lucene
+IndexWriter.addIndexes (TreeMergeOutputFormat.java:141-158): posting blocks
+from sibling micro-shards have disjoint, ordered doc-id ranges, so the
+merged posting list is just the union of block rows — no decode, no
+rewrite, no shuffle beyond the re-tag.
 
 concat_segments is the one concat of independently written segments:
 merge_indexes (the cross-index MergeIndexes analog, GoLiveTool.java:107-120)
@@ -18,9 +19,10 @@ exchange; posting rows are exchanged by shard_id only when two inputs share
 an output shard (stream generations), else copied out as well (merge_indexes
 gives every input its own output shards).
 
-Physical compaction (the forceMerge(maxSegments) analog,
-TreeMergeOutputFormat.java:170-183) optionally re-encodes each (shard, term)'s
-blocks into full-size blocks at the final level.
+The last tree-merge level and compaction (the forceMerge(maxSegments)
+analog, TreeMergeOutputFormat.java:170-183) share one kernel that re-cuts
+each (shard, term) posting list into full-size blocks, decoding and
+encoding many blocks per call (compact_level).
 """
 
 from __future__ import annotations
@@ -35,9 +37,8 @@ from pyspark.sql import functions as F
 from .. import fsutil
 from ..config import IndexConfig
 from . import manifest as mf
-from .build import (DOCMAP_SCHEMA, POSTINGS_SCHEMA, segment_metrics,
-                    shard_payload_bytes, write_term_stats)
-from .codec import decode_block, encode_blocks
+from .build import (DOCMAP_SCHEMA, POSTINGS_COLS, POSTINGS_SCHEMA,
+                    segment_metrics, shard_payload_bytes, write_term_stats)
 
 
 def level_path(index_dir: str, level: int) -> str:
@@ -45,132 +46,224 @@ def level_path(index_dir: str, level: int) -> str:
 
 
 def merge_level(spark: SparkSession, index_dir: str, level: int,
-                fanout: int, n_shards_in: int,
-                compression: str = "zstd",
+                fanout: int, n_shards_in: int, cfg: IndexConfig,
+                avgdl: float | None = None,
                 level_bytes: int | None = None) -> tuple[str, int]:
-    """One tree-merge iteration: level → level+1, shard_id //= fanout."""
-    src = spark.read.schema(POSTINGS_SCHEMA).parquet(level_path(index_dir, level))
+    """One tree-merge iteration: level → level+1, shard_id //= fanout.
+
+    An inner level (avgdl None) concatenates block rows. The final level
+    (avgdl given: the build's) re-blocks every (shard, term) posting list
+    into full block_size blocks with compact_level, in at most
+    cfg.max_segments term-sorted files per shard: what the reference serves
+    after its forceMerge (TreeMergeOutputFormat.java:170-183)."""
+    src = (spark.read.schema(POSTINGS_SCHEMA).parquet(level_path(index_dir, level))
+           .withColumn("shard_id", (F.col("shard_id") / fanout).cast("int")))
     n_out = -(-n_shards_in // fanout)
     dst_path = level_path(index_dir, level + 1)
+    if avgdl is not None:
+        compact_level(src, dst_path, os.path.join(index_dir, "docmap"), cfg,
+                      avgdl, n_out)
+        return dst_path, n_out
     # Sub-split each output shard by term so write parallelism isn't capped
     # at the (shrinking) shard count: a shard dir holds several term-hashed
-    # files, each internally sorted — readers sort blocks by first_doc anyway
-    # and a term's blocks stay within one file.
+    # files, each sorted by (term, first_doc) — a term's blocks stay within
+    # one file.
     n_tasks = max(n_out, 2 * spark.sparkContext.defaultParallelism)
     if level_bytes and level_bytes > 0:
         # Scale-adaptive task count: ~8 MB of source payload per merge task
         # amortizes task scheduling + writer-open overhead and keeps output
         # files from fragmenting (guide: derive partitioning from input size,
         # don't pin it to the local core count). Large levels still clamp UP
-        # to 2x parallelism; tiny levels collapse to n_out tasks — few files
-        # per shard dir, which also makes the query side's per-shard dataset
-        # open cheaper (a 12 MB sf0.1 level went 64 tasks -> 4, and 64 -> 4
-        # files per served shard dir).
+        # to 2x parallelism; tiny levels collapse to n_out tasks.
         n_tasks = max(n_out, min(n_tasks, -(-level_bytes // (8 << 20))))
-    (src.withColumn("shard_id",
-                    (F.col("shard_id") / fanout).cast("int"))
-        .repartition(n_tasks, "shard_id", "term")
-        .sortWithinPartitions("term", "first_doc")
-        .write.mode("overwrite").option("compression", compression)
+    # shard_id leads the sort, or the partitioned writer re-sorts by it and
+    # the optimizer drops the term order
+    (src.repartition(n_tasks, "shard_id", "term")
+        .sortWithinPartitions("shard_id", "term", "first_doc")
+        .write.mode("overwrite")
+        .option("compression", cfg.intermediate_compression)
         .partitionBy("shard_id").parquet(dst_path))
     return dst_path, n_out
 
 
-def _compact_mapper(cfg: IndexConfig, avgdl: float, docmap_path: str,
+# Postings per decode/encode call of the re-block kernel: bounds its scratch
+# memory whatever a shard's size (tune_allocator keeps worker heap resident,
+# and the same workers serve queries). At 2^14 a call's tracemalloc peak
+# stayed below the level-0 kernel's per-micro-shard peak on the same index.
+REBLOCK_BUDGET = 1 << 14
+
+
+def _reblock_mapper(cfg: IndexConfig, avgdl: float, docmap_path: str,
                     tombstones_path: str | None = None):
-    """applyInPandas kernel: all blocks of one (shard, term) → re-encoded
-    full-size blocks (decode + concat + encode). Exactness: doc/tf values
-    round-trip the codec; min_dl and max_tfnorm are recomputed from the
-    docmap's doc lengths (read once per shard per worker process, like the
-    tombstones) under the same avgdl.
-    Tombstoned docs are PURGED — the Lucene merge-applies-deletes lifecycle.
-    Each kernel reads only ITS OWN doc-id slice of the tombstone parquet
-    (row-group-pruned, cached per worker process per shard) — the tombstone
-    set never lands on the driver or in a broadcast."""
-    def compact(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .build import POSTINGS_COLS as _COLS
-        from .codec import decode_positions, encode_positions, tune_allocator
-        from .tombstones import (doc_lens_of, load_doc_lens,
-                                 load_tombstones_range)
+    """mapInPandas kernel: block rows sorted by (shard_id, term, first_doc)
+    → the same posting lists re-cut into full block_size blocks, in the same
+    order. Payloads are decoded and encoded in bulk, about REBLOCK_BUDGET
+    postings per call: calls cut at (shard, term) run boundaries; a longer run is cut
+    between block rows, and the decoded tail past its last full block is
+    carried into the next call (across Arrow batches too), so every list's
+    blocks start at multiples of block_size from its first posting whatever
+    the cuts. Doc lengths come from the docmap (load_doc_lens) for the
+    decoded docs; min_dl and max_tfnorm are recomputed under `avgdl`.
+    Tombstoned docs are purged, each call reading only its own doc-id slice
+    of the tombstones (the Lucene merge-applies-deletes lifecycle)."""
+    bs = cfg.block_size
+
+    def encode(d, t, run, keys, pos):
+        from .codec import encode_blocks, encode_positions
+        from .fastbuild import (_assemble_payload_bytes, _assemble_pos_bytes,
+                                encode_blocks_bulk)
+        from .tombstones import doc_lens_of, load_doc_lens
+        ln = doc_lens_of(*load_doc_lens(docmap_path, d, d, cfg.doc_bits), d)
+        ct = np.concatenate(([0], np.cumsum(t)))  # first token per posting
+        if cfg.posting_codec != "for":  # per-term codec.encode_blocks
+            rows = []
+            runs = np.flatnonzero(np.diff(run, prepend=-1, append=-1))
+            for s, e in zip(runs[:-1], runs[1:]):
+                blocks = encode_blocks(d[s:e], t[s:e], ln[s:e], avgdl, bs,
+                                       cfg.k1, cfg.b, cfg.posting_codec)
+                for lo, b in zip(range(s, e, bs), blocks):
+                    pb = (b"" if pos is None else encode_positions(
+                        pos[ct[lo]:ct[lo + b["n"]]], t[lo:lo + b["n"]]))
+                    rows.append((*keys[run[s]], *(b[c] for c in
+                                 POSTINGS_COLS[2:-1]), pb))
+            return pd.DataFrame(rows, columns=POSTINGS_COLS)
+        blk = encode_blocks_bulk(d, t, ln, run, avgdl, bs, cfg.k1, cfg.b,
+                                 pos_sorted=pos,
+                                 pstarts=ct[:-1] if pos is not None else None)
+        nb, codes = blk["n_blocks"], blk["term_code"]
+        return pd.DataFrame({
+            "shard_id": np.fromiter((keys[c][0] for c in codes), np.int32, nb),
+            "term": np.array([keys[c][1] for c in codes], dtype=object),
+            "first_doc": blk["first_doc"], "last_doc": blk["last_doc"],
+            "n": blk["n"], "max_tf": blk["max_tf"], "sum_tf": blk["sum_tf"],
+            "min_dl": blk["min_dl"], "max_tfnorm": blk["max_tfnorm"],
+            "doc_bytes": _assemble_payload_bytes(*blk["payloads"][0],
+                                                 blk["block_lens"]),
+            "tf_bytes": _assemble_payload_bytes(*blk["payloads"][1],
+                                                blk["block_lens"]),
+            "pos_bytes": (_assemble_pos_bytes(*blk["pos_payload"])
+                          if pos is not None else [b""] * nb),
+        }, columns=POSTINGS_COLS)
+
+    def reblock_call(rows: pd.DataFrame, carry, closed: bool):
+        """Decode `rows`, prepend the carried tail, encode; returns (block
+        rows, the decoded tail of the last run when it is not `closed`)."""
+        from .fastbuild import decode_payloads_bulk
+        from .tombstones import load_tombstones_range
+        sh = rows["shard_id"].to_numpy(np.int64)
+        tm = rows["term"].to_numpy(object)
+        new = np.ones(len(rows), dtype=bool)
+        new[1:] = (sh[1:] != sh[:-1]) | (tm[1:] != tm[:-1])
+        keys = [(int(a), b) for a, b in zip(sh[new], tm[new])]
+        deltas, n = decode_payloads_bulk(rows["doc_bytes"])
+        t = decode_payloads_bulk(rows["tf_bytes"])[0].astype(np.int64)
+        first = np.cumsum(n) - n
+        deltas = deltas.astype(np.int64)
+        deltas[first] = 0
+        cs = np.cumsum(deltas)
+        d = (cs - np.repeat(cs[first], n)
+             + np.repeat(rows["first_doc"].to_numpy(np.int64), n))
+        run = np.repeat(np.cumsum(new) - 1, n)
+        pos = None
+        pcol = [p or b"" for p in rows["pos_bytes"]]
+        if any(pcol):
+            pv = decode_payloads_bulk(pcol)[0].astype(np.int64)
+            ps = np.cumsum(t) - t
+            pc = np.cumsum(pv)
+            pos = pc - np.repeat(pc[ps] - pv[ps], t)  # absolute per posting
+        if tombstones_path is not None and len(d):
+            dead = load_tombstones_range(tombstones_path, int(d.min()),
+                                         int(d.max()), cfg.doc_bits)
+            if len(dead):
+                ix = np.minimum(np.searchsorted(dead, d), len(dead) - 1)
+                keep = dead[ix] != d
+                if pos is not None:
+                    pos = pos[np.repeat(keep, t)]
+                d, t, run = d[keep], t[keep], run[keep]
+        if carry is not None:
+            ck, cd, ct, cp = carry
+            if not keys or ck != keys[0]:
+                keys.insert(0, ck)
+                run = run + 1
+            d, t = np.concatenate((cd, d)), np.concatenate((ct, t))
+            run = np.concatenate((np.zeros(len(cd), np.int64), run))
+            if cp is not None:
+                pos = cp if pos is None else np.concatenate((cp, pos))
+        carry = None
+        if not closed and len(d):
+            # the last run continues: keep its tail past the last full block
+            last = np.flatnonzero(run == run[-1])[0]
+            cut = len(d) - (len(d) - last) % bs
+            if cut < len(d):
+                tc = int(t[:cut].sum())
+                carry = (keys[run[-1]], d[cut:], t[cut:],
+                         pos[tc:] if pos is not None else None)
+                if pos is not None:
+                    pos = pos[:tc]
+                d, t, run = d[:cut], t[:cut], run[:cut]
+        return (encode(d, t, run, keys, pos) if len(d) else None), carry
+
+    def reblock(batches):
+        from .codec import tune_allocator
         tune_allocator()
-        tombstones = None
-        if tombstones_path is not None and len(pdf):
-            tombstones = load_tombstones_range(
-                tombstones_path, int(pdf["first_doc"].min()),
-                int(pdf["last_doc"].max()), cfg.doc_bits)
-        pdf = pdf.sort_values("first_doc")
-        has_pos = "pos_bytes" in pdf.columns and any(
-            p is not None and len(p) for p in pdf["pos_bytes"])
-        docs, tfs, pflat = [], [], []
-        for r in pdf.itertuples(index=False):
-            d, t = decode_block(r.doc_bytes, r.tf_bytes, r.first_doc)
-            if has_pos:
-                pflat.append(decode_positions(r.pos_bytes, t)[0])
-            docs.append(d); tfs.append(t)
-        d = np.concatenate(docs); t = np.concatenate(tfs)
-        pp = np.concatenate(pflat) if has_pos else None
-        if tombstones is not None and len(tombstones):
-            pos = np.searchsorted(tombstones, d)
-            pos = np.clip(pos, 0, len(tombstones) - 1)
-            keep = tombstones[pos] != d
-            if has_pos:  # drop the purged postings' position runs too
-                pp = pp[np.repeat(keep, t)]
-            d, t = d[keep], t[keep]
-            if not len(d):
-                return pd.DataFrame(columns=_COLS)
-        # after the purge: a compacted docmap holds only live docs
-        ln = doc_lens_of(*load_doc_lens(docmap_path, pdf["first_doc"],
-                                        pdf["last_doc"], cfg.doc_bits), d)
-        shard = int(pdf["shard_id"].iloc[0]); term = pdf["term"].iloc[0]
-        ct = np.concatenate(([0], np.cumsum(t)))  # token offset per posting
-        # explicit column order — a partitioned-parquet read reorders input
-        # columns (partition col last), so pdf.columns must not be reused
-        rows = []
-        for bi, b in enumerate(encode_blocks(d, t, ln, avgdl, cfg.block_size,
-                                             cfg.k1, cfg.b,
-                                             cfg.posting_codec)):
-            s, e = bi * cfg.block_size, bi * cfg.block_size + b["n"]
-            pb = (encode_positions(pp[ct[s]:ct[e]], t[s:e])
-                  if has_pos else b"")
-            rows.append((shard, term, b["first_doc"], b["last_doc"], b["n"],
-                         b["max_tf"], b["sum_tf"], b["min_dl"],
-                         b["max_tfnorm"], b["doc_bytes"], b["tf_bytes"], pb))
-        return pd.DataFrame(rows, columns=_COLS)
+        budget, rows, carry = REBLOCK_BUDGET, None, None
+        for pdf in batches:
+            rows = pdf if rows is None else pd.concat([rows, pdf],
+                                                      ignore_index=True)
+            while int(rows["n"].sum()) >= budget:
+                n = rows["n"].to_numpy(np.int64)
+                before = np.cumsum(n) - n
+                sh, tm = rows["shard_id"].to_numpy(), rows["term"].to_numpy()
+                starts = np.flatnonzero((sh[1:] != sh[:-1])
+                                        | (tm[1:] != tm[:-1])) + 1
+                fit = starts[before[starts] <= budget]
+                # cut at the last run start that fits, else inside the
+                # first run once it holds the budget
+                cut = (int(fit[-1]) if len(fit)
+                       else int(np.searchsorted(before + n, budget)) + 1)
+                out, carry = reblock_call(rows.iloc[:cut], carry,
+                                          closed=bool(len(fit)))
+                rows = rows.iloc[cut:]
+                if out is not None:
+                    yield out
+        if rows is not None:
+            out = reblock_call(rows, carry, closed=True)[0]
+            if out is not None:
+                yield out
 
-    return compact
+    return reblock
 
 
-def compact_level(spark: SparkSession, src_path: str, docmap_path: str,
+def compact_level(src: DataFrame, dst: str, docmap_path: str,
                   cfg: IndexConfig, avgdl: float, n_shards: int,
                   tombstones_path: str | None = None) -> str:
-    """forceMerge(maxSegments) analog: rewrite a level so every (shard, term)
-    posting list uses full blocks (fragmentation from chunked encoding / tree
-    merge gone), leaving at most cfg.max_segments files per shard directory
-    (reference --max-segments, default 1,
-    MapReduceIndexerToolArgumentParser.java:269-283; BatchWriter.java:205-208).
+    """forceMerge(maxSegments) analog: write the block rows of `src` to
+    `dst` so every (shard, term) posting list uses full blocks, in at most
+    cfg.max_segments files per shard directory (reference --max-segments,
+    default 1, MapReduceIndexerToolArgumentParser.java:269-283;
+    BatchWriter.java:205-208). The build's final merge level and
+    compact_final both write through it.
 
-    `src_path` is the level's MANIFEST path, not a level number — merged
-    (`merged_0`) and stream-finalized (`stream_final`) indexes don't follow
-    the `level_N` naming, and deriving the path from the number read the
-    wrong (nonexistent) directory for them.
-
-    max_segments > 1 trades file count for write parallelism: each shard's
-    rows are salted into max_segments groups by term hash (a term's blocks
-    stay within one file), so a shard is written by up to max_segments tasks.
-    Rows are placed by id, (shard, salt) → partition shard·m + salt, so no
-    two shards share a task, and each file is sorted by (term, first_doc)."""
-    src = spark.read.schema(POSTINGS_SCHEMA).parquet(src_path)
-    dst = src_path.rstrip("/") + "_compact"
+    Rows are placed by id, (shard, salt) → partition shard·m + salt with
+    m = max_segments and salt = pmod(xxhash64(term), m), so a term's blocks
+    stay in one task, no two shards share a task, and a shard is written by
+    up to m tasks. Each task sorts by (shard_id, term, first_doc), runs the
+    re-block kernel (_reblock_mapper) and writes one file sorted by
+    (term, first_doc)."""
+    from ..session import ensure_shipped
+    ensure_shipped(src.sparkSession)  # the kernel's workers import us
     m = max(1, int(cfg.max_segments))
-    out = (src.groupBy("shard_id", "term")
-           .applyInPandas(_compact_mapper(cfg, avgdl, docmap_path,
-                                          tombstones_path),
-                          schema=POSTINGS_SCHEMA))
     pid = F.col("shard_id")
     if m > 1:
         pid = pid * m + F.pmod(F.xxhash64("term"), F.lit(m)).cast("int")
-    (out.repartitionById(n_shards * m, pid)
-        .sortWithinPartitions("shard_id", "term", "first_doc")
+    order = ("shard_id", "term", "first_doc")
+    (src.repartitionById(n_shards * m, pid)
+        .sortWithinPartitions(*order)
+        .mapInPandas(_reblock_mapper(cfg, avgdl, docmap_path,
+                                     tombstones_path),
+                     schema=POSTINGS_SCHEMA)
+        # the kernel keeps the order, but the writer cannot know it
+        .sortWithinPartitions(*order)
         .write.mode("overwrite").option("compression", cfg.compression)
         .partitionBy("shard_id").parquet(dst))
     return dst
@@ -203,6 +296,7 @@ def merge_to_target(spark: SparkSession, index_dir: str, cfg: IndexConfig,
     (IndexMergeTool.java:68-78)."""
     levels: list[dict] = []
     cur = partitions
+    avgdl = float(mf.read_checkpoint(index_dir, "docmap")["stats"]["avgdl"])
     prev_segments = (mf.read_checkpoint(index_dir, "level_0") or {}).get("segments", [])
     for it in range(1, n_iters + 1):
         phase = f"level_{it}"
@@ -210,14 +304,11 @@ def merge_to_target(spark: SparkSession, index_dir: str, cfg: IndexConfig,
         if ck is None:
             import time
             t0 = time.time()
-            # inner levels are rewritten by the next iteration — cheap codec;
-            # the final level (served forever) gets the dense one
-            codec = (cfg.compression if it == n_iters
-                     else cfg.intermediate_compression)
             known = [int(s.get("payload_bytes", -1)) for s in prev_segments]
             lvl_bytes = sum(b for b in known if b > 0) if known else None
-            path, cur = merge_level(spark, index_dir, it - 1, fanout, cur,
-                                    compression=codec, level_bytes=lvl_bytes)
+            path, cur = merge_level(
+                spark, index_dir, it - 1, fanout, cur, cfg,
+                avgdl=avgdl if it == n_iters else None, level_bytes=lvl_bytes)
             segs = (segment_metrics(spark, path) if it == n_iters
                     else rollup_metrics(prev_segments, fanout))
             mf.write_checkpoint(index_dir, phase, {
@@ -372,9 +463,7 @@ def merge_indexes(spark: SparkSession, input_dirs: list[str],
 
     assert len(input_dirs) >= 1
     manifests = [mf.read_manifest(d) for d in input_dirs]
-    cfgs = [IndexConfig(**{k: (tuple(v) if k == "stopwords" else v)
-                           for k, v in m["config"].items()})
-            for m in manifests]
+    cfgs = [IndexConfig.from_dict(m["config"]) for m in manifests]
     base = cfgs[0]
     for c in cfgs[1:]:
         if (c.token_pattern, c.k1, c.b, c.doc_bits, c.min_token_len,
@@ -465,8 +554,7 @@ def compact_final(spark: SparkSession, index_dir: str,
     import dataclasses
 
     m = mf.read_manifest(index_dir)
-    cfg = IndexConfig(**{k: (tuple(v) if k == "stopwords" else v)
-                         for k, v in m["config"].items()})
+    cfg = IndexConfig.from_dict(m["config"])
     if max_segments is not None:
         cfg = dataclasses.replace(cfg, max_segments=int(max_segments))
     final = m["levels"][-1]
@@ -478,7 +566,7 @@ def compact_final(spark: SparkSession, index_dir: str,
     if tombs_path:
         # live docmap first: stats for the purged index come from it.
         # Everything here is in-plan (anti-join) or kernel-side (range-pruned
-        # parquet reads inside _compact_mapper) — the tombstone set is never
+        # parquet reads inside _reblock_mapper) — the tombstone set is never
         # materialized on the driver, so compacting two heavily-overlapping
         # merged generations stays O(slice) per task at any collision count.
         docmap_path = os.path.join(index_dir, "docmap")
@@ -499,7 +587,8 @@ def compact_final(spark: SparkSession, index_dir: str,
                  "avgdl": float(agg["avgdl"] or 0.0),
                  "total_tokens": int(agg["tt"])}
 
-    path = compact_level(spark, final["path"],
+    path = compact_level(spark.read.schema(POSTINGS_SCHEMA).parquet(final["path"]),
+                         final["path"].rstrip("/") + "_compact",
                          os.path.join(index_dir, "docmap"), cfg,
                          float(stats["avgdl"]), int(final["n_shards"]),
                          tombstones_path=tombs_path)

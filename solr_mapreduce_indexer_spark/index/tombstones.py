@@ -129,7 +129,7 @@ def load_doc_lens(docmap_path: str, first_docs: np.ndarray,
     if not len(lo_m):
         return np.empty(0, np.int64), np.empty(0, np.int64)
     # micro-shards covered by the block ranges; level-0 blocks never span
-    # two, compacted ones may
+    # two, the full blocks of a served or compacted level may
     micros = np.unique(np.concatenate(
         [lo_m] + [np.arange(lo_m[i], hi_m[i] + 1)
                   for i in np.flatnonzero(hi_m > lo_m)]))

@@ -138,8 +138,7 @@ def validate_index(spark: SparkSession, index_dir: str,
     ensure_shipped(spark)
 
     m = read_manifest(index_dir)
-    cfg = IndexConfig(**{k: (tuple(v) if k == "stopwords" else v)
-                         for k, v in m["config"].items()})
+    cfg = IndexConfig.from_dict(m["config"])
     avgdl = float(m["stats"]["avgdl"])
     final = m["levels"][-1]["path"]
 

@@ -81,8 +81,7 @@ class IndexHandle:
 
 def load_index(index_dir: str) -> IndexHandle:
     m = read_manifest(index_dir)
-    cfg = IndexConfig(**{k: (tuple(v) if k == "stopwords" else v)
-                         for k, v in m["config"].items()})
+    cfg = IndexConfig.from_dict(m["config"])
     final = m["levels"][-1]
     tombs = m.get("tombstones")
     # The served level's shard ids come from the manifest, NOT cfg.shards:

@@ -43,6 +43,21 @@ def ensure_shipped(spark: SparkSession) -> None:
     _SHIPPED.add(key)
 
 
+def default_shuffle_partitions(master: str, cpus: int) -> int:
+    """Shuffle partitions for a master URL, one per core: local[N] and
+    local[N,F] (F = task retries) → N, local[*] → cpus,
+    local-cluster[n,cores,mem] → n·cores. A cluster master has no core
+    count in its URL, so it gets cpus; set it explicitly there (rule of
+    thumb: >= 4x cores, mirroring the reference's 8x-slots
+    over-decomposition, MorphlineEnabledIndexerTool.java:65-67)."""
+    if "[" not in master:
+        return cpus
+    args = master[master.find("[") + 1:master.find("]")].split(",")
+    if master.startswith("local-cluster"):
+        return int(args[0]) * int(args[1])
+    return cpus if args[0] == "*" else int(args[0])
+
+
 def get_spark(app: str = "solr_mapreduce_indexer_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
@@ -51,15 +66,7 @@ def get_spark(app: str = "solr_mapreduce_indexer_spark",
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        # local[N] → N; cluster → caller sets it (rule of thumb: >= 4x cores,
-        # mirroring the reference's 8x-slots over-decomposition,
-        # MorphlineEnabledIndexerTool.java:65-67)
-        n = master[master.find("[") + 1:master.find("]")] if "[" in master else str(cpus)
-        try:
-            shuffle_partitions = cpus if n == "*" else int(n)
-        except ValueError:  # local-cluster[n,cores,mem] → n*cores
-            parts = n.split(",")
-            shuffle_partitions = int(parts[0]) * int(parts[1])
+        shuffle_partitions = default_shuffle_partitions(master, cpus)
     b = (SparkSession.builder
          .master(master)
          .appName(app)

@@ -226,7 +226,9 @@ def test_merged_multi_file_shards_equal_union_build(spark, tmp_path):
     """A merge_indexes result serves shard directories holding several
     files, whose rows reach the kernel in file order rather than
     (term, first_doc) order; a PHRASE + AND batch on it must equal the
-    union build's."""
+    union build's. The inputs serve max_segments=2 files per shard (a
+    build's last merge level writes at most max_segments), which the
+    merge copies."""
     import glob
 
     from solr_mapreduce_indexer_spark.index.merge import merge_indexes
@@ -235,7 +237,8 @@ def test_merged_multi_file_shards_equal_union_build(spark, tmp_path):
     pdf_a = synth_transcripts_pandas(n_convs=60, turns_per_conv=4, seed=1)
     pdf_b = synth_transcripts_pandas(n_convs=50, turns_per_conv=4, seed=2)
     pdf_b["conv_id"] = "b" + pdf_b["conv_id"]  # disjoint keys
-    cfg = IndexConfig(shards=2, reducers=4, fanout=2, positions=True)
+    cfg = IndexConfig(shards=2, reducers=4, fanout=2, positions=True,
+                      max_segments=2)
     ia, ib = str(tmp_path / "a"), str(tmp_path / "b")
     _positional_synth_index(spark, ia, pdf_a, cfg)
     _positional_synth_index(spark, ib, pdf_b, cfg)

@@ -31,6 +31,23 @@ def test_scheme_detection_and_local_path():
     assert fsutil.local_path("/tmp/x") == "/tmp/x"
 
 
+def test_arrow_fs_cached_per_root(tmp_path):
+    """URIs under one scheme and authority share one pyarrow filesystem
+    (on hdfs:// each new one is a new connection), with the same inner
+    paths pyarrow's own URI parsing gives; local paths still map to a
+    local filesystem and their absolute path."""
+    import pyarrow.fs as pafs
+    a_fs, a = fsutil.arrow_fs("mock:///idx/segments/level_1")
+    b_fs, b = fsutil.arrow_fs("mock:///idx/docmap")
+    assert a_fs is b_fs
+    assert a == pafs.FileSystem.from_uri("mock:///idx/segments/level_1")[1]
+    assert b == pafs.FileSystem.from_uri("mock:///idx/docmap")[1]
+    fs, p = fsutil.arrow_fs(str(tmp_path / "idx"))
+    assert isinstance(fs, pafs.LocalFileSystem)
+    assert p == os.path.abspath(str(tmp_path / "idx"))
+    assert fsutil.arrow_fs(f"file:{tmp_path}/idx")[1] == p
+
+
 def test_hadoop_primitives_roundtrip(spark, tmp_path):
     base = f"file:{tmp_path}/fs"
     fsutil.mkdirs(base + "/d1")

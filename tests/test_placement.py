@@ -159,6 +159,19 @@ def test_posting_files_sorted_one_per_shard(spark, corpus, packed_build,
     assert_sorted_layout(m["levels"][-1]["path"], R16.shards)
 
 
+def test_merge_levels_sorted(spark, corpus, tmp_path):
+    """A two-level tree (S=2, R=8, F=2): every file of the inner level 1
+    and of the served level 2 is sorted by (term, first_doc); the served
+    level holds one file per shard (max_segments=1)."""
+    _, df = corpus
+    cfg = IndexConfig(shards=2, reducers=8, fanout=2)
+    m = build.build_index(spark, df, cfg, str(tmp_path / "idx"),
+                          input_path="synthetic")
+    assert [lv["n_shards"] for lv in m["levels"]] == [8, 4, 2]
+    assert_sorted_layout(m["levels"][1]["path"], 4, max_files=64)
+    assert_sorted_layout(m["levels"][2]["path"], 2, max_files=1)
+
+
 def test_compaction_salted_segments_sorted(spark, corpus, tmp_path):
     """max_segments=2 places (shard, term-hash salt) by id: at most two
     files per shard directory, each sorted by (term, first_doc)."""
